@@ -140,21 +140,9 @@ def main() -> None:
         # a noisy first-execution loop).  A small thread pool overlaps
         # them; actions are thread-safe and job descriptions are
         # thread-local.  Timed loops below are UNCHANGED — still
-        # sequential, solo, median-of-N.
-        #
-        # Several streaming runners set-then-restore session confs
-        # (shuffle partitions for state sizing, the state-store
-        # provider); interleaved restores can persist a neighbor's
-        # temporary value, so the volatile confs are snapshotted here
-        # and pinned back after the pool drains — warmup plans may see a
-        # neighbor's transient value (harmless: results are discarded),
-        # the timed loops never do.
-        _VOLATILE_CONFS = (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.streaming.stateStore.providerClass",
-            "spark.sql.streaming.stopTimeout",
-        )
-        _saved_confs = {k: spark.conf.get(k, None) for k in _VOLATILE_CONFS}
+        # sequential, solo, median-of-N.  The streaming runners scope
+        # their per-stream confs to their own start(), so concurrent
+        # warmups leave the session's confs untouched.
 
         def _warm_one(item):
             name, fn = item
@@ -178,11 +166,6 @@ def main() -> None:
         else:
             for item in qs.items():
                 _warm_one(item)
-        for k, v in _saved_confs.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         spark.sparkContext.setJobDescription(None)
         # one sweep instead of per-query: sf0.001 caches are tiny, and a
         # mid-pool global clearCache would evict a CONCURRENT query's
@@ -249,45 +232,22 @@ def main() -> None:
         heap = mf.getMemoryMXBean().getHeapMemoryUsage().getUsed() // (1 << 20)
         return n, ms, heap
 
-    # per-CALL temp dirs the one-shot streaming replays leave behind
-    # (fresh mkdtemp every run, never revisited).  Persistent per-corpus
-    # fixtures (sss_ivf_idx_*, sss_pq_*, ssss_images_*, ssss_lsh_pairs_*)
-    # are deliberately NOT listed — deleting those would put their
-    # one-time build cost back into a timed loop.  Rooted at
-    # tempfile.gettempdir() (mkdtemp honors TMPDIR; a hardcoded /tmp
-    # would silently sweep nothing on a TMPDIR box), and swept ONLY on a
-    # solo run — these prefixes are shared with pytest/gate/probe
-    # processes, whose LIVE checkpoints a concurrent sweep would destroy.
-    import tempfile
-
-    _tmp = tempfile.gettempdir()
-    _DEAD_TMP_GLOBS = [
-        os.path.join(_tmp, g)
-        for g in ("sss_ckpt_*", "sss_stream_src_*",
-                  "sss_merge_q_*", "sss_merge_qb_*", "sss_incmv_q_*")
-    ]
-
-    def _sweep_dead_tmp() -> int:
-        import shutil
-
-        n = 0
-        for g in _DEAD_TMP_GLOBS:
-            for d in glob.glob(g):
-                shutil.rmtree(d, ignore_errors=True)
-                if not os.path.exists(d):  # count REMOVALS, not matches —
-                    n += 1  # the diag line must not report survivors as swept
-        return n
+    # the streaming replays' checkpoints, staging and outputs all live
+    # under this process's private scratch root; the frames the previous
+    # loop returned are dropped, so the whole root goes at each boundary.
+    # Persistent per-corpus fixtures (sss_ivf_idx_*, sss_pq_*, ...) live
+    # outside it, so their one-time build cost stays out of the loops.
+    from stateful_spark_streaming_spark.streaming.pipeline import _sweep_scratch
 
     def _loop_boundary(tag: str, prev: tuple[int, int, int]) -> tuple[int, int, int]:
-        swept = _sweep_dead_tmp() if solo else 0
+        _sweep_scratch()
         jvm.System.gc()
         if not diag:
             return prev
         n, ms, heap = _gc_stats()
         print(
             f"bench-diag {tag}: gc+{n - prev[0]} collections, "
-            f"+{ms - prev[1]}ms gc time, heap {heap}MB after forced gc, "
-            f"swept {swept} dead stream tmp dirs",
+            f"+{ms - prev[1]}ms gc time, heap {heap}MB after forced gc",
             file=sys.stderr,
         )
         return n, ms, heap

@@ -265,29 +265,20 @@ def q_track_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: checkpoints produced by streaming runs this process, keyed by sf_dir —
-#: one stream, many readers: the state-store reader query scans the same
-#: checkpoint the snapshot query produced (exactly how the two surfaces
-#: relate in a deployment) instead of re-running the whole pipeline.
-_STREAM_CKPTS: dict[str, str] = {}
-
-
-def _run_tracked_stream(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
+def _run_tracked_stream(
+    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
+) -> DataFrame:
     import os as _os
-    import tempfile as _tf
 
     from stateful_spark_streaming_spark.streaming.pipeline import run_snapshot_query
 
-    ckpt = _tf.mkdtemp(prefix="sss_ckpt_catalog_")
     # state partitions sized to this table's key cardinality (≤ thousands of
     # keys): fewer Arrow worker rounds beat idle parallelism; production key
     # volumes pass None and inherit the session's shuffle sizing
-    out = run_snapshot_query(
+    return run_snapshot_query(
         spark, _os.path.join(sf_dir, "events.parquet"),
-        checkpoint_dir=ckpt, state_partitions=8,
+        checkpoint_dir=checkpoint_dir, state_partitions=8,
     )
-    _STREAM_CKPTS[sf_dir] = ckpt
-    return ckpt, out
 
 
 @query(
@@ -316,8 +307,7 @@ def q_streaming_track_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion with an availableNow trigger — same oracle as the batch
     track_snapshot because single-batch ingest ≡ batch semantics.
     Reference: mapWithState graph at StreamWithStates.scala:58-81."""
-    _, out = _run_tracked_stream(spark, sf_dir)
-    return out.select(
+    return _run_tracked_stream(spark, sf_dir).select(
         "user_id", "track_count", "latest_ts_ms", "oldest_ts_ms",
         "latest_event_type", "latest_value",
     )
@@ -348,16 +338,15 @@ def q_state_store_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE stateSnapshots() parity (StreamWithStates.scala:74-77): read ALL
     keys' state straight from the checkpointed RocksDB files via the state
     data source — a distributed scan of the state store itself, no sink,
-    same oracle as the batch operator.  Reads the checkpoint the streaming
-    query produced (one stream, many readers); runs the stream itself only
-    when invoked standalone."""
+    same oracle as the batch operator.  Runs its own stream into a
+    checkpoint it keeps, so the timing covers the stream the read needs."""
+    from stateful_spark_streaming_spark.streaming.pipeline import _scratch
     from stateful_spark_streaming_spark.streaming.state_reader import (
         state_snapshot_view,
     )
 
-    ckpt = _STREAM_CKPTS.get(sf_dir)
-    if ckpt is None:
-        ckpt, _ = _run_tracked_stream(spark, sf_dir)
+    ckpt = _scratch("sss_ckpt_catalog_")
+    _run_tracked_stream(spark, sf_dir, checkpoint_dir=ckpt)
     return state_snapshot_view(spark, ckpt)
 
 
@@ -4153,15 +4142,15 @@ def q_streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstones make replay and out-of-order application converge (see
     run_streaming_merge_upsert)."""
     import os as _os
-    import tempfile as _tf
 
     from stateful_spark_streaming_spark.streaming.pipeline import (
+        _scratch,
         run_streaming_merge_upsert,
     )
 
     base = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 != 0)
     s1, s2 = _order_change_sets(spark, sf_dir)
-    work = _tf.mkdtemp(prefix="sss_merge_q_")
+    work = _scratch("sss_merge_q_")
     base_path = _os.path.join(work, "base")
     ch_dir = _os.path.join(work, "changes")
     base.write.parquet(base_path)
@@ -4206,16 +4195,16 @@ def q_streaming_merge_upsert_bucketed(spark: SparkSession, sf_dir: str) -> DataF
     full-image fallback in the bucketed layout — the layout, the swap
     protocol and the oracle parity stay exercised here."""
     import os as _os
-    import tempfile as _tf
 
     from stateful_spark_streaming_spark.streaming.pipeline import (
+        _scratch,
         run_streaming_merge_upsert,
     )
 
     base = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 != 0)
     s1, s2 = _order_change_sets(spark, sf_dir)
     s3 = s2.filter(F.col("o_orderkey") % 600 == 0)
-    work = _tf.mkdtemp(prefix="sss_merge_qb_")
+    work = _scratch("sss_merge_qb_")
     base_path = _os.path.join(work, "base")
     ch_dir = _os.path.join(work, "changes")
     base.write.parquet(base_path)
@@ -4244,15 +4233,15 @@ def q_streaming_incremental_monthly_revenue(
     incremental_monthly_revenue: the full recompute over the final
     merged table."""
     import os as _os
-    import tempfile as _tf
 
     from stateful_spark_streaming_spark.streaming.pipeline import (
+        _scratch,
         run_streaming_incremental_agg,
     )
 
     base = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 != 0)
     s1, s2 = _order_change_sets_recent(spark, sf_dir)
-    work = _tf.mkdtemp(prefix="sss_incmv_q_")
+    work = _scratch("sss_incmv_q_")
     base_path = _os.path.join(work, "base")
     ch_dir = _os.path.join(work, "changes")
     base.write.parquet(base_path)
@@ -5144,16 +5133,13 @@ def q_streaming_partitioned_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     pruned with the standard key dedupe (replay idempotency).  Layout
     built offline by ensure_partitioned_dataset, maintained online here."""
     import os as _os
-    import tempfile as _tf
 
     from stateful_spark_streaming_spark.streaming.pipeline import (
         run_streaming_partitioned_ingest,
     )
 
     loc = run_streaming_partitioned_ingest(
-        spark,
-        _os.path.join(sf_dir, "events.parquet"),
-        checkpoint_dir=_tf.mkdtemp(prefix="sss_ckpt_ping_"),
+        spark, _os.path.join(sf_dir, "events.parquet")
     )
     ev = spark.read.parquet(loc)
     return (

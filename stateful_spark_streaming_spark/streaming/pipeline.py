@@ -28,16 +28,33 @@ Two sinks, one contract:
 - ``SnapshotView`` (demo parity): the reference displays the snapshot with
   ``.show()`` (StreamWithStates.scala:36-53) — inherently driver-sized —
   so the dict-upsert sink is kept for that interactive use case only.
+
+Replay harness contract: every ``run_*`` runner replays its source with
+an availableNow trigger through ``_replay``.  Spark captures a stream's
+SQL confs when ``start()`` clones the session, so the per-stream confs
+(state-partition count, state-store provider, the no-data-batch skip) are
+set on the caller's session only around ``start()``, under one module
+lock, and restored before the await: a concurrent caller never inherits
+them, and the runner's ``foreachBatch`` jobs see them through
+``bdf.sparkSession``.  Directory ownership: a ``checkpoint_dir`` the
+caller passes is the caller's, and the runner's outputs live next to it
+(``<checkpoint_dir>_out`` etc.) for as long as the caller keeps them.
+Without one, the harness makes the checkpoint under a per-process scratch
+root and deletes it once the replay succeeds; outputs go to fresh dirs
+under the same root (returned frames are lazy, so they must outlive the
+call), and the root is removed at interpreter exit.
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import tempfile
 import threading
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -700,23 +717,26 @@ def run_snapshot_query(
     trigger, so size it to key volume: a handful of partitions for
     thousands of keys (measured 3× faster than 32 partitions for 1.5k
     keys), the session default for production key counts."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     cfg = cfg or TrackStateConfig()
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_")
+    stem = _output_stem(checkpoint_dir, "sss_snap_")
+    stream_df = stream_events_source(spark, events_path)
+    keyed = stream_df.withColumn("arrival", F.col(cfg.arrival))
+    snap = track_state_stream(keyed, cfg)
+    sink = ParquetSnapshotSink(
+        spark, "StreamingTracks", cfg.key, path=f"{stem}_snapshot"
+    )
+    _replay(
+        spark,
+        snap.writeStream.outputMode("update").foreachBatch(sink),
+        checkpoint_dir,
+        state_partitions=state_partitions,
+    )
+    return sink.query()
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        return _run_snapshot_query(spark, events_path, cfg, checkpoint_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 
-
-def _await_or_die(q, seconds: int = 300) -> None:
+def _await_or_die(spark: SparkSession, q, seconds: int = 300) -> None:
     """Await an availableNow replay, LOUDLY.  These replays finish in
     seconds; ``awaitTermination`` returning False means the stream HUNG —
     proceeding would serve a half-applied standing table as if the run
@@ -735,32 +755,8 @@ def _await_or_die(q, seconds: int = 300) -> None:
     caller's back, which is the same half-applied hazard this helper
     exists to prevent.  Either way the TimeoutError is raised."""
     if not q.awaitTermination(seconds):
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            # no session to bound stopTimeout on (stop() would then wait
-            # indefinitely, default 0) — fall back to a fire-and-forget
-            # daemon stop so the loud raise below cannot be swallowed by
-            # a second hang; every in-repo runner calls this helper on
-            # the session thread, so this branch is defensive only
-            import threading
-
-            threading.Thread(
-                target=lambda: _swallow(q.stop), daemon=True,
-                name="await-or-die-stop",
-            ).start()
-        else:
-            _KEY = "spark.sql.streaming.stopTimeout"
-            old = spark.conf.get(_KEY, None)
-            try:
-                spark.conf.set(_KEY, "10000")
-                _swallow(q.stop)  # a stop timeout must not mask the raise
-            finally:
-                if old is None:
-                    spark.conf.unset(_KEY)
-                else:
-                    spark.conf.set(_KEY, old)
+        with _session_confs(spark, {"spark.sql.streaming.stopTimeout": "10000"}):
+            _swallow(q.stop)  # a stop timeout must not mask the raise
         raise TimeoutError(
             f"streaming query did not terminate within {seconds}s — "
             "refusing to serve a partially-applied result (the "
@@ -777,43 +773,116 @@ def _swallow(fn) -> None:
         pass
 
 
+_SHUFFLE_CONF = "spark.sql.shuffle.partitions"
+_STATE_STORE_CONF = "spark.sql.streaming.stateStore.providerClass"
 _NO_DATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
+#: streaming state-store provider aliases accepted by ``_replay``
+_STATE_STORE_PROVIDERS = {
+    "hdfs": "org.apache.spark.sql.execution.streaming.state."
+    "HDFSBackedStateStoreProvider",
+    "rocksdb": "org.apache.spark.sql.execution.streaming.state."
+    "RocksDBStateStoreProvider",
+}
+
+#: serializes every harness ``start()``: the per-stream confs sit on the
+#: shared session for exactly that call, so no other start can clone them
+_START_LOCK = threading.Lock()
+_SCRATCH_LOCK = threading.Lock()
+_scratch_root: str | None = None
 
 
 @contextmanager
-def _without_no_data_batches(spark: SparkSession):
-    """Skip the trailing NO-DATA micro-batch for a replay whose OUTPUT
-    provably does not depend on it.
+def _session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the shared session for the block, under
+    ``_START_LOCK``, and restore the previous values after it."""
+    with _START_LOCK:
+        old = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
-    When a query carries a watermark, advancing it after the last data
-    batch makes the engine run one more (empty) trigger purely to evict
-    expired state — a full batch cycle (planning + state commit across
-    every partition + offset/commit log writes) that measured ~40 % of a
-    bounded stream-stream replay.  For an availableNow replay the engine
-    stops right after, so the eviction work is thrown away with the
-    checkpoint.
 
-    ONLY valid where the no-data batch cannot EMIT anything:
-    - ``dropDuplicatesWithinWatermark`` + append sink — retained rows are
-      emitted in the data batch that first carries them; eviction emits
-      nothing.
-    - INNER stream-stream joins — a pair is emitted in the data batch
-      where its second side arrives; eviction emits nothing.
+def _scratch(prefix: str) -> str:
+    """A fresh directory under this process's scratch root (made lazily,
+    removed at interpreter exit or by ``_sweep_scratch``)."""
+    global _scratch_root
+    with _SCRATCH_LOCK:
+        if _scratch_root is None:
+            _scratch_root = tempfile.mkdtemp(prefix="sss_replay_")
+        return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
 
-    NEVER for: outer joins (null-matched rows are emitted BY the no-data
-    batch), append-mode aggregations/session windows (window finalization
-    emits there), or stateful folds with processing-time timeouts (timers
-    fire there).  Callers opt in per stream; the conf is snapshotted and
-    pinned back so neighbors never inherit it."""
-    old = spark.conf.get(_NO_DATA_CONF, None)
-    spark.conf.set(_NO_DATA_CONF, "false")
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(_NO_DATA_CONF)
-        else:
-            spark.conf.set(_NO_DATA_CONF, old)
+
+@atexit.register
+def _sweep_scratch() -> None:
+    """Remove the scratch root with every harness checkpoint and runner
+    output in it; the next run makes a new root.  Frames returned by
+    earlier default-dir runs can no longer be read afterwards."""
+    global _scratch_root
+    with _SCRATCH_LOCK:
+        root, _scratch_root = _scratch_root, None
+    if root is not None:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _output_stem(checkpoint_dir: str | None, prefix: str) -> str:
+    """Path stem for a runner's output dirs (``<stem>_out``,
+    ``<stem>_snapshot``...): next to the caller's checkpoint when one is
+    given, else inside a fresh scratch dir."""
+    return checkpoint_dir or os.path.join(_scratch(prefix), "run")
+
+
+def _replay(
+    spark: SparkSession,
+    writer,
+    checkpoint_dir: str | None = None,
+    *,
+    state_partitions: int | None = None,
+    state_store: str | None = None,
+    skip_no_data: bool = False,
+):
+    """Run ``writer`` (a DataStreamWriter with its output mode and sink
+    set) as an availableNow replay to completion and return the
+    terminated StreamingQuery.
+
+    - ``state_partitions`` sizes the stream's shuffles and state store
+      (fixed at checkpoint creation); None keeps the session's setting.
+    - ``state_store`` is a ``_STATE_STORE_PROVIDERS`` alias; None keeps
+      the session's provider.
+    - ``skip_no_data`` skips the trailing no-data micro-batch that only
+      evicts expired state.  ONLY valid where that batch cannot EMIT:
+      append-mode ``dropDuplicatesWithinWatermark`` and INNER
+      stream-stream joins.  Never for outer joins (null-matched rows are
+      emitted by it), append-mode aggregations/session windows (window
+      finalization), or folds with timers.
+
+    The confs apply to this stream only (see the module docstring).
+    Without a ``checkpoint_dir`` the checkpoint is made under the scratch
+    root and deleted once the replay succeeds."""
+    confs = {}
+    if state_partitions is not None:
+        confs[_SHUFFLE_CONF] = str(state_partitions)
+    if state_store is not None:
+        confs[_STATE_STORE_CONF] = _STATE_STORE_PROVIDERS[state_store]
+    if skip_no_data:
+        confs[_NO_DATA_CONF] = "false"
+    owned = checkpoint_dir is None
+    if owned:
+        checkpoint_dir = _scratch("sss_ckpt_")
+    writer = writer.trigger(availableNow=True)
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    with _session_confs(spark, confs):
+        q = writer.start()
+    _await_or_die(spark, q)
+    if owned:
+        shutil.rmtree(checkpoint_dir, ignore_errors=True)
+    return q
 
 
 def _stage_parquet_stream(
@@ -839,7 +908,7 @@ def _stage_parquet_stream(
     raw_schema = raw_read.parquet(path).schema
     src_dir = path
     if os.path.isfile(path):
-        src_dir = tempfile.mkdtemp(prefix="sss_stream_src_")
+        src_dir = _scratch("sss_stream_src_")
         os.symlink(os.path.abspath(path), os.path.join(src_dir, "part-0.parquet"))
     reader = spark.readStream.schema(raw_schema).format("parquet")
     if max_files_per_trigger is not None:
@@ -856,8 +925,6 @@ def stream_events_source(
     nanos-as-long handling, single-file symlink into a source directory.
     ``max_files_per_trigger`` splits a multi-file replay into micro-batches
     (availableNow honors it)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     # file source needs an explicit schema AND a directory; symlink the
@@ -884,31 +951,6 @@ def stream_events_source(
     return stream_df
 
 
-def _run_snapshot_query(
-    spark: SparkSession,
-    events_path: str,
-    cfg: TrackStateConfig,
-    checkpoint_dir: str,
-) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    stream_df = stream_events_source(spark, events_path)
-    keyed = stream_df.withColumn("arrival", F.col(cfg.arrival))
-    snap = track_state_stream(keyed, cfg)
-    sink = ParquetSnapshotSink(
-        spark, "StreamingTracks", cfg.key, path=f"{checkpoint_dir}_snapshot"
-    )
-    q = (
-        snap.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
-    return sink.query()
-
-
 def run_streaming_sliding_counts(
     spark: SparkSession,
     events_path: str,
@@ -924,32 +966,21 @@ def run_streaming_sliding_counts(
     snapshot sink keyed by window start (width is fixed, so start
     determines end).  Against an unbounded source a ``withWatermark``
     upstream bounds window state exactly as in the tumbling twin."""
-    import tempfile
-
     from stateful_spark_streaming_spark.operators.windows import sliding_counts
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_slide_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream_df = stream_events_source(spark, events_path)
-        windowed = sliding_counts(stream_df, width=width, slide=slide)
-        sink = ParquetSnapshotSink(
-            spark, "StreamingSliding", "window_start_ms",
-            path=f"{checkpoint_dir}_snapshot",
-        )
-        q = (
-            windowed.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_die(q)
-        return sink.query()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    stem = _output_stem(checkpoint_dir, "sss_slide_")
+    stream_df = stream_events_source(spark, events_path)
+    windowed = sliding_counts(stream_df, width=width, slide=slide)
+    sink = ParquetSnapshotSink(
+        spark, "StreamingSliding", "window_start_ms", path=f"{stem}_snapshot"
+    )
+    _replay(
+        spark,
+        windowed.writeStream.outputMode("update").foreachBatch(sink),
+        checkpoint_dir,
+        state_partitions=state_partitions,
+    )
+    return sink.query()
 
 
 def run_streaming_dedup(
@@ -979,38 +1010,28 @@ def run_streaming_dedup(
     micro-batches (availableNow honors it), exercising cross-batch
     suppression through the state store rather than within one batch.
     """
-    import tempfile
-
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_dedup_")
-    out_dir = checkpoint_dir + "_out"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream_df = stream_events_source(
-            spark, events_path, max_files_per_trigger=max_files_per_trigger
-        )
-        deduped = (
-            stream_df.withWatermark("ts", delay)
-            .dropDuplicatesWithinWatermark(list(keys))
-            .select(*keys)
-        )
-        # append-mode dedup emits each retained row in the data batch that
-        # first carries it; the trailing no-data batch only evicts expired
-        # key state (output-identical without it — see the helper)
-        with _without_no_data_batches(spark):
-            q = (
-                deduped.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_or_die(q)
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    out_dir = _output_stem(checkpoint_dir, "sss_dedup_") + "_out"
+    stream_df = stream_events_source(
+        spark, events_path, max_files_per_trigger=max_files_per_trigger
+    )
+    deduped = (
+        stream_df.withWatermark("ts", delay)
+        .dropDuplicatesWithinWatermark(list(keys))
+        .select(*keys)
+    )
+    # append-mode dedup emits each retained row in the data batch that
+    # first carries it; the trailing no-data batch only evicts expired
+    # key state (output-identical without it — see _replay)
+    _replay(
+        spark,
+        deduped.writeStream.outputMode("append").format("parquet").option(
+            "path", out_dir
+        ),
+        checkpoint_dir,
+        state_partitions=state_partitions,
+        skip_no_data=True,
+    )
+    return spark.read.parquet(out_dir)
 
 
 class CompleteSnapshotSink(ParquetSnapshotSink):
@@ -1055,33 +1076,23 @@ def run_streaming_session_windows(
     a latest-batch snapshot sink, which makes multi-batch ≡ single-pass ≡
     batch exactly; on an unbounded source use append + ``withWatermark``
     upstream, trading completeness of open sessions for bounded state."""
-    import tempfile
-
     from stateful_spark_streaming_spark.operators.windows import session_windows
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_sess_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream_df = stream_events_source(
-            spark, events_path, max_files_per_trigger=max_files_per_trigger
-        )
-        sessions = session_windows(stream_df, key=key, gap=gap)
-        sink = CompleteSnapshotSink(
-            spark, "StreamingSessions", key, path=f"{checkpoint_dir}_snapshot"
-        )
-        q = (
-            sessions.writeStream.outputMode("complete")
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_die(q)
-        return sink.query()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    stem = _output_stem(checkpoint_dir, "sss_sess_")
+    stream_df = stream_events_source(
+        spark, events_path, max_files_per_trigger=max_files_per_trigger
+    )
+    sessions = session_windows(stream_df, key=key, gap=gap)
+    sink = CompleteSnapshotSink(
+        spark, "StreamingSessions", key, path=f"{stem}_snapshot"
+    )
+    _replay(
+        spark,
+        sessions.writeStream.outputMode("complete").foreachBatch(sink),
+        checkpoint_dir,
+        state_partitions=state_partitions,
+    )
+    return sink.query()
 
 
 def run_streaming_session_windows_append(
@@ -1110,38 +1121,22 @@ def run_streaming_session_windows_append(
     trailing no-data micro-batch (on by default) flushes everything the
     final watermark finalizes.  Append emits each session once, so a plain
     distributed parquet sink is exact — no snapshot merge needed."""
-    import tempfile
-
     from stateful_spark_streaming_spark.operators.windows import session_windows
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_sessap_")
-    out_dir = checkpoint_dir + "_out"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream_df = stream_events_source(
-            spark, events_path, max_files_per_trigger=max_files_per_trigger
-        ).withWatermark("ts", watermark_delay)
-        sessions = session_windows(stream_df, key=key, gap=gap)
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_die(q)
-        global _last_session_append_progress
-        _last_session_append_progress = [p for p in q.recentProgress]
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-
-#: debug introspection: per-batch progress of the last append-session run
-_last_session_append_progress: list = []
+    out_dir = _output_stem(checkpoint_dir, "sss_sessap_") + "_out"
+    stream_df = stream_events_source(
+        spark, events_path, max_files_per_trigger=max_files_per_trigger
+    ).withWatermark("ts", watermark_delay)
+    sessions = session_windows(stream_df, key=key, gap=gap)
+    _replay(
+        spark,
+        sessions.writeStream.outputMode("append").format("parquet").option(
+            "path", out_dir
+        ),
+        checkpoint_dir,
+        state_partitions=state_partitions,
+    )
+    return spark.read.parquet(out_dir)
 
 
 def _band_claim_fold(key, pdfs, state):
@@ -1168,25 +1163,6 @@ def _band_claim_fold(key, pdfs, state):
     is_dup = (rows["doc_id"] != winners) | rows["band_hash"].isin(claimed)
     state.update((list(claimed | set(rows["band_hash"].unique())),))
     yield pd.DataFrame({"doc_id": rows["doc_id"], "is_dup": is_dup})
-
-
-
-#: streaming state-store provider aliases — resolved by _resolve_state_store
-_STATE_STORE_CONF = "spark.sql.streaming.stateStore.providerClass"
-_STATE_STORE_PROVIDERS = {
-    "hdfs": "org.apache.spark.sql.execution.streaming.state."
-    "HDFSBackedStateStoreProvider",
-    "rocksdb": "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider",
-}
-
-
-def _resolve_state_store(name: str | None) -> str | None:
-    """Map a state-store alias to its provider class, raising on a bad
-    name BEFORE the caller mutates any session conf — the entry points
-    restore confs in a finally block, which cannot protect failures that
-    happen before the try begins."""
-    return None if name is None else _STATE_STORE_PROVIDERS[name]
 
 
 def run_streaming_dedup_minhash(
@@ -1258,10 +1234,7 @@ def run_streaming_dedup_minhash(
         minhash_band_rows_mapinpandas,
     )
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_mhdedup_")
-    out_dir = checkpoint_dir + "_out"
-    provider_class = _resolve_state_store(state_store)  # fail before conf set
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    out_dir = _output_stem(checkpoint_dir, "sss_mhdedup_") + "_out"
     if state_partitions is None:
         # match core count, NOT the session's shuffle setting: a plain
         # session defaults to 200 shuffle partitions, and each state
@@ -1269,98 +1242,85 @@ def run_streaming_dedup_minhash(
         # per trigger — 200 of them for one replay batch is pure overhead
         # (core-count measured fastest: 7.1 s vs 9.1 s at 8 on local[32])
         state_partitions = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    old_store = spark.conf.get(_STATE_STORE_CONF, None)
-    if provider_class is not None:
-        spark.conf.set(_STATE_STORE_CONF, provider_class)
-    try:
-        stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
-        # id type FROM THE INPUT, like the band kernel itself: string-id
-        # corpora are legitimate, and a hardcoded LongType here would pass
-        # the (generic) kernel then crash at the state fold's Arrow boundary
-        id_type = stream.schema[id_col].dataType
+    stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
+    # id type FROM THE INPUT, like the band kernel itself: string-id
+    # corpora are legitimate, and a hardcoded LongType here would pass
+    # the (generic) kernel then crash at the state fold's Arrow boundary
+    id_type = stream.schema[id_col].dataType
 
-        # numpy kernel, not the HOF fold: bit-identical bands (tested), but
-        # the interpreted 32-way HOF fold measured 6.4 s vs 1.1 s for the
-        # Arrow kernel at sf0.1 — on the ingest hot path that 6× matters.
-        # Spread first: a single-file replay batch arrives as ONE input
-        # partition, which would serialize the hashing into one task (the
-        # streaming twin of batch dedup's _spread; at production rates the
-        # source already has many splits and this is a near-no-op).
-        items = minhash_band_rows_mapinpandas(
-            stream.repartition(spark.sparkContext.defaultParallelism),
-            text_col=text_col,
-            id_col=id_col,
-            k=k,
-            num_hashes=num_hashes,
-            bands=bands,
-        )
-        # bucket the band space: state call count is capped at
-        # n_state_buckets instead of one call per distinct band.  At real
-        # scale RAISE the bucket count so each bucket's claimed-set state
-        # row stays bounded (buckets ~ corpus_bands / 10k keeps state rows
-        # ~10k strings).
-        from pyspark.sql.types import ArrayType, StringType
+    # numpy kernel, not the HOF fold: bit-identical bands (tested), but
+    # the interpreted 32-way HOF fold measured 6.4 s vs 1.1 s for the
+    # Arrow kernel at sf0.1 — on the ingest hot path that 6× matters.
+    # Spread first: a single-file replay batch arrives as ONE input
+    # partition, which would serialize the hashing into one task (the
+    # streaming twin of batch dedup's _spread; at production rates the
+    # source already has many splits and this is a near-no-op).
+    items = minhash_band_rows_mapinpandas(
+        stream.repartition(spark.sparkContext.defaultParallelism),
+        text_col=text_col,
+        id_col=id_col,
+        k=k,
+        num_hashes=num_hashes,
+        bands=bands,
+    )
+    # bucket the band space: state call count is capped at
+    # n_state_buckets instead of one call per distinct band.  At real
+    # scale RAISE the bucket count so each bucket's claimed-set state
+    # row stays bounded (buckets ~ corpus_bands / 10k keeps state rows
+    # ~10k strings).
+    from pyspark.sql.types import ArrayType, StringType
 
-        bucketed = items.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("band_hash"), F.lit(n_state_buckets)).cast("int"),
-        )
-        flagged = bucketed.groupBy("bucket").applyInPandasWithState(
-            _band_claim_fold,
-            outputStructType=StructType(
-                [
-                    StructField("doc_id", id_type),
-                    StructField("is_dup", BooleanType()),
-                ]
-            ),
-            stateStructType=StructType(
-                [StructField("claimed", ArrayType(StringType()))]
-            ),
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+    bucketed = items.withColumn(
+        "bucket",
+        F.pmod(F.xxhash64("band_hash"), F.lit(n_state_buckets)).cast("int"),
+    )
+    flagged = bucketed.groupBy("bucket").applyInPandasWithState(
+        _band_claim_fold,
+        outputStructType=StructType(
+            [
+                StructField("doc_id", id_type),
+                StructField("is_dup", BooleanType()),
+            ]
+        ),
+        stateStructType=StructType(
+            [StructField("claimed", ArrayType(StringType()))]
+        ),
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+    def _admit(bdf: DataFrame, batch_id: int) -> None:
+        (
+            bdf.groupBy("doc_id")
+            .agg(F.max(F.col("is_dup").cast("int")).alias("_d"))
+            .filter(F.col("_d") == 0)
+            .select("doc_id")
+            # id list is tiny relative to the corpus — don't spray 32
+            # near-empty files per batch
+            .coalesce(4)
+            .write.mode("append")
+            .parquet(out_dir)
         )
 
-        def _admit(bdf: DataFrame, batch_id: int) -> None:
-            (
-                bdf.groupBy("doc_id")
-                .agg(F.max(F.col("is_dup").cast("int")).alias("_d"))
-                .filter(F.col("_d") == 0)
-                .select("doc_id")
-                # id list is tiny relative to the corpus — don't spray 32
-                # near-empty files per batch
-                .coalesce(4)
-                .write.mode("append")
-                .parquet(out_dir)
-            )
-
-        q = (
-            flagged.writeStream.foreachBatch(_admit)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+    _replay(
+        spark,
+        flagged.writeStream.foreachBatch(_admit).outputMode("update"),
+        checkpoint_dir,
+        state_partitions=state_partitions,
+        state_store=state_store,
+    )
+    if not os.path.exists(out_dir):
+        # zero micro-batches ever fired (e.g. empty source dir):
+        # nothing was appended — return a typed empty frame, not a
+        # PATH_NOT_FOUND crash (same guard as run_streaming_ivf_topk)
+        return spark.createDataFrame(
+            [], StructType([StructField("doc_id", id_type)])
         )
-        _await_or_die(q)
-        if not os.path.exists(out_dir):
-            # zero micro-batches ever fired (e.g. empty source dir):
-            # nothing was appended — return a typed empty frame, not a
-            # PATH_NOT_FOUND crash (same guard as run_streaming_ivf_topk)
-            return spark.createDataFrame(
-                [], StructType([StructField("doc_id", id_type)])
-            )
-        # distinct-on-read = replay idempotency: a crash between the
-        # foreachBatch append and the checkpoint commit re-appends the
-        # SAME byte-identical rows (each admitted doc belongs to exactly
-        # one batch), so distinct restores exactly-once
-        return spark.read.parquet(out_dir).distinct()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        if provider_class is not None:
-            if old_store is not None:
-                spark.conf.set(_STATE_STORE_CONF, old_store)
-            else:
-                spark.conf.unset(_STATE_STORE_CONF)
+    # distinct-on-read = replay idempotency: a crash between the
+    # foreachBatch append and the checkpoint commit re-appends the
+    # SAME byte-identical rows (each admitted doc belongs to exactly
+    # one batch), so distinct restores exactly-once
+    return spark.read.parquet(out_dir).distinct()
 
 
 def run_streaming_decontaminate(
@@ -1392,8 +1352,7 @@ def run_streaming_decontaminate(
 
     from stateful_spark_streaming_spark.operators.text import shingles
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_decon_")
-    out_dir = checkpoint_dir + "_out"
+    out_dir = _output_stem(checkpoint_dir, "sss_decon_") + "_out"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
     if train_filter is not None:
         stream = stream.filter(train_filter)
@@ -1417,14 +1376,7 @@ def run_streaming_decontaminate(
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         bdf.distinct().write.mode("append").parquet(out_dir)
 
-    q = (
-        hits.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, hits.writeStream.foreachBatch(_sink), checkpoint_dir)
     if not os.path.exists(out_dir):
         # zero micro-batches (empty source / filter matched nothing):
         # typed empty result, not a PATH_NOT_FOUND crash
@@ -1470,8 +1422,7 @@ def run_streaming_vocab(
 
     from stateful_spark_streaming_spark.operators.text import _token_occurrences
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_vocab_")
-    out_dir = checkpoint_dir + "_partials"
+    out_dir = _output_stem(checkpoint_dir, "sss_vocab_") + "_partials"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
@@ -1491,14 +1442,7 @@ def run_streaming_vocab(
             "append"
         ).parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
 
     from stateful_spark_streaming_spark.operators.text import vocab_rank
 
@@ -1570,10 +1514,7 @@ def run_streaming_lm_logprob(
 
     if order not in (1, 2):
         raise ValueError(f"order must be 1 (unigram) or 2 (bigram), got {order}")
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(
-        prefix=f"sss_ckpt_lm{order}_"
-    )
-    out_dir = checkpoint_dir + "_counts"
+    out_dir = _output_stem(checkpoint_dir, f"sss_lm{order}_") + "_counts"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
     keys = ["doc_id", "token"] if order == 1 else ["doc_id", "w1", "w2"]
     score = unigram_score_from_counts if order == 1 else bigram_score_from_counts
@@ -1593,14 +1534,7 @@ def run_streaming_lm_logprob(
             "append"
         ).parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
 
     if not os.path.exists(out_dir):
         # zero micro-batches: empty scores through the SAME scoring tail
@@ -1649,8 +1583,7 @@ def run_streaming_distinct_stats(
     sketch (only the additive row count strictly needs the dedupe)."""
     from pyspark.sql import functions as F
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_hll_")
-    out_dir = checkpoint_dir + "_sketches"
+    out_dir = _output_stem(checkpoint_dir, "sss_hll_") + "_sketches"
     stream = _stage_parquet_stream(spark, events_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
@@ -1666,14 +1599,7 @@ def run_streaming_distinct_stats(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
 
     if not os.path.exists(out_dir):
         from pyspark.sql.types import (
@@ -1745,8 +1671,7 @@ def run_streaming_distinct_kmv(
         kmv_finalize,
     )
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_kmv_")
-    out_dir = checkpoint_dir + "_sketches"
+    out_dir = _output_stem(checkpoint_dir, "sss_kmv_") + "_sketches"
     stream = _stage_parquet_stream(spark, events_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
@@ -1770,14 +1695,7 @@ def run_streaming_distinct_kmv(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
 
     if not os.path.exists(out_dir):
         from pyspark.sql.types import (
@@ -1885,9 +1803,9 @@ def run_streaming_image_keep_best(
         keep_best_from_hash_summaries,
     )
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_imgkb_")
-    out_dir = checkpoint_dir + "_partials"
-    null_dir = checkpoint_dir + "_nullids"
+    stem = _output_stem(checkpoint_dir, "sss_imgkb_")
+    out_dir = stem + "_partials"
+    null_dir = stem + "_nullids"
     nbits = grid * grid
     stream = _stage_parquet_stream(spark, images_path, max_files_per_trigger)
 
@@ -1942,14 +1860,7 @@ def run_streaming_image_keep_best(
             nulls.coalesce(1).write.mode("append").parquet(null_dir)
         hashed.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
 
     from pyspark.sql.types import (
         LongType,
@@ -2046,8 +1957,7 @@ def run_streaming_quality_histogram(
     )
     from stateful_spark_streaming_spark.operators.text import quality_score
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_qhist_")
-    out_dir = checkpoint_dir + "_hist"
+    out_dir = _output_stem(checkpoint_dir, "sss_qhist_") + "_hist"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
@@ -2079,14 +1989,7 @@ def run_streaming_quality_histogram(
         finally:
             counts.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
 
     if not os.path.exists(out_dir):
         staged = spark.createDataFrame(
@@ -2129,8 +2032,7 @@ def run_streaming_source_drift(
         unigram_source_counts,
     )
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_drift_")
-    out_dir = checkpoint_dir + "_counts"
+    out_dir = _output_stem(checkpoint_dir, "sss_drift_") + "_counts"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
@@ -2139,14 +2041,7 @@ def run_streaming_source_drift(
             "append"
         ).parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
 
     if not os.path.exists(out_dir):
         staged = spark.createDataFrame(
@@ -2194,9 +2089,9 @@ def run_streaming_heavy_hitters(
     )
     from stateful_spark_streaming_spark.operators.text import _token_occurrences
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_cms_")
-    ctr_dir = checkpoint_dir + "_counters"
-    cand_dir = checkpoint_dir + "_cands"
+    stem = _output_stem(checkpoint_dir, "sss_cms_")
+    ctr_dir = stem + "_counters"
+    cand_dir = stem + "_cands"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
@@ -2209,14 +2104,7 @@ def run_streaming_heavy_hitters(
             "_batch_id", F.lit(batch_id)
         ).coalesce(1).write.mode("append").parquet(cand_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
 
     if not os.path.exists(ctr_dir):
         counters = spark.createDataFrame([], "r int, b int, n bigint")
@@ -2410,9 +2298,9 @@ def run_streaming_merge_upsert(
             "__bucket", F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), n_buckets)
         )
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_merge_")
-    table_dir = checkpoint_dir + "_table"
-    staging_dir = checkpoint_dir + "_staging"
+    stem = _output_stem(checkpoint_dir, "sss_merge_")
+    table_dir = stem + "_table"
+    staging_dir = stem + "_staging"
     recover_generation(table_dir, clean=True)
     # ALSO at run entry, not only per batch: a restart with NO new change
     # files never enters the sink, and a crash mid-partition-swap would
@@ -2473,8 +2361,8 @@ def run_streaming_merge_upsert(
     # is authoritative).
     _schema_holder = {"schema": spark.read.parquet(table_dir).schema}
 
-    def _read_table():
-        return spark.read.schema(_schema_holder["schema"]).parquet(table_dir)
+    def _read_table(session: SparkSession) -> DataFrame:
+        return session.read.schema(_schema_holder["schema"]).parquet(table_dir)
 
     def _refresh_schema() -> None:
         _schema_holder["schema"] = spark.read.parquet(table_dir).schema
@@ -2509,9 +2397,11 @@ def run_streaming_merge_upsert(
     )
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
+        # batch jobs run on the stream's session, which carries the
+        # shuffle sizing _replay scoped to this stream
         recover_generation(table_dir, clean=True)  # drop any stale .tmp
         recover_partitions(table_dir)
-        cur = _read_table()
+        cur = _read_table(bdf.sparkSession)
         batch_ready = bdf.withColumnRenamed(seq_col, "__seq")
         if schema_evolution:
             # replay-safe: an already-widened table sees no new columns
@@ -2575,7 +2465,9 @@ def run_streaming_merge_upsert(
         if len(touched) <= max_pred_terms:
             cur_touched = cur.filter(F.col("__bucket").isin(touched))
         else:
-            tdf = spark.createDataFrame([(int(b),) for b in touched], "__b long")
+            tdf = bdf.sparkSession.createDataFrame(
+                [(int(b),) for b in touched], "__b long"
+            )
             cur_touched = cur.join(
                 F.broadcast(tdf), cur["__bucket"] == tdf["__b"], "left_semi"
             )
@@ -2592,21 +2484,13 @@ def run_streaming_merge_upsert(
             table_dir, staging_dir, list_staged_partitions(staging_dir, 1)
         )
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_die(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    out = merged_view(_read_table())
+    _replay(
+        spark,
+        stream.writeStream.foreachBatch(_sink).outputMode("update"),
+        checkpoint_dir,
+        state_partitions=shuffle_partitions,
+    )
+    out = merged_view(_read_table(spark))
     return out.drop("__bucket") if n_buckets else out
 
 
@@ -2718,10 +2602,10 @@ def run_streaming_incremental_agg(
     from pyspark.sql import functions as F
 
     groups = list(group_cols)
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_incagg_")
-    table_dir = checkpoint_dir + "_table"
-    agg_dir = checkpoint_dir + "_agg"
-    staging_dir = checkpoint_dir + "_staging"
+    stem = _output_stem(checkpoint_dir, "sss_incagg_")
+    table_dir = stem + "_table"
+    agg_dir = stem + "_agg"
+    staging_dir = stem + "_staging"
     recover_generation(table_dir, clean=True)
     # entry-time partition recovery too: a restart with no new batches
     # never runs the sink, and a half-swapped partition would stay hidden
@@ -2757,8 +2641,8 @@ def run_streaming_incremental_agg(
     # partition); partition discovery itself stays, it's just listing
     tbl_schema = spark.read.parquet(table_dir).schema
 
-    def _read_table():
-        return spark.read.schema(tbl_schema).parquet(table_dir)
+    def _read_table(session: SparkSession) -> DataFrame:
+        return session.read.schema(tbl_schema).parquet(table_dir)
 
     # stream-START guard over the UNION of all change-file footers — same
     # rationale as run_streaming_merge_upsert's: the per-batch guard in
@@ -2795,10 +2679,13 @@ def run_streaming_incremental_agg(
         return reduce(lambda a, b: a | b, (one(r) for r in rows))
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
+        # batch jobs run on the stream's session, which carries the
+        # shuffle sizing _replay scoped to this stream
+        ss = bdf.sparkSession
         recover_generation(table_dir, clean=True)
         recover_partitions(table_dir)
         recover_generation(agg_dir, clean=True)
-        cur = _read_table()
+        cur = _read_table(ss)
         # a feed that grew a column would otherwise be SILENTLY dropped:
         # merge_apply_batch projects data columns from the TABLE's schema,
         # so the new column never lands and no error surfaces.  The MV
@@ -2831,10 +2718,10 @@ def run_streaming_incremental_agg(
             affected = add_group(bdf).select(*groups).distinct()
         else:
             sidecar = os.path.join(
-                checkpoint_dir + "_affected", f"batch={batch_id}"
+                stem + "_affected", f"batch={batch_id}"
             )
             if os.path.exists(os.path.join(sidecar, "_SUCCESS")):
-                affected = spark.read.parquet(sidecar)
+                affected = ss.read.parquet(sidecar)
             else:
                 # old_side over the RAW table (tombstones INCLUDED): a
                 # re-inserted previously-deleted key must pull its
@@ -2846,7 +2733,7 @@ def run_streaming_incremental_agg(
                 affected_groups(
                     cur, add_group(bdf), key_cols, group_cols
                 ).write.mode("overwrite").parquet(sidecar)
-                affected = spark.read.parquet(sidecar)
+                affected = ss.read.parquet(sidecar)
         rows = affected.collect()
         if not rows:
             return  # empty change batch touches nothing
@@ -2987,11 +2874,11 @@ def run_streaming_incremental_agg(
         # lineage points at pre-swap files — persist() alone does not
         # guarantee cached blocks survive to the agg refresh, and a
         # post-swap recompute against retired files fails the batch.
-        refresh_detail = aff_filter(merged_view(_read_table()))
+        refresh_detail = aff_filter(merged_view(_read_table(ss)))
         # refresh with the PRE-swap affected set: together with the
         # durable sidecar this makes the two-swap window replay-safe for
         # every change class, including group moves
-        cur_agg = spark.read.parquet(agg_dir)
+        cur_agg = ss.read.parquet(agg_dir)
         nxt_agg = refresh_groups(
             cur_agg, refresh_detail, affected, group_cols, agg_fn
         )
@@ -3007,20 +2894,12 @@ def run_streaming_incremental_agg(
 
             shutil.rmtree(sidecar, ignore_errors=True)
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_die(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    _replay(
+        spark,
+        stream.writeStream.foreachBatch(_sink).outputMode("update"),
+        checkpoint_dir,
+        state_partitions=shuffle_partitions,
+    )
     return spark.read.parquet(agg_dir)
 
 
@@ -3045,8 +2924,7 @@ def run_streaming_partitioned_ingest(
     key dedupe collapses.  Returns ``out_dir``."""
     from pyspark.sql import functions as F
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_ping_")
-    out_dir = out_dir or checkpoint_dir + "_data"
+    out_dir = out_dir or _output_stem(checkpoint_dir, "sss_ping_") + "_data"
     stream = stream_events_source(
         spark, events_path, max_files_per_trigger=max_files_per_trigger
     )
@@ -3061,14 +2939,7 @@ def run_streaming_partitioned_ingest(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
     return out_dir
 
 
@@ -3108,9 +2979,9 @@ def run_streaming_corpus_report(
         quality_score,
     )
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_creport_")
-    stats_dir = checkpoint_dir + "_stats"
-    fps_dir = checkpoint_dir + "_fps"
+    stem = _output_stem(checkpoint_dir, "sss_creport_")
+    stats_dir = stem + "_stats"
+    fps_dir = stem + "_fps"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
@@ -3153,14 +3024,7 @@ def run_streaming_corpus_report(
             .parquet(fps_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
 
     if not os.path.exists(stats_dir):
         # zero micro-batches: empty card through the SAME merge code over
@@ -3280,8 +3144,7 @@ def run_streaming_dup_spans(
         dup_spans_from_index,
     )
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_spans_")
-    out_dir = checkpoint_dir + "_index"
+    out_dir = _output_stem(checkpoint_dir, "sss_spans_") + "_index"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
@@ -3299,14 +3162,7 @@ def run_streaming_dup_spans(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
 
     if not os.path.exists(out_dir):
         # zero micro-batches: empty span set, not a PATH_NOT_FOUND crash.
@@ -3373,8 +3229,7 @@ def run_streaming_ivf_topk(
         ivf_topk,
     )
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_ivfq_")
-    out_dir = checkpoint_dir + "_out"
+    out_dir = _output_stem(checkpoint_dir, "sss_ivfq_") + "_out"
     index = ivf_load_index(spark, index_path)
     stream = _stage_parquet_stream(spark, queries_path, max_files_per_trigger)
     if query_filter is not None:
@@ -3401,14 +3256,7 @@ def run_streaming_ivf_topk(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_probe), checkpoint_dir)
     if not os.path.exists(out_dir):
         # every micro-batch was empty (e.g. a query_filter matching no
         # rows): nothing was ever appended — return the empty frame the
@@ -3480,7 +3328,6 @@ def run_streaming_ivf_ingest(
         spark.read.parquet(os.path.join(index_path, "cells")).columns
     )
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_ivfing_")
     stream = _stage_parquet_stream(spark, vectors_path, max_files_per_trigger)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
@@ -3488,14 +3335,7 @@ def run_streaming_ivf_ingest(
             bdf, index_path, cents, stored_cols, id_col, vec_col
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_die(q)
+    _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
     assigned, cents = ivf_load_index(spark, index_path)
     return assigned.dropDuplicates([id_col]), cents
 
@@ -3540,86 +3380,59 @@ def run_streaming_event_pairs(
     path measures ~2× faster than RocksDB's.  Pass ``'rocksdb'`` (or None
     to inherit the session) when the tolerance×rate product makes buffered
     state bigger than executor memory."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_ssj_")
-    out_dir = checkpoint_dir + "_out"
-    provider_class = _resolve_state_store(state_store)  # fail before conf set
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    old_store = spark.conf.get(_STATE_STORE_CONF, None)
-    if provider_class is not None:
-        spark.conf.set(_STATE_STORE_CONF, provider_class)
-    try:
-        a = stream_events_source(
-            spark, events_path, max_files_per_trigger=max_files_per_trigger
-        )
-        if left_type is not None:
-            a = a.filter(F.col("event_type") == left_type)
-        a = a.select(
-            F.col(key).alias("user_id"),
-            F.col("event_id").alias("id_a"),
-            F.col("ts").alias("ts_a"),
-        ).withWatermark("ts_a", watermark_delay)
-        b = stream_events_source(
-            spark, events_path, max_files_per_trigger=max_files_per_trigger
-        )
-        if right_type is not None:
-            b = b.filter(F.col("event_type") == right_type)
-        b = b.select(
-            F.col(key).alias("user_id_b"),
-            F.col("event_id").alias("id_b"),
-            F.col("ts").alias("ts_b"),
-        ).withWatermark("ts_b", watermark_delay)
-        tol = F.expr(f"INTERVAL {tolerance_seconds} SECONDS")
-        cond = (
-            (F.col("user_id") == F.col("user_id_b"))
-            & (F.col("ts_b") >= F.col("ts_a") - tol)
-            & (F.col("ts_b") <= F.col("ts_a") + tol)
-        )
-        if left_type is None and right_type is None:
-            cond = cond & (F.col("id_a") < F.col("id_b"))
-        gap = F.abs(F.unix_millis("ts_a") - F.unix_millis("ts_b"))
-        if how != "inner":  # outer rows carry NULL match columns
-            gap = F.when(F.col("id_b").isNotNull(), gap)
-        pairs = a.join(b, cond, how).select(
-            "user_id", "id_a", "id_b", gap.alias("gap_ms")
-        )
-        from contextlib import nullcontext
-
-        # INNER joins emit every pair in the data batch where its second
-        # side arrives — the trailing no-data batch only evicts buffered
-        # state (output-identical without it; measured ~0.9 s of a ~2.5 s
-        # bounded replay).  OUTER joins EMIT null-matched rows from that
-        # batch when the watermark passes their horizon — they keep it.
-        ctx = _without_no_data_batches(spark) if how == "inner" else nullcontext()
-        with ctx:
-            q = (
-                pairs.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_or_die(q)
-        global _last_join_progress
-        _last_join_progress = [p for p in q.recentProgress]
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        if provider_class is not None:
-            if old_store is not None:
-                spark.conf.set(_STATE_STORE_CONF, old_store)
-            else:
-                spark.conf.unset(_STATE_STORE_CONF)
-
-
-#: debug introspection: per-batch progress of the last stream-stream join run
-_last_join_progress: list = []
+    out_dir = _output_stem(checkpoint_dir, "sss_ssj_") + "_out"
+    a = stream_events_source(
+        spark, events_path, max_files_per_trigger=max_files_per_trigger
+    )
+    if left_type is not None:
+        a = a.filter(F.col("event_type") == left_type)
+    a = a.select(
+        F.col(key).alias("user_id"),
+        F.col("event_id").alias("id_a"),
+        F.col("ts").alias("ts_a"),
+    ).withWatermark("ts_a", watermark_delay)
+    b = stream_events_source(
+        spark, events_path, max_files_per_trigger=max_files_per_trigger
+    )
+    if right_type is not None:
+        b = b.filter(F.col("event_type") == right_type)
+    b = b.select(
+        F.col(key).alias("user_id_b"),
+        F.col("event_id").alias("id_b"),
+        F.col("ts").alias("ts_b"),
+    ).withWatermark("ts_b", watermark_delay)
+    tol = F.expr(f"INTERVAL {tolerance_seconds} SECONDS")
+    cond = (
+        (F.col("user_id") == F.col("user_id_b"))
+        & (F.col("ts_b") >= F.col("ts_a") - tol)
+        & (F.col("ts_b") <= F.col("ts_a") + tol)
+    )
+    if left_type is None and right_type is None:
+        cond = cond & (F.col("id_a") < F.col("id_b"))
+    gap = F.abs(F.unix_millis("ts_a") - F.unix_millis("ts_b"))
+    if how != "inner":  # outer rows carry NULL match columns
+        gap = F.when(F.col("id_b").isNotNull(), gap)
+    pairs = a.join(b, cond, how).select(
+        "user_id", "id_a", "id_b", gap.alias("gap_ms")
+    )
+    # INNER joins emit every pair in the data batch where its second
+    # side arrives — the trailing no-data batch only evicts buffered
+    # state (output-identical without it; measured ~0.9 s of a ~2.5 s
+    # bounded replay).  OUTER joins EMIT null-matched rows from that
+    # batch when the watermark passes their horizon — they keep it.
+    _replay(
+        spark,
+        pairs.writeStream.outputMode("append").format("parquet").option(
+            "path", out_dir
+        ),
+        checkpoint_dir,
+        state_partitions=state_partitions,
+        state_store=state_store,
+        skip_no_data=how == "inner",
+    )
+    return spark.read.parquet(out_dir)
 
 
 def run_streaming_event_pairs_left(
@@ -3656,8 +3469,6 @@ def run_streaming_event_pairs_left(
     append mode means a plain distributed parquet sink is exact.  At
     100 TB this is impressions-without-clicks over two firehoses — the
     outer variant is what funnel loss analysis actually needs."""
-    import tempfile
-
     return run_streaming_event_pairs(
         spark,
         events_path,
@@ -3666,8 +3477,7 @@ def run_streaming_event_pairs_left(
         watermark_delay=watermark_delay,
         left_type=left_type,
         right_type=right_type,
-        checkpoint_dir=checkpoint_dir
-        or tempfile.mkdtemp(prefix="sss_ckpt_ssjl_"),
+        checkpoint_dir=checkpoint_dir,
         state_partitions=state_partitions,
         state_store=state_store,
         max_files_per_trigger=max_files_per_trigger,
@@ -3695,47 +3505,37 @@ def run_streaming_enriched_counts(
     of the stream, no state for the join itself; only the downstream
     aggregate keeps (groups) state.  The canonical 100 TB form for
     firehose × slowly-changing-dim enrichment."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_enrich_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream_df = stream_events_source(
-            spark, events_path, max_files_per_trigger=max_files_per_trigger
+    stem = _output_stem(checkpoint_dir, "sss_enrich_")
+    stream_df = stream_events_source(
+        spark, events_path, max_files_per_trigger=max_files_per_trigger
+    )
+    enriched = stream_df.join(
+        F.broadcast(dim.select(dim_key, dim_col)),
+        stream_df["user_id"] == F.col(dim_key),
+        "inner",
+    )
+    counts = (
+        enriched.groupBy(dim_col, "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
         )
-        enriched = stream_df.join(
-            F.broadcast(dim.select(dim_key, dim_col)),
-            stream_df["user_id"] == F.col(dim_key),
-            "inner",
+        .withColumn(
+            "grp_key", F.concat_ws("|", F.col(dim_col), F.col("event_type"))
         )
-        counts = (
-            enriched.groupBy(dim_col, "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum("value"), 2).alias("sum_value"),
-            )
-            .withColumn(
-                "grp_key", F.concat_ws("|", F.col(dim_col), F.col("event_type"))
-            )
-        )
-        sink = ParquetSnapshotSink(
-            spark, "StreamingEnriched", "grp_key", path=f"{checkpoint_dir}_snapshot"
-        )
-        q = (
-            counts.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_die(q)
-        return sink.query().drop("grp_key")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    )
+    sink = ParquetSnapshotSink(
+        spark, "StreamingEnriched", "grp_key", path=f"{stem}_snapshot"
+    )
+    _replay(
+        spark,
+        counts.writeStream.outputMode("update").foreachBatch(sink),
+        checkpoint_dir,
+        state_partitions=state_partitions,
+    )
+    return sink.query().drop("grp_key")
 
 
 def run_streaming_tumbling_counts(
@@ -3752,29 +3552,18 @@ def run_streaming_tumbling_counts(
 
     The same graph runs unmodified against an unbounded source; there a
     ``withWatermark`` upstream bounds window state."""
-    import tempfile
-
     from stateful_spark_streaming_spark.operators.windows import tumbling_counts
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="sss_ckpt_win_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        stream_df = stream_events_source(spark, events_path)
-        windowed = tumbling_counts(stream_df, width=width)
-        sink = ParquetSnapshotSink(
-            spark, "StreamingTumbling", "bucket_ms",
-            path=f"{checkpoint_dir}_snapshot",
-        )
-        q = (
-            windowed.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_die(q)
-        return sink.query()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    stem = _output_stem(checkpoint_dir, "sss_win_")
+    stream_df = stream_events_source(spark, events_path)
+    windowed = tumbling_counts(stream_df, width=width)
+    sink = ParquetSnapshotSink(
+        spark, "StreamingTumbling", "bucket_ms", path=f"{stem}_snapshot"
+    )
+    _replay(
+        spark,
+        windowed.writeStream.outputMode("update").foreachBatch(sink),
+        checkpoint_dir,
+        state_partitions=state_partitions,
+    )
+    return sink.query()

@@ -1,6 +1,10 @@
 from __future__ import annotations
 
+import json
+import threading
+
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 from stateful_spark_streaming_spark.session import get_spark
 
@@ -23,6 +27,60 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+class ProgressLog(StreamingQueryListener):
+    """Collects the ``StreamingQueryProgress`` records of every stream
+    started while it is registered, one list of progress dicts (the
+    record's JSON form) per run, in start order.  ``on_progress``, when
+    set, is called with each progress event on the listener thread."""
+
+    def __init__(self):
+        self._cv = threading.Condition()
+        self._runs: dict[str, list[dict]] = {}
+        self._done: set[str] = set()
+        self.on_progress = None
+
+    def onQueryStarted(self, event):
+        with self._cv:
+            self._runs[str(event.runId)] = []
+
+    def onQueryProgress(self, event):
+        if self.on_progress is not None:
+            self.on_progress(event.progress)
+        with self._cv:
+            run = self._runs.get(str(event.progress.runId))
+            if run is not None:
+                run.append(json.loads(event.progress.json))
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        with self._cv:
+            self._done.add(str(event.runId))
+            self._cv.notify_all()
+
+    def runs(self, timeout: float = 60.0) -> list[list[dict]]:
+        """Every run's progress list, once all of them have terminated
+        (progress events arrive asynchronously)."""
+        with self._cv:
+            assert self._cv.wait_for(
+                lambda: set(self._runs) <= self._done, timeout
+            ), "a stream started under the listener did not terminate"
+            return list(self._runs.values())
+
+    def last(self) -> list[dict]:
+        return self.runs()[-1]
+
+
+@pytest.fixture
+def progress(spark):
+    """Per-test ``ProgressLog`` registered on the session's streams."""
+    log = ProgressLog()
+    spark.streams.addListener(log)
+    yield log
+    spark.streams.removeListener(log)
 
 
 def ref_interleave(a: int, b: int, bits: int = 10) -> int:

@@ -1,15 +1,24 @@
-"""r15 streaming replay-floor optimizations — output-equivalence pins.
+"""Streaming replay-floor optimizations — output-equivalence pins.
 
-Three mechanisms cut the per-replay fixed cost (OPTIMIZATION_r15.md):
+Three mechanisms cut the per-replay fixed cost; the pins below are their
+evidence:
 
 1. ``ParquetSnapshotSink`` registers its merge-on-read temp view ON READ
    (``query()``/``show``), not after every micro-batch — the per-trigger
    registration re-listed the log/base dirs and rebuilt the merged plan
-   for no consumer.
-2. ``_without_no_data_batches``: replays whose OUTPUT provably does not
+   for no consumer (``test_snapshot_sink_registers_on_read_not_per_batch``,
+   ``test_console_sink_still_registers_per_batch``).
+2. ``_replay(skip_no_data=True)``: replays whose OUTPUT provably does not
    depend on the trailing no-data micro-batch (append dedup, INNER
    stream-stream joins) skip it; the eviction-only batch cost a full
-   trigger cycle per replay.
+   trigger cycle per replay.  Each pin runs the same feed once as the
+   runner does and once with the harness forced to keep the no-data
+   batch, asserts from the progress records that the second run really
+   ran one more (empty) batch, and asserts identical rows
+   (``test_streaming_dedup_output_identical_without_no_data_batch``,
+   ``test_inner_event_pairs_output_identical_without_no_data_batch``);
+   the outer join must keep the batch
+   (``test_left_outer_event_pairs_keeps_no_data_batch``).
 3. The bucketed-merge gate query self-sizes ``n_buckets`` from table
    bytes (``"auto"``); the scoped bucket-swap coverage it used to force
    with n_buckets=128 lives in
@@ -25,6 +34,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
+from stateful_spark_streaming_spark.streaming import pipeline as P
 from tests.conftest import land_batches
 
 EVENT_COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
@@ -77,6 +87,19 @@ def test_console_sink_still_registers_per_batch(spark, tmp_path, capsys):
     assert "========= R15ConsoleSnap" in out and "x" in out
 
 
+def _keep_no_data_batch(monkeypatch):
+    """Force every harness replay to run the trailing no-data batch."""
+    real = P._replay
+    monkeypatch.setattr(
+        P, "_replay", lambda *a, **kw: real(*a, **{**kw, "skip_no_data": False})
+    )
+
+
+def _batches(runs):
+    """(batch id, input rows) per micro-batch of one run's progress."""
+    return [(p["batchId"], p["numInputRows"]) for p in runs]
+
+
 def _dedup_feed(spark, tmp_path, name):
     return land_batches(
         spark,
@@ -90,40 +113,38 @@ def _dedup_feed(spark, tmp_path, name):
     )
 
 
-def test_streaming_dedup_output_identical_without_no_data_batch(spark, tmp_path):
+def test_streaming_dedup_output_identical_without_no_data_batch(
+    spark, tmp_path, progress, monkeypatch
+):
     """The no-data-batch skip is output-invariant for append-mode
-    dropDuplicatesWithinWatermark: same feed, flag forced ON vs the
-    runner's OFF → identical rows.  (Retained rows are emitted in the
-    data batch that first carries them; the trailing batch only evicts
-    state.)"""
-    from stateful_spark_streaming_spark.streaming.pipeline import (
-        _NO_DATA_CONF,
-        run_streaming_dedup,
-    )
-
+    dropDuplicatesWithinWatermark: same feed, the runner's skip vs a run
+    that really executes the trailing no-data batch → identical rows.
+    (Retained rows are emitted in the data batch that first carries them;
+    the trailing batch only evicts state.)"""
     src = _dedup_feed(spark, tmp_path, "ev_off")
-    out_off = run_streaming_dedup(
+    out_off = P.run_streaming_dedup(
         spark, src, checkpoint_dir=str(tmp_path / "ck_off"),
         max_files_per_trigger=1,
     )
     rows_off = sorted((r.user_id, r.event_type) for r in out_off.collect())
+    batches_off = _batches(progress.last())
 
-    # force the engine default back ON around the runner: its internal
-    # opt-out uses a snapshot/restore context, so pre-setting "true"
-    # must be restored afterwards too
-    spark.conf.set(_NO_DATA_CONF, "true")
-    try:
-        src2 = _dedup_feed(spark, tmp_path, "ev_on")
-        out_on = run_streaming_dedup(
-            spark, src2, checkpoint_dir=str(tmp_path / "ck_on"),
-            max_files_per_trigger=1,
-        )
-        rows_on = sorted((r.user_id, r.event_type) for r in out_on.collect())
-        assert spark.conf.get(_NO_DATA_CONF) == "true", (
-            "runner leaked its no-data-batch override into the session"
-        )
-    finally:
-        spark.conf.unset(_NO_DATA_CONF)
+    _keep_no_data_batch(monkeypatch)
+    src2 = _dedup_feed(spark, tmp_path, "ev_on")
+    out_on = P.run_streaming_dedup(
+        spark, src2, checkpoint_dir=str(tmp_path / "ck_on"),
+        max_files_per_trigger=1,
+    )
+    rows_on = sorted((r.user_id, r.event_type) for r in out_on.collect())
+    batches_on = _batches(progress.last())
+
+    assert batches_off == [(0, 3), (1, 2)], "skip arm ran a no-data batch"
+    assert batches_on == batches_off + [(2, 0)], (
+        "the forced arm did not run the trailing no-data batch"
+    )
+    assert spark.conf.get(P._NO_DATA_CONF, None) is None, (
+        "runner leaked its no-data-batch override into the session"
+    )
     assert rows_off == rows_on == [(1, "a"), (1, "b"), (2, "a"), (3, "c")]
 
 
@@ -143,35 +164,37 @@ def _pairs_feed(spark, tmp_path, name):
     )
 
 
-def test_inner_event_pairs_output_identical_without_no_data_batch(spark, tmp_path):
+def test_inner_event_pairs_output_identical_without_no_data_batch(
+    spark, tmp_path, progress, monkeypatch
+):
     """INNER stream-stream join: pairs are emitted in the data batch where
     the second side arrives — the trailing eviction batch adds nothing.
-    Same feed with the engine default ON vs the runner's OFF → identical
-    pair sets, including the cross-batch match."""
-    from stateful_spark_streaming_spark.streaming.pipeline import (
-        _NO_DATA_CONF,
-        run_streaming_event_pairs,
-    )
-
+    Same feed, the runner's skip vs a run that really executes the
+    no-data batch → identical pair sets, including the cross-batch
+    match."""
     cols = ["user_id", "id_a", "id_b", "gap_ms"]
     src = _pairs_feed(spark, tmp_path, "pv_off")
-    off = run_streaming_event_pairs(
+    off = P.run_streaming_event_pairs(
         spark, src, checkpoint_dir=str(tmp_path / "pck_off"),
         max_files_per_trigger=1,
     )
     rows_off = sorted(tuple(r) for r in off.select(*cols).collect())
+    batches_off = _batches(progress.last())
 
-    spark.conf.set(_NO_DATA_CONF, "true")
-    try:
-        src2 = _pairs_feed(spark, tmp_path, "pv_on")
-        on = run_streaming_event_pairs(
-            spark, src2, checkpoint_dir=str(tmp_path / "pck_on"),
-            max_files_per_trigger=1,
-        )
-        rows_on = sorted(tuple(r) for r in on.select(*cols).collect())
-        assert spark.conf.get(_NO_DATA_CONF) == "true"
-    finally:
-        spark.conf.unset(_NO_DATA_CONF)
+    _keep_no_data_batch(monkeypatch)
+    src2 = _pairs_feed(spark, tmp_path, "pv_on")
+    on = P.run_streaming_event_pairs(
+        spark, src2, checkpoint_dir=str(tmp_path / "pck_on"),
+        max_files_per_trigger=1,
+    )
+    rows_on = sorted(tuple(r) for r in on.select(*cols).collect())
+    batches_on = _batches(progress.last())
+
+    # both join sides read every file: 2 × rows per data batch
+    assert batches_off == [(0, 6), (1, 4)], "skip arm ran a no-data batch"
+    assert batches_on == batches_off + [(2, 0)], (
+        "the forced arm did not run the trailing no-data batch"
+    )
     assert rows_off == rows_on
     # the cross-batch pair (user 2: 12×13, 360 s apart) must be present —
     # proof the state store, not single-batch locality, produced the match

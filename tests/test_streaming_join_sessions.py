@@ -60,7 +60,7 @@ def _norm(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
-def test_stream_stream_join_matches_batch_across_batches(spark, sf_dir, split_events_dir, tmp_path):
+def test_stream_stream_join_matches_batch_across_batches(spark, sf_dir, split_events_dir, tmp_path, progress):
     got = run_streaming_event_pairs(
         spark,
         split_events_dir,
@@ -72,8 +72,7 @@ def test_stream_stream_join_matches_batch_across_batches(spark, sf_dir, split_ev
     cols = ["user_id", "id_a", "id_b", "gap_ms"]
     g, w = set(_norm(got, cols)), set(_norm(want, cols))
     if g != w:
-        from stateful_spark_streaming_spark.streaming import pipeline as _P
-        for p in _P._last_join_progress:
+        for p in progress.last():
             d = p if isinstance(p, dict) else p.asDict() if hasattr(p, "asDict") else {}
             print("PROGRESS", d.get("batchId"), d.get("eventTime", {}), [ (s.get("description","")[:40], s.get("numInputRows")) for s in d.get("sources", []) ], d.get("sink", {}).get("numOutputRows"))
     assert g == w, f"missing={sorted(w - g)} extra={sorted(g - w)}"
@@ -121,14 +120,13 @@ def test_stream_static_enrichment_matches_batch_across_batches(spark, sf_dir, sp
     assert len(_norm(got, cols)) > 0
 
 
-def test_streaming_sessions_append_finalized_and_bounded(spark, sf_dir, split_events_dir, tmp_path):
+def test_streaming_sessions_append_finalized_and_bounded(spark, sf_dir, split_events_dir, tmp_path, progress):
     """APPEND-mode watermarked sessions across 3 micro-batches: the output
     must equal the batch sessions whose end falls before the final
     watermark (max event time - 1h), each emitted exactly ONCE; and the
     state store must hold strictly fewer sessions than complete mode would
     retain (finalized sessions are evicted) — the bounded-state contract
     complete mode can't give (VERDICT r3 #3)."""
-    from stateful_spark_streaming_spark.streaming import pipeline as _P
     from stateful_spark_streaming_spark.streaming.pipeline import (
         run_streaming_session_windows_append,
     )
@@ -159,7 +157,7 @@ def test_streaming_sessions_append_finalized_and_bounded(spark, sf_dir, split_ev
     # the watermark hasn't closed — strictly fewer than the total complete
     # mode would retain (evidence eviction actually happened)
     last = None
-    for p in _P._last_session_append_progress:
+    for p in progress.last():
         d = p if isinstance(p, dict) else p.asDict() if hasattr(p, "asDict") else {}
         ops = d.get("stateOperators") or []
         if ops:
@@ -209,7 +207,7 @@ def test_streaming_sessions_append_restart_merges_state(spark, sf_dir, split_eve
     assert len(_norm(got, cols)) > 0
 
 
-def test_stream_stream_join_state_is_watermark_bounded(spark, sf_dir, split_events_dir, tmp_path):
+def test_stream_stream_join_state_is_watermark_bounded(spark, sf_dir, split_events_dir, tmp_path, progress):
     """The 100 TB property of the stream-stream join (measured at sf1 in
     SCALE.md: 1,460 retained rows/side vs ~600k input events), pinned at
     test SF: after the 3-batch replay the state store retains FEWER rows
@@ -217,8 +215,6 @@ def test_stream_stream_join_state_is_watermark_bounded(spark, sf_dir, split_even
     both-side watermarks let Spark evict buffered rows once the other
     side's watermark passes their join horizon.  Without eviction the
     retained total would be 2x the input (both sides buffer everything)."""
-    from stateful_spark_streaming_spark.streaming import pipeline as _P
-
     got = run_streaming_event_pairs(
         spark,
         split_events_dir,
@@ -228,7 +224,7 @@ def test_stream_stream_join_state_is_watermark_bounded(spark, sf_dir, split_even
     assert got.count() > 0  # non-vacuous: the join did real work
     n_events = load_table(spark, sf_dir, "events").count()
     last = None
-    for p in _P._last_join_progress:
+    for p in progress.last():
         d = p if isinstance(p, dict) else p.asDict() if hasattr(p, "asDict") else {}
         ops = d.get("stateOperators") or []
         if ops:

@@ -80,17 +80,6 @@ def test_plan_is_for_upcoming_round():
     )
 
 
-def test_checkpoint_pair_adjacent_if_windowed():
-    """state_store_snapshot reads the checkpoint streaming_track_snapshot
-    writes in the same driver run; if either is in the gate window, both
-    must be, adjacent and producer-first."""
-    names = _catalog_names()[:50]
-    prod, cons = "streaming_track_snapshot", "state_store_snapshot"
-    if prod in names or cons in names:
-        assert prod in names and cons in names
-        assert names.index(cons) == names.index(prod) + 1
-
-
 def _skip_if_post_gate():
     """After the driver records round N, a tree whose plan still targets
     round N is in the DESIGNED post-gate state: exactly ONE test —

@@ -22,9 +22,6 @@ oldest-green fill — and writes it to
 imports as its leading block.  The round-8 verdict (#5) asked for exactly
 this: the window list is emitted BY the tool INTO a checked-in file, so
 the catalog's provenance comment can never drift from the data again.
-One hard constraint is preserved: ``state_store_snapshot`` reads the
-checkpoint ``streaming_track_snapshot`` produces in the same driver run,
-so if either enters the window, the pair is placed adjacently.
 
 The default (audit) mode also verifies the checked-in plan: if the plan's
 round is behind ``latest_round + 1`` the plan is stale (a new round was
@@ -46,10 +43,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 WINDOW = 50
-
-# state_store_snapshot reads the checkpoint streaming_track_snapshot writes
-# during the SAME driver run — if either is windowed, both are, adjacent.
-_ADJACENT = ("streaming_track_snapshot", "state_store_snapshot")
 
 PLAN_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -95,21 +88,6 @@ def _collect(repo: str):
     return newest_green, newest_any, latest_round
 
 
-def _apply_adjacency(window: list[str]) -> list[str]:
-    """If either of the checkpoint-coupled pair is in the window, include
-    both, adjacent and in dependency order, without growing past WINDOW
-    (the lowest-urgency fill entry is dropped if the pair pulls one in)."""
-    prod, cons = _ADJACENT
-    if prod not in window and cons not in window:
-        return window
-    rest = [q for q in window if q not in _ADJACENT]
-    # the pair goes at the earlier of the two original positions, clamped
-    # so both fit inside the window after truncation
-    pos = min(window.index(q) for q in _ADJACENT if q in window)
-    pos = min(pos, len(rest), WINDOW - 2)
-    return (rest[:pos] + [prod, cons] + rest[pos:])[:WINDOW]
-
-
 def plan(max_stale: int, pins: list[str]) -> int:
     from stateful_spark_streaming_spark.queries_catalog import QUERIES
 
@@ -137,7 +115,6 @@ def plan(max_stale: int, pins: list[str]) -> int:
             window.append(q)
         if len(window) == WINDOW:
             break
-    window = _apply_adjacency(window)
 
     doc = {
         "round": nxt,
