@@ -61,6 +61,39 @@ def _foreign_spark_jvms() -> list[int]:
     return pids
 
 
+def prewarm(spark, sf_dir: str) -> None:
+    """Warm the JVM, parquet footers and the Arrow python-worker pool once,
+    so one-time process spin-up isn't attributed to whichever query runs
+    first.
+
+    Touches every table once (footers + page cache; ≤ 11 MB each at sf0.1)
+    so first-scan IO lands in the bench's cold_total, not on the head of the
+    query order. Through load_table, NOT a raw read: events.parquet carries
+    TIMESTAMP(NANOS), and on builds where that only scans under the legacy
+    nanosAsLong conf a raw read here would crash before any loader had set
+    it (the same env drift plan_audit guards). The chained mapInPandas warms
+    a SECOND worker tier: each Python stage in a task pipeline gets its own
+    worker pool, and spawning ~32 extra interpreters costs seconds that
+    belong to process startup, not a query."""
+    from stateful_spark_streaming_spark.sources.tables import load_table
+
+    for t in (
+        "region nation customer supplier part orders lineitem events "
+        "documents embeddings"
+    ).split():
+        load_table(spark, sf_dir, t).count()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    (
+        spark.range(256)
+        .repartition(cpus)
+        .mapInPandas(lambda it: it, "id long")
+        .mapInPandas(lambda it: it, "id long")
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+
+
 def main() -> None:
     t_cold0 = time.perf_counter()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -86,35 +119,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 
-    # warm the JVM + parquet footers + the Arrow python-worker pool once, so
-    # one-time process spin-up isn't attributed to whichever query runs first.
-    # The chained mapInPandas warms a SECOND worker tier: each Python stage in
-    # a task pipeline gets its own worker pool, and spawning ~32 extra
-    # interpreters costs seconds that belong to process startup, not a query.
-    # touch every table once (footers + page cache; ≤ 11 MB each at sf0.1)
-    # so first-scan IO lands in cold_total, not on whichever query now runs
-    # first — the r4 rotation put heavy queries at the head of the order.
-    # Through load_table, NOT a raw read: events.parquet carries
-    # TIMESTAMP(NANOS), and on builds where that only scans under the
-    # legacy nanosAsLong conf a raw read here would crash the whole bench
-    # before any loader had set it (the same env drift plan_audit guards).
-    from stateful_spark_streaming_spark.sources.tables import load_table
-
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        load_table(spark, sf_dir, t).count()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    (
-        spark.range(256)
-        .repartition(cpus)
-        .mapInPandas(lambda it: it, "id long")
-        .mapInPandas(lambda it: it, "id long")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
+    prewarm(spark, sf_dir)
 
     # untimed steady-state warmup: run every plan once at the smallest SF.
     # Codegen'd classes are cached by generated source, which is identical

@@ -38,7 +38,6 @@ from stateful_spark_streaming_spark.streaming.track_state import (  # noqa: F401
 )
 from stateful_spark_streaming_spark.streaming.pipeline import (  # noqa: F401
     ParquetSnapshotSink,
-    SnapshotView,
     flight_socket_pipeline,
     multi_state_pipeline,
     run_snapshot_query,
@@ -46,6 +45,5 @@ from stateful_spark_streaming_spark.streaming.pipeline import (  # noqa: F401
     run_streaming_enriched_counts,
     run_streaming_event_pairs,
     run_streaming_session_windows,
-    run_streaming_sliding_counts,
     run_streaming_tumbling_counts,
 )

@@ -53,28 +53,6 @@ def project_web_mercator(
     )
 
 
-def inverse_web_mercator_lon(x: Column) -> Column:
-    """lon = degrees(x / R) — exact inverse of web_mercator_x."""
-    return F.degrees(x / F.lit(WEB_MERCATOR_R))
-
-
-def inverse_web_mercator_lat(y: Column) -> Column:
-    """lat = degrees(2·atan(exp(y/R)) − π/2) — exact inverse of
-    web_mercator_y (Gudermannian function)."""
-    return F.degrees(
-        F.lit(2.0) * F.atan(F.exp(y / F.lit(WEB_MERCATOR_R))) - F.lit(math.pi / 2.0)
-    )
-
-
-def unproject_web_mercator(
-    df: DataFrame, geometry: str = "geometry"
-) -> DataFrame:
-    """G1 inverse: Web-Mercator geometry struct → (lon, lat) columns."""
-    return df.withColumn(
-        "lon_back", inverse_web_mercator_lon(F.col(f"{geometry}.x"))
-    ).withColumn("lat_back", inverse_web_mercator_lat(F.col(f"{geometry}.y")))
-
-
 def make_point(df: DataFrame, lon: str = "longitude", lat: str = "latitude") -> DataFrame:
     """S4: (lon, lat) → point struct (reference Point(x, y) construct)."""
     return df.withColumn("geometry", geometry_col(lon, lat))

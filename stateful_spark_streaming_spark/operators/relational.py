@@ -218,46 +218,6 @@ def events_json_extract(events: DataFrame) -> DataFrame:
     )
 
 
-def salted_topn(
-    df: DataFrame,
-    key: str,
-    order_col: str,
-    n: int = 3,
-    salt_buckets: int = 16,
-    salt_source: str | None = None,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Skew-resistant per-key top-N: two-phase ranking.
-
-    A plain ``row_number() over (partition by key)`` funnels EVERY row of a
-    hot key through one task — the classic skew wall.  Phase 1 salts the
-    partition key with ``hash(salt_source) % salt_buckets`` and keeps the
-    local top-N per (key, salt): each hot key's rows spread over
-    ``salt_buckets`` tasks and at most ``n × salt_buckets`` rows per key
-    survive.  Phase 2 ranks those survivors per key — bounded input, no
-    skew.  Results are identical to the single-phase form (top-N is
-    salting-decomposable, like max/min/sum).
-
-    ``salt_source`` defaults to ``order_col`` — any column with per-row
-    variety works; ``tiebreak`` makes ranking deterministic under ties.
-    """
-    order = [F.col(order_col).desc()]
-    if tiebreak:
-        order.append(F.col(tiebreak).asc())
-    salt = F.pmod(F.xxhash64(F.col(salt_source or order_col)), F.lit(salt_buckets))
-    w_local = Window.partitionBy(F.col(key), salt).orderBy(*order)
-    survivors = (
-        df.withColumn("__lrk", F.row_number().over(w_local))
-        .filter(F.col("__lrk") <= n)
-        .drop("__lrk")
-    )
-    w_final = Window.partitionBy(key).orderBy(*order)
-    return (
-        survivors.withColumn("rank_in_key", F.row_number().over(w_final))
-        .filter(F.col("rank_in_key") <= n)
-    )
-
-
 def approx_distinct_stats(
     df: DataFrame, key: str, value_col: str, count_col: str, rsd: float = 0.02
 ) -> DataFrame:
@@ -324,8 +284,8 @@ def kmv_bottom_hashes(
     the bottom-k is then TWO-LEVEL (local row_number per (key, salt) with
     salt = hash mod ``salt_buckets``, then global per key over at most
     ``salt_buckets * k`` survivors) so no single task ever sorts a hot
-    key's full distinct set — the ``salted_topn`` pattern with the order
-    inverted.  Exact: every global bottom-k hash is in its salt bucket's
+    key's full distinct set (two-phase salted top-N with the order
+    inverted).  Exact: every global bottom-k hash is in its salt bucket's
     bottom-k, so the composition equals a single global pass.  Never
     ``collect_set`` of all distincts (unbounded per-group state).
     """
@@ -425,27 +385,6 @@ def revenue_cube(orders: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders"),
         F.grouping("order_year").cast("int").alias("g_year"),
         F.grouping("o_orderstatus").cast("int").alias("g_status"),
-    )
-
-
-def fuzzy_part_match(
-    part: DataFrame, probes: list[str], max_dist: int = 2
-) -> DataFrame:
-    """Fuzzy string lookup: edit-distance match of a tiny probe list
-    against every part name.  The probe list rides along as an exploded
-    array LITERAL — no join operator at all, so the whole thing is one
-    codegen'd Generate+Filter pass over the big side (a broadcast
-    nested-loop join computes the same thing row-at-a-time outside
-    codegen, ~10x slower).  The scale knob is |probes|; the big side
-    streams with zero shuffle."""
-    probe_arr = F.array(*[F.lit(p) for p in probes])
-    return (
-        part.withColumn("probe", F.explode(probe_arr))
-        .withColumn(
-            "edit_dist", F.levenshtein(F.col("p_name"), F.col("probe")).cast("int")
-        )
-        .filter(F.col("edit_dist") <= max_dist)
-        .select("p_partkey", "p_name", "probe", "edit_dist")
     )
 
 

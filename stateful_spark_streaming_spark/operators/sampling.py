@@ -339,8 +339,8 @@ def sample_n_per_group(
 
     Scale shape: ONE shuffle (window partitionBy group).  A pathologically
     hot group funnels through one task here; if that bites, the same
-    two-phase salted decomposition as ``salted_topn`` applies verbatim
-    (rank is over a hash, so local top-n per salt then global top-n is
+    two-phase salted decomposition applies verbatim (rank is over a
+    hash, so local top-n per (group, salt) then global top-n per group is
     exact)."""
     h = F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string")))
     w = Window.partitionBy(group_col).orderBy(h.asc(), F.col(id_col).asc())

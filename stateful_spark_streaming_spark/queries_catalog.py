@@ -35,35 +35,6 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-#: Queries RETIRED from the driver gate (r12 verdict #2: at 148 queries vs
-#: the 150-entry rotation capacity, one mis-rotated round strands evidence;
-#: these entries' ORACLE evidence was subsumed by a sibling that stays).
-#: Retired ≠ deleted: the query function, its oracle, and its plan-audit
-#: spec all remain — `tests/test_retired_query_pins.py` runs each retired
-#: pair through the SAME driver-style canonicalized hash compare the gate
-#: uses (via tools/check_oracle.canon_pandas), and tools/plan_audit.py
-#: still audits their physical plans — so the evidence class is preserved
-#: in pytest while the gate window regains real headroom.
-RETIRED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-RETIRED_ORACLES: dict[str, str] = {}
-
-
-def retired_query(name: str, oracle: str | None = None, subsumed_by: str = ""):
-    """Register a catalog-retired query: kept callable and oracle-paired
-    for pytest + plan audit, but NOT in ``QUERIES`` (consumes no gate
-    rotation capacity).  ``subsumed_by`` names the surviving sibling(s)
-    whose gate evidence covers this entry's machinery."""
-
-    def deco(fn):
-        RETIRED_QUERIES[name] = fn
-        if oracle is not None:
-            RETIRED_ORACLES[name] = oracle
-        fn.__retired_subsumed_by__ = subsumed_by
-        return fn
-
-    return deco
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
@@ -481,41 +452,6 @@ def q_priority_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return REL.priority_top_orders(_t(spark, sf_dir, "orders"))
 
 
-@retired_query(
-    "priority_top_orders_salted",
-    subsumed_by="priority_top_orders (identical oracle; salted-decomposition "
-    "exactness pinned by test_salted_topn_equals_plain_topn_under_skew)",
-    oracle="""
-    SELECT o_orderpriority, rank_in_priority, o_orderkey, o_totalprice
-    FROM (
-      SELECT o_orderpriority, o_orderkey, o_totalprice,
-             row_number() OVER (PARTITION BY o_orderpriority
-                                ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank_in_priority
-      FROM orders)
-    WHERE rank_in_priority <= 3
-    """,
-)
-def q_priority_top_orders_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SKEW-RESISTANT form of priority_top_orders: two-phase salted
-    top-N (local top-N per salt bucket, then global) — same oracle as the
-    single-phase query, proving the decomposition is exact while a hot key
-    spreads over salt_buckets tasks instead of one."""
-    out = REL.salted_topn(
-        _t(spark, sf_dir, "orders"),
-        key="o_orderpriority",
-        order_col="o_totalprice",
-        n=3,
-        salt_buckets=16,
-        tiebreak="o_orderkey",
-    )
-    return out.select(
-        "o_orderpriority",
-        F.col("rank_in_key").alias("rank_in_priority"),
-        "o_orderkey",
-        "o_totalprice",
-    )
-
-
 # approx_distinct_stats RETIRED as a catalog query in r11 (verdict #5):
 # it and distinct_sketch_stats answered the same question rows-only; the
 # MERGEABLE DataSketches form below is the one with the streaming twin
@@ -730,29 +666,6 @@ def q_revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets with grouping() markers (SURVEY §2.7: the
     reference has no grouping-set aggregation at all)."""
     return REL.revenue_cube(_t(spark, sf_dir, "orders"))
-
-
-_FUZZY_PROBES = ["red widgit", "small ringer", "blue bolt"]
-
-
-@retired_query(
-    "fuzzy_part_match",
-    subsumed_by="similar_part_names (the lossless token-bucket sibling covers "
-    "the fuzzy-match surface; edit-distance kernel pinned by "
-    "test_fuzzy_part_match_known_distances)",
-    oracle="""
-    SELECT p_partkey, p_name, probe,
-           CAST(levenshtein(p_name, probe) AS INT) AS edit_dist
-    FROM part, (VALUES ('red widgit'), ('small ringer'), ('blue bolt')) AS probes(probe)
-    WHERE levenshtein(p_name, probe) <= 2
-    """,
-)
-def q_fuzzy_part_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance fuzzy lookup: tiny probe list broadcast over the part
-    scan — broadcast nested-loop, map-only on the big side."""
-    return REL.fuzzy_part_match(
-        _t(spark, sf_dir, "part"), _FUZZY_PROBES, max_dist=2
-    )
 
 
 @query(
@@ -990,36 +903,6 @@ def q_streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, _os.path.join(sf_dir, "events.parquet")
     )
     return out.select("bucket_ms", "n_events", "sum_value", "avg_value")
-
-
-@retired_query(
-    "streaming_sliding_counts",
-    subsumed_by="streaming_tumbling_counts (same streaming runner/sink "
-    "machinery) + sliding_window_counts (batch overlap semantics)",
-    oracle="""
-    SELECT epoch_ms(time_bucket(INTERVAL '6 hours', ts) - k * INTERVAL '6 hours') AS window_start_ms,
-           epoch_ms(time_bucket(INTERVAL '6 hours', ts) - k * INTERVAL '6 hours' + INTERVAL '1 day') AS window_end_ms,
-           count(*) AS n_events,
-           round(sum(value), 2) AS sum_value
-    FROM events, range(4) t(k)
-    GROUP BY 1, 2
-    """,
-)
-def q_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The STREAMING twin of sliding_window_counts: update-mode overlapping
-    windows through a real streaming query (availableNow), per-batch upsert
-    into the storage-backed snapshot sink keyed by window start, same
-    oracle as batch — single-pass ingest ≡ batch semantics."""
-    import os as _os
-
-    from stateful_spark_streaming_spark.streaming.pipeline import (
-        run_streaming_sliding_counts,
-    )
-
-    out = run_streaming_sliding_counts(
-        spark, _os.path.join(sf_dir, "events.parquet")
-    )
-    return out.select("window_start_ms", "window_end_ms", "n_events", "sum_value")
 
 
 @query(
@@ -1360,42 +1243,6 @@ def q_web_mercator(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@retired_query(
-    "web_mercator_roundtrip",
-    subsumed_by="web_mercator_projection (the reference-surface G1 item; the "
-    "inverse direction keeps its full oracle in the retired-pin test)",
-    oracle="""
-    SELECT event_id,
-           round(lon, 6) AS lon, round(lat, 6) AS lat,
-           round(degrees((6378137.0 * radians(lon)) / 6378137.0), 6) AS lon_back,
-           round(degrees(2 * atan(exp((6378137.0 * ln(tan(pi()/4 + radians(lat)/2)))
-                 / 6378137.0)) - pi()/2), 6) AS lat_back
-    FROM (
-      SELECT event_id,
-             (event_id % 360) - 180 + 0.25 AS lon,
-             (event_id % 170) - 85 + 0.5 AS lat
-      FROM events)
-    """,
-)
-def q_web_mercator_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G1 inverse: project → unproject recovers (lon, lat) to 6 dp — the
-    round-trip proves both directions of the projector."""
-    ev = _t(spark, sf_dir, "events")
-    pts = ev.select(
-        "event_id",
-        ((F.col("event_id") % 360) - 180 + 0.25).alias("lon"),
-        ((F.col("event_id") % 170) - 85 + 0.5).alias("lat"),
-    )
-    back = GEO.unproject_web_mercator(GEO.project_web_mercator(pts, "lon", "lat"))
-    return back.select(
-        "event_id",
-        F.round("lon", 6).alias("lon"),
-        F.round("lat", 6).alias("lat"),
-        F.round("lon_back", 6).alias("lon_back"),
-        F.round("lat_back", 6).alias("lat_back"),
-    )
-
-
 @query(
     "geometry_construct_null",
     oracle="""
@@ -1712,48 +1559,6 @@ def q_sample_n_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "doc_id", "source", F.col("sample_rank").cast("int").alias("sample_rank")
-    )
-
-
-@retired_query(
-    "pack_sequences",
-    subsumed_by="pack_sequences_emit (calls pack_sequences for its layout, so "
-    "the gate still executes the manifest machinery every round)",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id,
-             CAST(len({_TOKS_SQL}) AS INT) AS n_tokens,
-             md5('pack1' || CAST(doc_id AS VARCHAR)) AS hkey
-      FROM documents
-    ), placed AS (
-      SELECT doc_id, n_tokens, hkey,
-             CAST(('0x' || substring(hkey, 1, 8))::BIGINT % 8 AS INT) AS stream
-      FROM toks
-    ), offs AS (
-      SELECT doc_id, stream, n_tokens,
-             CAST(coalesce(sum(n_tokens) OVER (
-                 PARTITION BY stream ORDER BY hkey, doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-               AS start_offset
-      FROM placed
-    )
-    SELECT doc_id, stream, n_tokens, start_offset,
-           CAST(floor(start_offset / 2048) AS BIGINT) AS pack_id,
-           CAST(start_offset % 2048 AS INT) AS pack_offset
-    FROM offs
-    """,
-)
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-style sequence packing layout: concat streams cut every 2048
-    tokens; per doc its (stream, start_offset, pack_id, pack_offset)."""
-    from stateful_spark_streaming_spark.operators import text as _TXT
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "n_tokens", F.size(_TXT.tokens(F.col("text")))
-    )
-    out = SMP.pack_sequences(docs, tokens_col="n_tokens", seq_len=2048, n_streams=8)
-    return out.select(
-        "doc_id", "stream", "n_tokens", "start_offset", "pack_id", "pack_offset"
     )
 
 
@@ -3520,28 +3325,6 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TXT.bigram_logprob(_t(spark, sf_dir, "documents"))
 
 
-@retired_query(
-    "streaming_unigram_logprob",
-    oracle=_UNIGRAM_ORACLE,
-    subsumed_by="streaming_bigram_logprob (same run_streaming_lm_logprob "
-    "partial-fold machinery, order=2) + unigram_logprob (batch oracle)",
-)
-def q_streaming_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-time unigram-LM scoring — streaming twin of unigram_logprob
-    (same oracle): per-batch (doc, token, c) count partials appended by
-    foreachBatch, scored on read through the shared counts tail.  Exact
-    because a doc's tokens never straddle micro-batches."""
-    import os as _os
-
-    from stateful_spark_streaming_spark.streaming.pipeline import (
-        run_streaming_lm_logprob,
-    )
-
-    return run_streaming_lm_logprob(
-        spark, _os.path.join(sf_dir, "documents.parquet"), order=1
-    )
-
-
 @query("streaming_bigram_logprob", oracle=_BIGRAM_ORACLE)
 def q_streaming_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time bigram-LM scoring — streaming twin of bigram_logprob
@@ -3554,7 +3337,7 @@ def q_streaming_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return run_streaming_lm_logprob(
-        spark, _os.path.join(sf_dir, "documents.parquet"), order=2
+        spark, _os.path.join(sf_dir, "documents.parquet")
     )
 
 
@@ -3821,32 +3604,6 @@ def q_quality_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hist = ST.fixed_width_histogram(
         scored, F.col("quality_score"), ("source",), n_bins=20
-    )
-    return ST.histogram_quantiles(hist, ("source",))
-
-
-@retired_query(
-    "streaming_quality_quantiles",
-    oracle=ORACLES["quality_quantiles"],
-    subsumed_by="streaming_quality_histogram (the ONLY stream state it "
-    "maintains) + quality_quantiles (the histogram_quantiles read tail)",
-)
-def q_streaming_quality_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-time quantile tracking — streaming twin of quality_quantiles
-    (same oracle): the mergeable histogram is the ONLY state the stream
-    maintains (additive bin-count partials), and the quantiles derive on
-    read by running the same histogram_quantiles tail over the merged
-    log.  This is the whole point of the histogram family: exact
-    percentiles don't compose across micro-batches, exact bin counts do."""
-    import os as _os
-
-    from stateful_spark_streaming_spark.operators import stats as ST
-    from stateful_spark_streaming_spark.streaming.pipeline import (
-        run_streaming_quality_histogram,
-    )
-
-    hist = run_streaming_quality_histogram(
-        spark, _os.path.join(sf_dir, "documents.parquet")
     )
     return ST.histogram_quantiles(hist, ("source",))
 

@@ -3,7 +3,7 @@ from stateful_spark_streaming_spark.streaming.track_state import (  # noqa: F401
     track_state_stream,
 )
 from stateful_spark_streaming_spark.streaming.pipeline import (  # noqa: F401
-    SnapshotView,
+    ParquetSnapshotSink,
     flight_socket_pipeline,
     run_snapshot_query,
 )

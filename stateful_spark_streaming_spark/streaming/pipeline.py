@@ -15,19 +15,16 @@ Snapshot-parity decision (SURVEY §7 risk #1, decided here):
 ``applyInPandasWithState`` invokes only keys with new data.  We emit
 per-key snapshot rows on update and maintain the full table in the SINK.
 
-Two sinks, one contract:
-
-- ``ParquetSnapshotSink`` (default, scale path): foreachBatch APPENDS the
-  batch's updated-key rows — a distributed executor write, nothing touches
-  the driver — into a parquet upsert log stamped with the batch id.  The
-  all-keys view is merge-on-read (latest row per key by batch id), i.e.
-  Delta/Iceberg MERGE semantics expressed over plain parquet, and
-  ``compact()`` folds the log into a base table to bound read
-  amplification.  Driver memory is O(1); the snapshot survives restarts
-  because the log lives next to the checkpoint.
-- ``SnapshotView`` (demo parity): the reference displays the snapshot with
-  ``.show()`` (StreamWithStates.scala:36-53) — inherently driver-sized —
-  so the dict-upsert sink is kept for that interactive use case only.
+The sink is ``ParquetSnapshotSink``: foreachBatch APPENDS the batch's
+updated-key rows — a distributed executor write, nothing touches the
+driver — into a parquet upsert log stamped with the batch id.  The
+all-keys view is merge-on-read (latest row per key by batch id), i.e.
+Delta/Iceberg MERGE semantics expressed over plain parquet, and
+``compact()`` folds the log into a base table to bound read
+amplification.  Driver memory is O(1); the snapshot survives restarts
+because the log lives next to the checkpoint.  The reference's console
+display (``.show()``, StreamWithStates.scala:36-53) is ``show=True`` on
+the same sink.
 
 Replay harness contract: every ``run_*`` runner replays its source with
 an availableNow trigger through ``_replay``.  Spark captures a stream's
@@ -63,86 +60,6 @@ from stateful_spark_streaming_spark.streaming.track_state import (
     TrackStateConfig,
     track_state_stream,
 )
-
-
-class SnapshotView:
-    """foreachBatch sink: upsert each micro-batch's per-key snapshot rows
-    into a full snapshot table, register it as a SQL temp view, and
-    optionally run/print a query — the reference's showTempView
-    (StreamWithStates.scala:36-53) with working all-keys semantics.
-
-    DRIVER-SIDE BY DESIGN: this is the reference-parity console path (the
-    reference itself collects via ``.show()``) and holds every key's row in
-    driver memory — O(total keys), a scale-killer as a default.  Past
-    ``max_keys`` it warns once per crossing (``SSS_SNAPSHOT_STRICT=1`` in
-    the environment raises instead), pointing at ``ParquetSnapshotSink``,
-    the distributed all-keys path.  Below the bound, behavior is unchanged.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        view_name: str,
-        key: str,
-        sql: str | None = None,
-        show: bool = False,
-        max_keys: int = 100_000,
-    ):
-        self.spark = spark
-        self.view_name = view_name
-        self.key = key
-        self.sql = sql or f"select * from {view_name}"  # Q1 default
-        self.show = show
-        self.max_keys = max_keys
-        self._warned = False
-        self._rows: dict = {}
-        self._schema = None
-        self._lock = threading.Lock()
-        self.batches_seen = 0
-
-    def _check_bound(self) -> None:
-        if len(self._rows) <= self.max_keys or self._warned:
-            return
-        msg = (
-            f"SnapshotView '{self.view_name}' holds {len(self._rows)} keys "
-            f"(> max_keys={self.max_keys}) in DRIVER memory — this sink is "
-            "the reference-parity console path, not a scale path; switch to "
-            "ParquetSnapshotSink (distributed append log + merge-on-read)."
-        )
-        if os.environ.get("SSS_SNAPSHOT_STRICT") == "1":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, ResourceWarning, stacklevel=3)
-        self._warned = True  # once per crossing, not per batch
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.collect()  # snapshot rows only: O(updated keys)
-        with self._lock:
-            self._schema = batch_df.schema
-            for r in rows:
-                self._rows[r[self.key]] = r
-            self._check_bound()
-            self.batches_seen += 1
-            self._register()
-            if self.show:
-                import datetime
-
-                print(f"========= {self.view_name} {datetime.datetime.now()} =========")
-                self.spark.sql(self.sql).show()
-
-    def _register(self) -> None:
-        if self._schema is None:
-            return  # no batch processed yet (e.g. just restarted)
-        df = self.spark.createDataFrame(list(self._rows.values()), self._schema)
-        df.createOrReplaceTempView(self.view_name)
-
-    def query(self, sql: str | None = None) -> DataFrame:
-        with self._lock:
-            if self._schema is None:
-                return self.spark.range(0)  # empty: nothing snapshotted yet
-            self._register()
-        return self.spark.sql(sql or self.sql)
 
 
 class ParquetSnapshotSink:
@@ -509,10 +426,8 @@ def compact_partial_log(
 STAGED_SINK_COMPACTION = {
     # run_streaming_vocab: <ckpt>_partials
     "vocab": dict(keys=["token"], sums=("term_count", "doc_freq")),
-    # run_streaming_lm_logprob order=1: <ckpt>_counts (per-doc rows are
-    # final — one batch owns a doc — so the fold class is max-of-replays)
-    "lm_unigram": dict(keys=["doc_id", "token"], maxs=("c",)),
-    # run_streaming_lm_logprob order=2: <ckpt>_counts
+    # run_streaming_lm_logprob: <ckpt>_counts (per-doc rows are final —
+    # one batch owns a doc — so the fold class is max-of-replays)
     "lm_bigram": dict(keys=["doc_id", "w1", "w2"], maxs=("c",)),
     # run_streaming_dup_spans: <ckpt>_index (pure identity rows)
     "span_index": dict(keys=["doc", "pos", "gh"]),
@@ -578,7 +493,7 @@ def quality_hist_compaction_spec(group_col: str = "source") -> dict:
 @dataclass
 class StreamHandle:
     query: "pyspark.sql.streaming.StreamingQuery"  # noqa: F821
-    sink: "ParquetSnapshotSink | SnapshotView"
+    sink: ParquetSnapshotSink
 
     def stop(self) -> None:
         """S9 graceful shutdown."""
@@ -628,19 +543,17 @@ def flight_socket_pipeline(
     sql: str | None = None,
     trigger_seconds: float = 1.0,
     show: bool = False,
-    sink_kind: str = "parquet",
     snapshot_dir: str | None = None,
-    impl: str = "applyInPandas",
 ) -> StreamHandle:
     """The full reference graph: parse → key → state → snapshot view → SQL.
 
     Micro-batch default 1 s (T8, Duration(1000) parity); checkpointing is
     Structured Streaming's offset+state log (S7/S8) — resumable.
 
-    ``sink_kind='parquet'`` (default) maintains the all-keys snapshot in a
-    storage-backed upsert log next to the checkpoint, so it survives
-    restarts and driver memory stays O(1); ``sink_kind='driver'`` is the
-    reference's driver-sized show()-oriented view."""
+    The all-keys snapshot lives in a storage-backed upsert log next to the
+    checkpoint (``snapshot_dir``, default ``<checkpoint_dir>_snapshot``),
+    so it survives restarts and driver memory stays O(1); ``show=True``
+    prints ``sql`` over it after every trigger (the reference's console)."""
     from pyspark.sql import functions as F
 
     # arrival tiebreak for equal-ts dedup: streaming sources expose no row
@@ -651,20 +564,15 @@ def flight_socket_pipeline(
     with_arrival = source.withColumn(
         "arrival", F.xxhash64(*[F.col(c) for c in source.columns if c != "geometry"])
     )
-    snap = track_state_stream(with_arrival, cfg, impl=impl)
-    if sink_kind == "parquet":
-        sink = ParquetSnapshotSink(
-            spark,
-            view_name,
-            cfg.key,
-            path=snapshot_dir or f"{checkpoint_dir}_snapshot",
-            sql=sql,
-            show=show,
-        )
-    elif sink_kind == "driver":
-        sink = SnapshotView(spark, view_name, cfg.key, sql=sql, show=show)
-    else:
-        raise ValueError(f"unknown sink_kind {sink_kind!r} (parquet|driver)")
+    snap = track_state_stream(with_arrival, cfg)
+    sink = ParquetSnapshotSink(
+        spark,
+        view_name,
+        cfg.key,
+        path=snapshot_dir or f"{checkpoint_dir}_snapshot",
+        sql=sql,
+        show=show,
+    )
     q = (
         snap.writeStream.outputMode("update")
         .foreachBatch(sink)
@@ -949,38 +857,6 @@ def stream_events_source(
             ),
         )
     return stream_df
-
-
-def run_streaming_sliding_counts(
-    spark: SparkSession,
-    events_path: str,
-    width: str = "1 day",
-    slide: str = "6 hours",
-    checkpoint_dir: str | None = None,
-    state_partitions: int | None = 8,
-) -> DataFrame:
-    """Streaming sliding-window aggregation run to completion — the
-    streaming twin of the batch ``sliding_counts`` operator (same oracle).
-    Each event lands in width÷slide windows via the window generator;
-    update-mode emits refreshed window rows per trigger, upserted into the
-    snapshot sink keyed by window start (width is fixed, so start
-    determines end).  Against an unbounded source a ``withWatermark``
-    upstream bounds window state exactly as in the tumbling twin."""
-    from stateful_spark_streaming_spark.operators.windows import sliding_counts
-
-    stem = _output_stem(checkpoint_dir, "sss_slide_")
-    stream_df = stream_events_source(spark, events_path)
-    windowed = sliding_counts(stream_df, width=width, slide=slide)
-    sink = ParquetSnapshotSink(
-        spark, "StreamingSliding", "window_start_ms", path=f"{stem}_snapshot"
-    )
-    _replay(
-        spark,
-        windowed.writeStream.outputMode("update").foreachBatch(sink),
-        checkpoint_dir,
-        state_partitions=state_partitions,
-    )
-    return sink.query()
 
 
 def run_streaming_dedup(
@@ -1475,28 +1351,26 @@ def run_streaming_vocab(
 def run_streaming_lm_logprob(
     spark: SparkSession,
     documents_path: str,
-    order: int = 1,
     text_col: str = "text",
     id_col: str = "doc_id",
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Ingest-time LM-quality scoring — the streaming twin of
-    ``text.unigram_logprob`` (``order=1``) / ``text.bigram_logprob``
-    (``order=2``), sharing their oracles verbatim; this was the last
+    """Ingest-time bigram-LM scoring — the streaming twin of
+    ``text.bigram_logprob``, sharing its oracle verbatim; this was the last
     batch-only LLM-pipeline family with an additive shape (VERDICT r5
     next-round #6).
 
     Shape: ADDITIVE PARTIAL COUNTS (the ``run_streaming_vocab`` pattern).
-    A document's (doc, gram…, c) counts are FINAL the moment its batch
+    A document's (doc, w1, w2, c) counts are FINAL the moment its batch
     commits — a doc never straddles micro-batches — and every
-    corpus-level quantity the score needs (gram vocabulary, history
+    corpus-level quantity the score needs (bigram vocabulary, history
     totals, the corpus total) is a plain SUM over those rows.  So the
     sink appends exactly the compact count frame the batch operator
     persists, and score-on-read derives the logprobs through the SHARED
-    ``*_score_from_counts`` tail (one definition, can't desynchronize).
-    This is also the batch operators' own 100 TB cache note made real:
-    the staged parquet IS the (doc, gram, c) frame "written to storage
+    ``bigram_score_from_counts`` tail (one definition, can't desynchronize).
+    This is also the batch operator's own 100 TB cache note made real:
+    the staged parquet IS the (doc, w1, w2, c) frame "written to storage
     and read back" — corpus text is tokenized exactly once, at ingest.
 
     Replay idempotency: appends are batch-stamped; a replayed batch
@@ -1506,28 +1380,16 @@ def run_streaming_lm_logprob(
     from pyspark.sql import functions as F
 
     from stateful_spark_streaming_spark.operators.text import (
-        _token_occurrences,
         bigram_occurrence_counts,
         bigram_score_from_counts,
-        unigram_score_from_counts,
     )
 
-    if order not in (1, 2):
-        raise ValueError(f"order must be 1 (unigram) or 2 (bigram), got {order}")
-    out_dir = _output_stem(checkpoint_dir, f"sss_lm{order}_") + "_counts"
+    out_dir = _output_stem(checkpoint_dir, "sss_lm2_") + "_counts"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
-    keys = ["doc_id", "token"] if order == 1 else ["doc_id", "w1", "w2"]
-    score = unigram_score_from_counts if order == 1 else bigram_score_from_counts
+    keys = ["doc_id", "w1", "w2"]
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
-        if order == 1:
-            part = (
-                _token_occurrences(bdf, text_col, id_col)
-                .groupBy("doc_id", "token")
-                .agg(F.count("*").alias("c"))
-            )
-        else:
-            part = bigram_occurrence_counts(bdf, text_col, id_col)
+        part = bigram_occurrence_counts(bdf, text_col, id_col)
         # REPARTITION, not coalesce (see run_streaming_dup_spans): keep
         # the tokenize/expand stage wide, move only compact count rows
         part.withColumn("_batch_id", F.lit(batch_id)).repartition(4).write.mode(
@@ -1544,15 +1406,15 @@ def run_streaming_lm_logprob(
         fields = [StructField("doc_id", stream.schema[id_col].dataType)]
         fields += [StructField(c, StringType()) for c in keys[1:]]
         fields += [StructField("c", LongType())]
-        return score(spark.createDataFrame([], StructType(fields)))
+        return bigram_score_from_counts(spark.createDataFrame([], StructType(fields)))
     per = (
         spark.read.parquet(out_dir)
         .drop("_batch_id")
-        # replay dedupe: a count row exists once per (doc, gram) in the
+        # replay dedupe: a count row exists once per (doc, w1, w2) in the
         # true stream; duplicates can only be replayed appends
         .dropDuplicates(keys)
     )
-    return score(per)
+    return bigram_score_from_counts(per)
 
 
 def run_streaming_distinct_stats(

@@ -16,8 +16,8 @@ state that outgrows executor heap).  Semantics implemented exactly:
   is dropped; within a batch, first arrival (lowest arrival id) wins
 - T4 bounded retention: keep the max_per_track most-recent by event time
 - T5 snapshot emit: each invoked key emits its full current track summary
-  every trigger (the all-keys view is maintained by the sink — see
-  pipeline.SnapshotView for the decision record on stateSnapshots parity)
+  every trigger; the all-keys view is maintained by the sink
+  (pipeline.ParquetSnapshotSink)
 - T7 (upgrade): optional processing-time TTL — the reference *claims* a
   30-minute session timeout in comments but never implements it
   (StreamWithStates.scala:63); here it is real and off by default.
@@ -43,8 +43,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-_SPARK_TO_PY_DEFAULT = {"string": None, "double": None, "long": None}
 
 
 @dataclass
@@ -86,9 +84,9 @@ _SIMPLE = {"string": StringType(), "double": DoubleType(), "long": LongType()}
 
 def _fold_core(cfg: TrackStateConfig, ts_ms, arrival, vals, new: pd.DataFrame):
     """The pure per-key fold (T2/T3/T4): merge new rows into the sorted,
-    ts-deduped, count-bounded track arrays.  Shared verbatim by BOTH
-    stateful APIs (applyInPandasWithState and the transformWithState shim)
-    so their semantics cannot drift.
+    ts-deduped, count-bounded track arrays.  Pure pandas, no Spark: the
+    ``applyInPandasWithState`` closure below calls it once per key and
+    trigger, and tests call it directly.
 
     Vectorized: concat batches → (ts, is_new, arrival) sort → dedup.
     Existing state rows sort with _is_new=0 so they always win equal-ts
@@ -168,98 +166,13 @@ def _make_fold(cfg: TrackStateConfig):
     return fold
 
 
-def transform_with_state_available() -> tuple[bool, str]:
-    """Capability probe for ``transformWithStateInPandas`` (the Spark 4
-    stateful API).  Checked, not assumed: the tWS Python worker imports
-    google.protobuf (state serialization), which plain PySpark installs
-    don't ship — this container among them — and the API itself only
-    exists on Spark ≥ 3.5/4.x builds."""
-    try:
-        import google.protobuf  # noqa: F401  (tWS worker dependency)
-    except ImportError:
-        return False, "google.protobuf not installed (tWS state-server dependency)"
-    try:
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor,
-        )
-    except ImportError:
-        return False, "pyspark.sql.streaming.stateful_processor missing"
-    from pyspark.sql import GroupedData
-
-    if not hasattr(GroupedData, "transformWithStateInPandas"):
-        return False, "GroupedData.transformWithStateInPandas absent"
-    return True, "available"
-
-
-def _transform_with_state_stream(keyed: DataFrame, cfg: TrackStateConfig) -> DataFrame:
-    """The SAME track semantics through ``transformWithStateInPandas``:
-    a StatefulProcessor whose ValueState holds the identical
-    arrays-struct state and whose handleInputRows delegates to the shared
-    ``_fold_core`` — so golden replay tests pass unchanged wherever the
-    API is usable.  Guarded by ``transform_with_state_available``."""
-    ok, why = transform_with_state_available()
-    if not ok:
-        raise RuntimeError(
-            f"transformWithStateInPandas unavailable: {why}; "
-            "use track_state_stream(impl='applyInPandas') (the default)"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    state_schema = cfg.state_schema()
-    n_vals = len(cfg.value_cols)
-
-    class TrackProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._track = handle.getValueState("track", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._track.exists():
-                st = self._track.get()
-                ts_ms, arrival = list(st[0]), list(st[1])
-                vals = [list(st[2 + i]) for i in range(n_vals)]
-            else:
-                ts_ms, arrival, vals = [], [], [[] for _ in range(n_vals)]
-            batches = [p for p in rows if len(p)]
-            new = (
-                pd.concat(batches, ignore_index=True) if batches else pd.DataFrame()
-            )
-            ts_ms, arrival, vals = _fold_core(cfg, ts_ms, arrival, vals, new)
-            self._track.update((ts_ms, arrival, *vals))
-            yield _snapshot_row(cfg, key[0], ts_ms, vals)
-
-        def close(self) -> None:
-            pass
-
-    return keyed.groupBy(cfg.key).transformWithStateInPandas(
-        statefulProcessor=TrackProcessor(),
-        outputStructType=cfg.output_schema(),
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def track_state_stream(
-    keyed: DataFrame, cfg: TrackStateConfig, impl: str = "applyInPandas"
-) -> DataFrame:
-    """Wire the fold into the stream: ``groupBy(key).applyInPandasWithState``
-    by default, or the ``transformWithStateInPandas`` shim with
-    ``impl='transformWithState'`` (capability-checked — raises with the
-    reason where the Spark 4 API or its protobuf worker dependency is
-    absent).  Both paths share ``_fold_core``, so semantics are identical.
+def track_state_stream(keyed: DataFrame, cfg: TrackStateConfig) -> DataFrame:
+    """Wire the fold into the stream: ``groupBy(key).applyInPandasWithState``.
 
     The shuffle on ``key`` is the same exchange the reference's mapWithState
     implies; state lives in the state store (RocksDB at scale), checkpointed
     with source offsets — restart-safe, which the reference's DStream
     checkpointing famously is not (README.md:24-108)."""
-    if impl == "transformWithState":
-        return _transform_with_state_stream(keyed, cfg)
-    if impl != "applyInPandas":
-        raise ValueError(
-            f"unknown impl {impl!r} (applyInPandas|transformWithState)"
-        )
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout
         if cfg.ttl_minutes is not None

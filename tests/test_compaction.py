@@ -58,15 +58,14 @@ def test_vocab_and_lm_compaction(spark, tmp_path):
         [(ck_v + "_partials", STAGED_SINK_COMPACTION["vocab"])],
     )
 
-    for order, spec in ((1, "lm_unigram"), (2, "lm_bigram")):
-        ck = str(tmp_path / f"ck_lm{order}")
-        _roundtrip(
-            spark,
-            lambda ck=ck, order=order: run_streaming_lm_logprob(
-                spark, src, order=order, checkpoint_dir=ck, max_files_per_trigger=1
-            ),
-            [(ck + "_counts", STAGED_SINK_COMPACTION[spec])],
-        )
+    ck = str(tmp_path / "ck_lm")
+    _roundtrip(
+        spark,
+        lambda: run_streaming_lm_logprob(
+            spark, src, checkpoint_dir=ck, max_files_per_trigger=1
+        ),
+        [(ck + "_counts", STAGED_SINK_COMPACTION["lm_bigram"])],
+    )
 
 
 def test_span_index_compaction(spark, tmp_path):

@@ -1,31 +1,13 @@
-"""Relational operator semantics: skew-resistant top-N and sketch
-aggregates."""
+"""Relational operator semantics: sketch aggregates, bucketed joins,
+grouping sets and snowflake shares."""
 
 from __future__ import annotations
 
-from pyspark.sql import Row, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from stateful_spark_streaming_spark.operators import relational as REL
 from stateful_spark_streaming_spark.sources.tables import load_table
-
-
-def test_salted_topn_equals_plain_topn_under_skew(spark):
-    """One key holds 5000 of 5060 rows (the skew wall); the two-phase salted
-    form must return exactly the single-phase result."""
-    rows = [Row(k="hot", v=float(i % 977), id=i) for i in range(5000)]
-    rows += [Row(k=f"cold{j}", v=float(j * 3 % 97), id=10_000 + j) for j in range(60)]
-    df = spark.createDataFrame(rows)
-
-    w = Window.partitionBy("k").orderBy(F.col("v").desc(), F.col("id").asc())
-    plain = (
-        df.withColumn("r", F.row_number().over(w)).filter("r <= 3")
-        .select("k", "r", "id", "v")
-    )
-    salted = REL.salted_topn(
-        df, key="k", order_col="v", n=3, salt_buckets=8, tiebreak="id"
-    ).select("k", F.col("rank_in_key").alias("r"), "id", "v")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
 def test_approx_stats_error_bounds(spark, sf_dir):
@@ -96,24 +78,6 @@ def test_revenue_cube_grouping_sets(spark, sf_dir):
     for gy, gs in ((0, 1), (1, 0)):
         n = sum(r.n_orders for r in cube if r.g_year == gy and r.g_status == gs)
         assert n == exact.n
-
-
-def test_fuzzy_part_match_known_distances(spark):
-    from pyspark.sql import Row
-
-    part = spark.createDataFrame(
-        [
-            Row(p_partkey=1, p_name="blue bolt"),
-            Row(p_partkey=2, p_name="blue boltz"),
-            Row(p_partkey=3, p_name="red widget"),
-            Row(p_partkey=4, p_name="green gear"),
-        ]
-    )
-    got = {
-        (r.p_partkey, r.probe): r.edit_dist
-        for r in REL.fuzzy_part_match(part, ["blue bolt"], max_dist=1).collect()
-    }
-    assert got == {(1, "blue bolt"): 0, (2, "blue bolt"): 1}
 
 
 def test_market_share_sums_to_one(spark, sf_dir):

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from stateful_spark_streaming_spark.streaming.pipeline import (
     FLIGHT_TRACK_CONFIG,
-    SnapshotView,
+    ParquetSnapshotSink,
     file_flight_source,
     flight_socket_pipeline,
     run_snapshot_query,
@@ -37,7 +37,7 @@ def _write_batch(dirpath: str, batch_no: int, ticks: list[int]) -> None:
         f.write("\n".join(lines) + "\n")
 
 
-def _wait_batches(sink: SnapshotView, n: int, timeout: float = 60.0) -> None:
+def _wait_batches(sink: ParquetSnapshotSink, n: int, timeout: float = 60.0) -> None:
     deadline = time.time() + timeout
     while sink.batches_seen < n and time.time() < deadline:
         time.sleep(0.3)
@@ -192,28 +192,6 @@ def test_snapshot_sink_compaction_and_full_view(spark, workdir):
         h2.stop()
 
 
-def test_driver_sink_parity(spark, workdir):
-    """sink_kind='driver' (the reference's show()-oriented dict view) still
-    serves the same golden counts."""
-    src = str(workdir / "src")
-    _write_batch(src, 1, [0, 1, 2])
-    h = flight_socket_pipeline(
-        spark,
-        file_flight_source(spark, src),
-        checkpoint_dir=str(workdir / "ckpt"),
-        trigger_seconds=0.5,
-        sink_kind="driver",
-    )
-    try:
-        _wait_batches(h.sink, 1)
-        assert isinstance(h.sink, SnapshotView)
-        counts = {r[0]: r[1] for r in h.sink.query(
-            "select flightId, track_count from Flights").collect()}
-        assert counts == {f: 3 for f in FLIGHTS}
-    finally:
-        h.stop()
-
-
 def test_streaming_matches_batch_operator(spark, sf_dir, tmp_path):
     """availableNow over events.parquet through the REAL stateful processor
     equals the batch track_snapshot operator row-for-row — and so does the
@@ -297,79 +275,3 @@ def test_compact_then_restart_updates_existing_keys(spark, workdir):
         )
     finally:
         h2.stop()
-
-
-def test_transform_with_state_shim(spark, workdir):
-    """The Spark 4 transformWithStateInPandas shim: capability-probed, and
-    where the API is usable the SAME golden drip replay passes through it
-    (both impls share _fold_core, so semantics cannot drift).  In
-    environments lacking the API or its protobuf worker dependency the
-    probe explains why and track_state_stream raises that reason instead
-    of failing opaquely mid-stream."""
-    from stateful_spark_streaming_spark.streaming.track_state import (
-        transform_with_state_available,
-    )
-
-    ok, why = transform_with_state_available()
-    if not ok:
-        # the guarded path must raise the probe's reason, not a worker crash
-        src = str(workdir / "src")
-        _write_batch(src, 1, [0])
-        with pytest.raises(RuntimeError, match="transformWithStateInPandas"):
-            flight_socket_pipeline(
-                spark,
-                file_flight_source(spark, src),
-                checkpoint_dir=str(workdir / "ckpt"),
-                impl="transformWithState",
-            )
-        pytest.skip(f"transformWithState unavailable here: {why}")
-
-    src = str(workdir / "src")
-    _write_batch(src, 1, [0, 1])
-    h = flight_socket_pipeline(
-        spark,
-        file_flight_source(spark, src),
-        checkpoint_dir=str(workdir / "ckpt"),
-        trigger_seconds=0.5,
-        impl="transformWithState",
-    )
-    try:
-        _wait_batches(h.sink, 1)
-        counts = {r[0]: r[1] for r in h.sink.query(
-            "select flightId, track_count from Flights").collect()}
-        assert counts == {f: 2 for f in FLIGHTS}
-    finally:
-        h.stop()
-
-
-def test_snapshot_view_key_bound_guard(spark, monkeypatch):
-    """SnapshotView is the driver-side reference-parity console path; past
-    max_keys it must warn (or raise under SSS_SNAPSHOT_STRICT=1) pointing
-    at ParquetSnapshotSink — and change NOTHING below the bound
-    (VERDICT r8 #7)."""
-    import warnings
-
-    df = spark.range(10).selectExpr("id as flightId", "id * 2 as track_count")
-
-    # below the bound: no warning, rows served as before
-    ok = SnapshotView(spark, "GuardViewOk", "flightId", max_keys=100)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # any warning would fail the test
-        ok(df, 0)
-    assert ok.query("select count(*) as n from GuardViewOk").collect()[0][0] == 10
-
-    # past the bound: exactly one ResourceWarning naming the scale path
-    small = SnapshotView(spark, "GuardView", "flightId", max_keys=5)
-    with pytest.warns(ResourceWarning, match="ParquetSnapshotSink"):
-        small(df, 0)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # second batch: warned once, stays quiet
-        small(df, 1)
-    # behavior unchanged: all rows still served
-    assert small.query("select count(*) as n from GuardView").collect()[0][0] == 10
-
-    # strict mode escalates to an error
-    monkeypatch.setenv("SSS_SNAPSHOT_STRICT", "1")
-    strict = SnapshotView(spark, "GuardViewStrict", "flightId", max_keys=5)
-    with pytest.raises(RuntimeError, match="max_keys=5"):
-        strict(df, 0)

@@ -310,10 +310,9 @@ def test_console_snapshot_sink_prints_table(spark, capsys, tmp_path):
     """S5 (console table sink): show=True prints the reference's
     '========= <view> <time> =========' header followed by the snapshot
     rendered as an ASCII table (StreamWithStates.scala:49-51) — asserted on
-    the actual printed text, both sink kinds."""
+    the actual printed text."""
     from stateful_spark_streaming_spark.streaming.pipeline import (
         ParquetSnapshotSink,
-        SnapshotView,
     )
 
     batch = spark.createDataFrame(
@@ -328,12 +327,6 @@ def test_console_snapshot_sink_prints_table(spark, capsys, tmp_path):
     assert "========= ConsoleFlights" in out
     assert "flightId" in out and "track_count" in out  # ASCII table header
     assert "F1" in out and "F2" in out
-
-    dview = SnapshotView(spark, "ConsoleFlights2", "flightId", show=True)
-    dview(batch, 0)
-    out2 = capsys.readouterr().out
-    assert "========= ConsoleFlights2" in out2
-    assert "F1" in out2 and "F2" in out2
 
 
 def test_streaming_partitioned_ingest_prunes_and_dedupes(spark, tmp_path):

@@ -351,19 +351,13 @@ def test_streaming_vocab_replay_idempotent(spark, tmp_path):
 
 
 def test_streaming_lm_logprob_multibatch_equals_batch(spark, tmp_path):
-    """Ingest-time LM scoring across 3 micro-batches must equal the batch
-    unigram_logprob / bigram_logprob on the union EXACTLY — the staged
-    (doc, gram, c) counts are final per doc (a doc never straddles
+    """Ingest-time bigram-LM scoring across 3 micro-batches must equal the
+    batch bigram_logprob on the union EXACTLY — the staged
+    (doc, w1, w2, c) counts are final per doc (a doc never straddles
     batches) and every corpus-level term is a sum over them.  The token
     'common' spans all batches so the cross-batch vocabulary merge is
     actually exercised."""
-    import glob
-    import shutil
-
-    from stateful_spark_streaming_spark.operators.text import (
-        bigram_logprob,
-        unigram_logprob,
-    )
+    from stateful_spark_streaming_spark.operators.text import bigram_logprob
     from stateful_spark_streaming_spark.streaming.pipeline import (
         run_streaming_lm_logprob,
     )
@@ -373,7 +367,7 @@ def test_streaming_lm_logprob_multibatch_equals_batch(spark, tmp_path):
         (2, "common beta gamma"),
         (3, "common gamma gamma delta"),
         (4, "common delta epsilon"),
-        (5, "solo"),  # 1 token: unigram-scored, emits no bigram
+        (5, "solo"),  # 1 token: emits no bigram
         (6, ""),  # empty doc contributes nothing
     ]
     from tests.conftest import land_batches
@@ -384,19 +378,17 @@ def test_streaming_lm_logprob_multibatch_equals_batch(spark, tmp_path):
     )
 
     batch_df = spark.createDataFrame(rows, ["doc_id", "text"])
-    for order, batch_op in ((1, unigram_logprob), (2, bigram_logprob)):
-        streamed = {
-            tuple(r)
-            for r in run_streaming_lm_logprob(
-                spark,
-                src,
-                order=order,
-                checkpoint_dir=str(tmp_path / f"ckpt_lm{order}"),
-                max_files_per_trigger=1,
-            ).collect()
-        }
-        expected = {tuple(r) for r in batch_op(batch_df).collect()}
-        assert streamed == expected, f"order={order} streaming != batch"
+    streamed = {
+        tuple(r)
+        for r in run_streaming_lm_logprob(
+            spark,
+            src,
+            checkpoint_dir=str(tmp_path / "ckpt_lm"),
+            max_files_per_trigger=1,
+        ).collect()
+    }
+    expected = {tuple(r) for r in bigram_logprob(batch_df).collect()}
+    assert streamed == expected, "streaming != batch"
     spark.catalog.clearCache()
 
 
@@ -414,11 +406,11 @@ def test_streaming_lm_logprob_replay_idempotent(spark, tmp_path):
     rows = [(1, "alpha beta alpha"), (2, "beta gamma")]
     src = str(tmp_path / "docs")
     spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(1).write.parquet(src)
-    ckpt = str(tmp_path / "ckpt_lm1")
+    ckpt = str(tmp_path / "ckpt_lm")
     before = {
         tuple(r)
         for r in run_streaming_lm_logprob(
-            spark, src, order=1, checkpoint_dir=ckpt
+            spark, src, checkpoint_dir=ckpt
         ).collect()
     }
     out_dir = ckpt + "_counts"
@@ -427,7 +419,7 @@ def test_streaming_lm_logprob_replay_idempotent(spark, tmp_path):
     again = {
         tuple(r)
         for r in run_streaming_lm_logprob(
-            spark, src, order=1, checkpoint_dir=ckpt
+            spark, src, checkpoint_dir=ckpt
         ).collect()
     }
     assert again == before, "replayed count partials must not change scores"

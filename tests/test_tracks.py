@@ -111,3 +111,66 @@ def test_track_membership_ops(flights):
     empt = {r.key: r.is_empty for r in TR.track_is_empty(
         emptied, "key", flights).collect()}
     assert empt == {"A": False, "B": True}
+
+
+# ------------------------------------------------ the streaming fold, no Spark
+# track_state._fold_core is the per-key fold the applyInPandasWithState
+# closure runs each trigger; these call it directly on pandas frames.
+
+
+def _fold(state, rows):
+    """Fold ``rows`` [(ts_ms or None, arrival, val)] into ``state``
+    (ts_ms, arrival, [vals]) on a 3-deep track; returns the new state."""
+    import pandas as pd
+
+    from stateful_spark_streaming_spark.streaming.track_state import (
+        TrackStateConfig,
+        _fold_core,
+    )
+
+    cfg = TrackStateConfig(
+        key="key", ts="ts", arrival="arrival", value_cols=("val",),
+        value_types=("double",), max_per_track=3, key_type="string",
+    )
+    new = pd.DataFrame(
+        {
+            "ts": pd.to_datetime(
+                pd.Series([r[0] for r in rows], dtype="float64"), unit="ms"
+            ),
+            "arrival": pd.Series([r[1] for r in rows], dtype="int64"),
+            "val": [r[2] for r in rows],
+        }
+    )
+    ts_ms, arrival, vals = state
+    return _fold_core(cfg, list(ts_ms), list(arrival), [list(v) for v in vals], new)
+
+
+def test_fold_state_wins_equal_ts_against_lower_arrival():
+    """T3, state first: a resend at a stored timestamp is rejected even
+    when its arrival id is LOWER (xxhash ids span negative int64)."""
+    state = ([1000, 2000], [7, 8], [[1.0, 2.0]])
+    assert _fold(state, [(2000, -(2**62), 9.0)]) == state
+
+
+def test_fold_lowest_arrival_wins_within_batch():
+    """T3 within a batch: among equal-ts new rows the lowest arrival id
+    wins, whatever the row order."""
+    empty = ([], [], [[]])
+    got = _fold(empty, [(5000, 50, 1.0), (5000, -3, 2.0), (5000, 4, 3.0)])
+    assert got == ([5000], [-3], [[2.0]])
+
+
+def test_fold_late_rows_against_full_track():
+    """T4 across calls: on a full track a late row older than the oldest
+    stored one is dropped; a late row inside the window is kept and the
+    oldest is evicted."""
+    full = ([1000, 2000, 3000], [1, 2, 3], [[1.0, 2.0, 3.0]])
+    assert _fold(full, [(500, 9, 0.5)]) == full
+    assert _fold(full, [(1500, 9, 1.5)]) == (
+        [1500, 2000, 3000], [9, 2, 3], [[1.5, 2.0, 3.0]]
+    )
+
+
+def test_fold_null_event_time_is_epoch_zero():
+    got = _fold(([], [], [[]]), [(None, 1, 4.0)])
+    assert got == ([0], [1], [[4.0]])

@@ -86,8 +86,6 @@ CHECKS = {
     "chunk_documents": ([], ["Exchange"], 0),
     "redact_pii": ([], ["Exchange"], 0),
     "hash_split": ([], ["Exchange"], 0),
-    # inverse projection round-trip: pure column math, map-only
-    "web_mercator_roundtrip": ([], ["Exchange"], 0),
     # repetition metrics: in-row sort+fold, NOT explode+groupBy — map-only
     "repetition_stats": ([], ["Exchange", "Generate"], 0),
     # stratified sampling: a hash filter, nothing else — map-only, no rand
@@ -117,18 +115,13 @@ CHECKS = {
     # CUBE: grouping-set expansion happens BEFORE the partial aggregate, so
     # the whole cube still costs exactly one shuffle of partial aggregates
     "revenue_cube": ([], ["Join"], 1),
-    # fuzzy lookup: probe list exploded as an array literal — NO join
-    # operator, one codegen'd Generate+Filter pass, zero exchanges
-    "fuzzy_part_match": ([], ["Join", "CartesianProduct"], 0),
     # Q8-style snowflake: every dimension broadcast; the only shuffles are
     # the fact-fact joins + the tiny per-(year, nation) aggregate/window
     "market_share": (["BroadcastHashJoin"], ["CartesianProduct",
                                              "BroadcastNestedLoopJoin"], None),
-    # sequence packing: ONE exchange (the per-stream window), no join —
-    # the cumsum is a local sort + running fold per stream
-    "pack_sequences": ([], ["Join"], 1),
-    # materialize path: the layout window (1) + the (stream, pack_id)
-    # reassembly aggregate (1) — and still no join anywhere
+    # sequence packing, materialize path: the layout window (1) + the
+    # (stream, pack_id) reassembly aggregate (1) — no join anywhere (the
+    # cumsum is a local sort + running fold per stream)
     "pack_sequences_emit": ([], ["Join"], 2),
     # profiling: all columns in ONE pass — a single Expand feeding hash
     # aggregates, never one job per column; no join
@@ -196,11 +189,8 @@ CHECKS = {
     # history / scoring branches — equi-joins only, never a pair product
     "bigram_logprob": ([], ["CartesianProduct", "BroadcastNestedLoopJoin"], None),
     # streaming LM scoring READ side (the ingest side is foreachBatch):
-    # the SHARED counts tail over staged parquet — same contracts as the
-    # batch twins (unigram: scalar corpus-total broadcast is the only
-    # nested-loop; bigram: equi-joins only)
-    "streaming_unigram_logprob": (["BroadcastNestedLoopJoin"],
-                                  ["CartesianProduct"], None),
+    # the SHARED counts tail over staged parquet — same contract as the
+    # batch twin (equi-joins only)
     "streaming_bigram_logprob": ([], ["CartesianProduct",
                                       "BroadcastNestedLoopJoin"], None),
     # KMV bottom-k distinct counts (r12, oracle-exact): distinct (key,
@@ -226,9 +216,6 @@ CHECKS = {
     # streaming histogram READ side: replay-dedupe aggregate + sum over
     # the bin-cardinality staged partials — no join anywhere
     "streaming_quality_histogram": ([], ["Join", "CartesianProduct"], 2),
-    # streaming quantiles: the same staged-log merge + the bin-bounded
-    # quantile window/agg — still no join
-    "streaming_quality_quantiles": ([], ["Join", "CartesianProduct"], 4),
     # bloom decontamination: the bitmap probe is MAP-ONLY (bitmap built
     # eagerly, not in this plan); the verify semi-join + id ride-through
     # are equi-joins (AQE free to broadcast) — never a pair product
@@ -460,11 +447,6 @@ def main() -> int:
     spark = get_spark("plan-audit", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-    # catalog-RETIRED queries keep their plan-shape audit (retirement frees
-    # gate rotation capacity, not evidence — see retired_query in the catalog)
-    from stateful_spark_streaming_spark.queries_catalog import RETIRED_QUERIES
-
-    qs = {**qs, **RETIRED_QUERIES}
 
     # track_range's pushed ts-range expectation only holds when events.ts
     # scans as a timestamp type; under env drift where it scans as raw LONG

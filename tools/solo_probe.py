@@ -29,24 +29,9 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 
-    # bench-identical pre-warm: table footers + the two-tier python pool
-    from stateful_spark_streaming_spark.sources.tables import load_table
+    from bench import prewarm
 
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        load_table(spark, sf_dir, t).count()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    (
-        spark.range(256)
-        .repartition(cpus)
-        .mapInPandas(lambda it: it, "id long")
-        .mapInPandas(lambda it: it, "id long")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
+    prewarm(spark, sf_dir)  # the bench's own pre-warm: tables + worker tiers
 
     for name in names:
         runs = []
