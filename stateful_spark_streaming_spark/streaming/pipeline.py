@@ -624,7 +624,11 @@ def run_snapshot_query(
     creation).  Each state partition costs an Arrow python worker round per
     trigger, so size it to key volume: a handful of partitions for
     thousands of keys (measured 3× faster than 32 partitions for 1.5k
-    keys), the session default for production key counts."""
+    keys), the session default for production key counts.  Each of those
+    Python tasks also has a CPU floor outside the fold: pyspark's worker
+    calls ``importlib.invalidate_caches()``, which under Python 3.11 with
+    ``SPARK_HOME`` set re-reads ``pyspark.zip`` (96–217 ms of CPU per
+    task, median 156 ms, on a shared 4-vCPU host)."""
     from pyspark.sql import functions as F
 
     cfg = cfg or TrackStateConfig()

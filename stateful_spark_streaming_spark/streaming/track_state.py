@@ -5,10 +5,11 @@ feature into a per-key FeatureState holding a chronologically sorted,
 timestamp-deduplicated, count-bounded TreeSet (StreamWithStates.scala:58-81;
 FeatureTrack.scala:17-138; FeatureTrackPurger.scala:7-12).
 
-Spark-first realization: ``applyInPandasWithState`` over ``groupBy(key)``.
-The fold function receives Arrow batches per key and maintains the track as
-parallel arrays in the state store (RocksDB-backed via session config for
-state that outgrows executor heap).  Semantics implemented exactly:
+Spark-first realization: ``applyInPandasWithState`` over ``groupBy(key)``,
+fed only key, epoch-ms event time, arrival id and value columns
+(``_fold_input``).  Each track is parallel arrays in the state store
+(RocksDB-backed at scale), merged with a key's new rows by a plain-list
+fold.  Semantics implemented exactly:
 
 - T1 keyed update: fold new rows into per-key state
 - T2 init: first record creates an empty track (cap = max_per_track)
@@ -33,7 +34,7 @@ from dataclasses import dataclass, field
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -83,44 +84,34 @@ _SIMPLE = {"string": StringType(), "double": DoubleType(), "long": LongType()}
 
 
 def _fold_core(cfg: TrackStateConfig, ts_ms, arrival, vals, new: pd.DataFrame):
-    """The pure per-key fold (T2/T3/T4): merge new rows into the sorted,
-    ts-deduped, count-bounded track arrays.  Pure pandas, no Spark: the
-    ``applyInPandasWithState`` closure below calls it once per key and
-    trigger, and tests call it directly.
-
-    Vectorized: concat batches → (ts, is_new, arrival) sort → dedup.
-    Existing state rows sort with _is_new=0 so they always win equal-ts
-    contests (TreeSet add-reject semantics) regardless of the arrival id
-    domain — arrival ids from xxhash64 span the full int64 range, so no
-    numeric sentinel can dominate them."""
-    n_vals = len(cfg.value_cols)
-    if len(new):
-        t = pd.to_datetime(new[cfg.ts])
-        if getattr(t.dt, "tz", None) is not None:
-            t = t.dt.tz_convert("UTC").dt.tz_localize(None)
-        new_ts = t.astype("datetime64[ms]").astype("int64")
-        new_ts = new_ts.where(~t.isna(), 0)  # null time → epoch 0 policy
-        cur = pd.DataFrame(
-            {
-                "_ts": ts_ms + new_ts.tolist(),
-                "_is_new": [0] * len(ts_ms) + [1] * len(new),
-                "_arr": arrival + new[cfg.arrival].astype("int64").tolist(),
-                **{
-                    f"_v{i}": vals[i] + new[c].tolist()
-                    for i, c in enumerate(cfg.value_cols)
-                },
-            }
-        )
-        # T3: state-first, then lowest arrival id, per ts; keep the first
-        cur = cur.sort_values(["_ts", "_is_new", "_arr"], kind="stable")
-        cur = cur[~cur["_ts"].duplicated(keep="first")]
-        # T4: purge oldest beyond cap — keep the max_per_track newest
-        if cfg.max_per_track:
-            cur = cur.tail(cfg.max_per_track)
-        ts_ms = cur["_ts"].tolist()
-        arrival = cur["_arr"].tolist()
-        vals = [cur[f"_v{i}"].tolist() for i in range(n_vals)]
-    return ts_ms, arrival, vals
+    """The pure per-key fold (T2/T3/T4): merge ``new`` rows (ts as epoch-ms
+    ints, see ``_fold_input``) into the sorted, ts-deduped, count-bounded
+    track arrays.  No Spark: the closure below calls it once per key and
+    trigger, tests call it directly.  Plain lists: sort
+    ``(ts, is_new, arrival, idx)``, keep the first row per ts, then the
+    last ``max_per_track``.  Stored rows sort with is_new=0 so they win
+    equal-ts contests (TreeSet add-reject) whatever the arrival id:
+    xxhash64 ids span all of int64, so no sentinel id could.  Returns
+    Python scalars, never numpy ones."""
+    if not len(new):
+        return ts_ms, arrival, vals
+    n_old = len(ts_ms)
+    all_ts = ts_ms + new[cfg.ts].tolist()
+    all_arr = arrival + new[cfg.arrival].tolist()
+    all_vals = [v + new[c].tolist() for v, c in zip(vals, cfg.value_cols)]
+    order = sorted(
+        zip(all_ts, [0] * n_old + [1] * len(new), all_arr, range(len(all_ts)))
+    )
+    # T3: the first row per ts (state first, then lowest arrival id)
+    keep = [r[3] for i, r in enumerate(order) if not i or r[0] != order[i - 1][0]]
+    # T4: purge oldest beyond cap — keep the max_per_track newest
+    if cfg.max_per_track:
+        keep = keep[-cfg.max_per_track:]
+    return (
+        [all_ts[i] for i in keep],
+        [all_arr[i] for i in keep],
+        [[col[i] for i in keep] for col in all_vals],
+    )
 
 
 def _snapshot_row(cfg: TrackStateConfig, key_val, ts_ms, vals) -> pd.DataFrame:
@@ -153,8 +144,8 @@ def _make_fold(cfg: TrackStateConfig):
         else:  # T2: first record for this key → empty track
             ts_ms, arrival, vals = [], [], [[] for _ in range(n_vals)]
 
-        batches = [p for p in pdf_iter if len(p)]
-        new = pd.concat(batches, ignore_index=True) if batches else pd.DataFrame()
+        batches = [p for p in pdf_iter if len(p)] or [pd.DataFrame()]
+        new = batches[0] if len(batches) == 1 else pd.concat(batches, ignore_index=True)
         ts_ms, arrival, vals = _fold_core(cfg, ts_ms, arrival, vals, new)
 
         state.update((ts_ms, arrival, *vals))
@@ -164,6 +155,13 @@ def _make_fold(cfg: TrackStateConfig):
         yield _snapshot_row(cfg, key[0], ts_ms, vals)
 
     return fold
+
+
+def _fold_input(keyed: DataFrame, cfg: TrackStateConfig) -> DataFrame:
+    """The fold's input columns only: key, ts as epoch ms (null → 0, floored
+    like numpy's ``datetime64[ms]`` cast), arrival and the value columns."""
+    ts_ms = F.coalesce(F.unix_millis(F.col(cfg.ts)), F.lit(0))
+    return keyed.select(cfg.key, ts_ms.alias(cfg.ts), cfg.arrival, *cfg.value_cols)
 
 
 def track_state_stream(keyed: DataFrame, cfg: TrackStateConfig) -> DataFrame:
@@ -178,7 +176,7 @@ def track_state_stream(keyed: DataFrame, cfg: TrackStateConfig) -> DataFrame:
         if cfg.ttl_minutes is not None
         else GroupStateTimeout.NoTimeout
     )
-    return keyed.groupBy(cfg.key).applyInPandasWithState(
+    return _fold_input(keyed, cfg).groupBy(cfg.key).applyInPandasWithState(
         _make_fold(cfg),
         outputStructType=cfg.output_schema(),
         stateStructType=cfg.state_schema(),

@@ -115,11 +115,12 @@ def test_track_membership_ops(flights):
 
 # ------------------------------------------------ the streaming fold, no Spark
 # track_state._fold_core is the per-key fold the applyInPandasWithState
-# closure runs each trigger; these call it directly on pandas frames.
+# closure runs each trigger; these call it directly on pandas frames whose
+# ts column holds epoch-ms ints, as track_state._fold_input delivers it.
 
 
 def _fold(state, rows):
-    """Fold ``rows`` [(ts_ms or None, arrival, val)] into ``state``
+    """Fold ``rows`` [(ts_ms, arrival, val)] into ``state``
     (ts_ms, arrival, [vals]) on a 3-deep track; returns the new state."""
     import pandas as pd
 
@@ -134,9 +135,7 @@ def _fold(state, rows):
     )
     new = pd.DataFrame(
         {
-            "ts": pd.to_datetime(
-                pd.Series([r[0] for r in rows], dtype="float64"), unit="ms"
-            ),
+            "ts": pd.Series([r[0] for r in rows], dtype="int64"),
             "arrival": pd.Series([r[1] for r in rows], dtype="int64"),
             "val": [r[2] for r in rows],
         }
@@ -171,6 +170,126 @@ def test_fold_late_rows_against_full_track():
     )
 
 
-def test_fold_null_event_time_is_epoch_zero():
-    got = _fold(([], [], [[]]), [(None, 1, 4.0)])
-    assert got == ([0], [1], [[4.0]])
+def _reference_fold(cfg, ts_ms, arrival, vals, new):
+    """The pandas fold the list fold replaced, kept as the reference:
+    concat → stable (ts, is_new, arrival) sort → first per ts → tail."""
+    import pandas as pd
+
+    if not len(new):
+        return ts_ms, arrival, vals
+    cur = pd.DataFrame(
+        {
+            "_ts": ts_ms + new[cfg.ts].astype("int64").tolist(),
+            "_is_new": [0] * len(ts_ms) + [1] * len(new),
+            "_arr": arrival + new[cfg.arrival].astype("int64").tolist(),
+            **{
+                f"_v{i}": vals[i] + new[c].tolist()
+                for i, c in enumerate(cfg.value_cols)
+            },
+        }
+    )
+    cur = cur.sort_values(["_ts", "_is_new", "_arr"], kind="stable")
+    cur = cur[~cur["_ts"].duplicated(keep="first")]
+    if cfg.max_per_track:
+        cur = cur.tail(cfg.max_per_track)
+    return (
+        cur["_ts"].tolist(),
+        cur["_arr"].tolist(),
+        [cur[f"_v{i}"].tolist() for i in range(len(cfg.value_cols))],
+    )
+
+
+def test_fold_equals_pandas_reference_on_random_cases():
+    """The list fold returns exactly what the pandas reference does —
+    same rows, same order, Python ints — over seeded random cases with ts
+    collisions, resends of stored timestamps, int64-extreme and negative
+    arrival ids, and caps 0 (unbounded), 1, 3 and 10."""
+    import random
+
+    import pandas as pd
+
+    from stateful_spark_streaming_spark.streaming.track_state import (
+        TrackStateConfig,
+        _fold_core,
+    )
+
+    rng = random.Random(20240101)
+    extremes = [-(2**63), 2**63 - 1, -1, 0, 1]
+
+    def arrival_id():
+        if rng.random() < 0.3:
+            return rng.choice(extremes)
+        return rng.randint(-(2**63), 2**63 - 1)
+
+    for case in range(512):
+        cfg = TrackStateConfig(
+            key="k", ts="ts", arrival="arr", value_cols=("x", "s"),
+            value_types=("double", "string"),
+            max_per_track=(0, 1, 3, 10)[case % 4], key_type="string",
+        )
+        span = rng.choice([5, 30, 10**6])  # small spans force collisions
+        stored = sorted(rng.sample(range(-span, span), rng.randint(0, min(12, span))))
+        st_arr = [arrival_id() for _ in stored]
+        st_vals = [
+            [rng.random() for _ in stored],
+            [rng.choice(["a", "b", None]) for _ in stored],
+        ]
+        n_new = rng.randint(0, 25)
+        new_ts = [
+            rng.choice(stored) if stored and rng.random() < 0.3
+            else rng.randrange(-span, span)
+            for _ in range(n_new)
+        ]
+        new = pd.DataFrame(
+            {
+                "ts": pd.Series(new_ts, dtype="int64"),
+                "arr": pd.Series([arrival_id() for _ in range(n_new)], dtype="int64"),
+                "x": pd.Series([rng.random() for _ in range(n_new)], dtype="float64"),
+                "s": pd.Series(
+                    [rng.choice(["a", "b", None]) for _ in range(n_new)], dtype=object
+                ),
+            }
+        )
+
+        def state():
+            return list(stored), list(st_arr), [list(v) for v in st_vals]
+
+        want = _reference_fold(cfg, *state(), new)
+        got = _fold_core(cfg, *state(), new)
+        assert got == want, f"case {case}"
+        assert all(type(v) is int for v in got[0] + got[1]), f"case {case}"
+        assert all(type(v) is float for v in got[2][0]), f"case {case}"
+
+
+def test_fold_input_projects_epoch_ms_and_fold_columns(spark):
+    """The projection in front of the group: a null event time becomes 0,
+    sub-ms and pre-1970 times floor like numpy's datetime64[ms] cast, and
+    only key, ts, arrival and the value columns reach the fold."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from stateful_spark_streaming_spark.streaming.track_state import (
+        TrackStateConfig,
+        _fold_input,
+    )
+
+    micros = [None, 0, 1, 999, 1_500, -1, -999, -1_000, -1_001, -1_500,
+              1_331_907_930_123_456, -86_400_000_001]
+    df = spark.createDataFrame(
+        [(f"k{i}", m, i, float(i), "x") for i, m in enumerate(micros)],
+        "key string, us long, arr long, val double, extra string",
+    ).select(
+        "key", F.timestamp_micros("us").alias("ts"), "arr", "val", "extra",
+        F.struct(F.col("val").alias("lon"), F.col("val").alias("lat")).alias("geometry"),
+    )
+    cfg = TrackStateConfig(
+        key="key", ts="ts", arrival="arr", value_cols=("val",),
+        value_types=("double",), key_type="string",
+    )
+    out = _fold_input(df, cfg)
+    assert out.columns == ["key", "ts", "arr", "val"]
+    assert dict(out.dtypes)["ts"] == "bigint"
+    got = {r.key: r.ts for r in out.collect()}
+    want = [0] + np.array(micros[1:], dtype="datetime64[us]").astype(
+        "datetime64[ms]").astype("int64").tolist()
+    assert [got[f"k{i}"] for i in range(len(micros))] == want

@@ -119,7 +119,11 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from stateful_spark_streaming_spark.session import get_spark
 
-    spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(
+        "oracle-check", master="local[8]", shuffle_partitions=8,
+        # no [Stage …] bar: it glues onto result lines in a redirected log
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
 
     con = duckdb.connect()

@@ -444,7 +444,10 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from stateful_spark_streaming_spark.session import get_spark
 
-    spark = get_spark("plan-audit", master="local[4]", shuffle_partitions=4)
+    spark = get_spark(
+        "plan-audit", master="local[4]", shuffle_partitions=4,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 
