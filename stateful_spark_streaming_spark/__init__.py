@@ -18,32 +18,3 @@ Nothing here is a translation of the reference's code — only its semantics.
 """
 
 __version__ = "0.1.0"
-
-from stateful_spark_streaming_spark.session import get_spark  # noqa: F401
-from stateful_spark_streaming_spark.operators import (  # noqa: F401
-    dedup,
-    geometry,
-    multimodal,
-    relational,
-    sampling,
-    similarity,
-    temporal,
-    text,
-    tracks,
-    windows,
-)
-from stateful_spark_streaming_spark.streaming.track_state import (  # noqa: F401
-    TrackStateConfig,
-    track_state_stream,
-)
-from stateful_spark_streaming_spark.streaming.pipeline import (  # noqa: F401
-    ParquetSnapshotSink,
-    flight_socket_pipeline,
-    multi_state_pipeline,
-    run_snapshot_query,
-    run_streaming_dedup,
-    run_streaming_enriched_counts,
-    run_streaming_event_pairs,
-    run_streaming_session_windows,
-    run_streaming_tumbling_counts,
-)

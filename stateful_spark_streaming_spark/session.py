@@ -12,10 +12,20 @@ past executor memory.
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _workers_find_package() -> bool:
+    """Whether a local Python worker finds this package: the JVM starts
+    workers in this process's working directory with its ``PYTHONPATH``."""
+    root = os.path.realpath(os.path.dirname(os.path.dirname(__file__)))
+    pythonpath = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    dirs = [os.getcwd(), *pythonpath, *site.getsitepackages()]
+    return any(d and os.path.realpath(d) == root for d in dirs)
 
 
 def get_spark(
@@ -61,6 +71,11 @@ def get_spark(
         builder = builder.config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        )
+    if master.startswith("local") and _workers_find_package():
+        # Workers import the installed pyspark, not Spark's archives: see pyworker.
+        builder = builder.config(
+            "spark.python.daemon.module", "stateful_spark_streaming_spark.pyworker"
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -625,10 +625,12 @@ def run_snapshot_query(
     trigger, so size it to key volume: a handful of partitions for
     thousands of keys (measured 3× faster than 32 partitions for 1.5k
     keys), the session default for production key counts.  Each of those
-    Python tasks also has a CPU floor outside the fold: pyspark's worker
-    calls ``importlib.invalidate_caches()``, which under Python 3.11 with
-    ``SPARK_HOME`` set re-reads ``pyspark.zip`` (96–217 ms of CPU per
-    task, median 156 ms, on a shared 4-vCPU host)."""
+    Python tasks also calls ``importlib.invalidate_caches()``, which under
+    CPython 3.11 re-reads an archive's directory for every cached
+    ``zipimporter``: ~18 per worker on Spark's ``pyspark.zip``, py4j zip
+    and spark-core jar, a median 280 ms of CPU per task.  ``get_spark``'s
+    local sessions start workers through ``pyworker``, which takes those
+    archives off the path when the installed pyspark matches (~0.1 ms)."""
     from pyspark.sql import functions as F
 
     cfg = cfg or TrackStateConfig()
