@@ -7,6 +7,23 @@ handling), Arrow on (vectorized Python interop), explicit shuffle-partition
 sizing, UTC session time zone (so timestamp semantics match the DuckDB
 oracle), and the RocksDB state store for streaming state that must scale far
 past executor memory.
+
+Streaming sessions commit state through RocksDB changelog checkpointing:
+each commit writes one small changelog file per state partition, and a
+maintenance thread uploads a full snapshot every ``minDeltasForSnapshot``
+versions.  Without it every commit copies the SST files and zips a
+snapshot.  A restart loads the latest snapshot and replays the changelogs
+after it, and it works from checkpoints written either way.
+
+Sessions with a ``local`` master also rename checkpoint files through
+Hadoop's ``FileSystem`` API (``FileSystemBasedCheckpointFileManager``)
+instead of Spark's ``FileContext`` default.  Without native Hadoop
+libraries, each ``FileContext`` rename on the local file system resolves
+symlinks by starting a ``readlink`` subprocess.  On local disk
+``FileSystem.rename`` is ``rename(2)``, which is atomic and overwrites the
+target.  Cluster masters keep the ``FileContext`` manager because
+``FileSystem.rename`` semantics differ by store: on HDFS it does not
+overwrite an existing file.
 """
 
 from __future__ import annotations
@@ -65,14 +82,25 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    local = master.startswith("local")
     if streaming:
         # RocksDB-backed state store: state spills to local disk instead of
-        # executor heap — required once keyed state outgrows memory.
+        # executor heap — required once keyed state outgrows memory.  It
+        # commits changelogs, not snapshots (see the module docstring).
         builder = builder.config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        ).config(
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true"
         )
-    if master.startswith("local") and _workers_find_package():
+        if local:
+            # rename(2) without a readlink subprocess (see the module docstring)
+            builder = builder.config(
+                "spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager",
+            )
+    if local and _workers_find_package():
         # Workers import the installed pyspark, not Spark's archives: see pyworker.
         builder = builder.config(
             "spark.python.daemon.module", "stateful_spark_streaming_spark.pyworker"
