@@ -18,9 +18,12 @@ per-key snapshot rows on update and maintain the full table in the SINK.
 The sink is ``ParquetSnapshotSink``: foreachBatch APPENDS the batch's
 updated-key rows — a distributed executor write, nothing touches the
 driver — into a parquet upsert log stamped with the batch id.  The
-all-keys view is merge-on-read (latest row per key by batch id), i.e.
-Delta/Iceberg MERGE semantics expressed over plain parquet, and
-``compact()`` folds the log into a base table to bound read
+append is rebalanced with AQE on in the stream's session clone for that
+write only, so a small batch lands as one file per trigger (a read pays
+per file) and a big one is still split.  The all-keys view is
+merge-on-read (latest row per key by batch id), i.e. Delta/Iceberg MERGE
+semantics expressed over plain parquet, read with a schema the sink
+learns once; ``compact()`` folds the log into a base table to bound read
 amplification.  Driver memory is O(1); the snapshot survives restarts
 because the log lives next to the checkpoint.  The reference's console
 display (``.show()``, StreamWithStates.scala:36-53) is ``show=True`` on
@@ -68,11 +71,14 @@ class ParquetSnapshotSink:
 
     ``__call__`` (foreachBatch) appends the micro-batch's snapshot rows to
     ``<path>/log`` with the batch id — a distributed write; the driver never
-    sees row data.  ``query()`` serves SQL over the all-keys view: base ∪ log,
-    keep the newest row per key (``row_number`` over batch id desc).  At
-    100 TB of keys every piece stays distributed: the append is O(updated
-    keys) per trigger, the merge is one shuffle on the key, and ``compact()``
-    (call it between triggers or from a maintenance job) rewrites base :=
+    sees row data.  The write is a ``rebalance`` with AQE on for that write
+    only: one file per trigger for small batches, still parallel for big
+    ones.  ``query()`` serves SQL over the all-keys view: base ∪ log,
+    keep the newest row per key (``row_number`` over batch id desc), read
+    with the schema learned on the sink's first read.  At 100 TB of keys
+    every piece stays distributed: the append is O(updated keys) per
+    trigger, the merge is one shuffle on the key, and ``compact()`` (call
+    it between triggers or from a maintenance job) rewrites base :=
     merged(base, log) so reads don't degrade as the log grows.
 
     Replay-safe: a crash between the append and the checkpoint commit makes
@@ -103,15 +109,31 @@ class ParquetSnapshotSink:
         self.sql = sql or f"select * from {view_name}"  # Q1 default
         self.show = show
         self.batches_seen = 0
+        # fixed by the stream's output schema; learned by ``_read_log``
+        self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(self.log_dir)
-        )
+        # AQE coalesces the rebalance to one file for a small batch and
+        # splits a big one.  Spark turns AQE off in a stream's session
+        # clone, so turn it on there for this write only: the write plans
+        # over the already-planned micro-batch, and the ``finally`` keeps
+        # it off for the next trigger's planning.  Not ``_session_confs``:
+        # ``_await_or_die`` holds its lock while it stops a query, so a
+        # batch waiting on it would stall the stop.
+        conf, aqe_key = batch_df.sparkSession.conf, "spark.sql.adaptive.enabled"
+        aqe = conf.get(aqe_key)
+        conf.set(aqe_key, "true")
+        try:
+            (
+                batch_df.withColumn("_batch_id", F.lit(batch_id))
+                .hint("rebalance")
+                .write.mode("append")
+                .parquet(self.log_dir)
+            )
+        finally:
+            conf.set(aqe_key, aqe)
         self.batches_seen += 1
         # register per batch only when something READS the view mid-stream
         # (the show console path).  Registration re-lists both dirs and
@@ -128,9 +150,11 @@ class ParquetSnapshotSink:
             self.spark.sql(self.sql).show()
 
     def _read_log(self) -> DataFrame | None:
-        """base ∪ log, or None if nothing has been written yet.  A dir
-        whose first write is still in flight holds only _temporary — treat
-        it as absent rather than failing schema inference."""
+        """base ∪ log, or None if nothing has been written yet.  The first
+        successful read infers the schema (one Spark job over a footer);
+        later reads pass it.  A dir whose first write is still in flight
+        holds only _temporary: before the schema is known it is skipped
+        rather than failing inference, after it reads as empty."""
         from pyspark.errors import AnalysisException
 
         from stateful_spark_streaming_spark.generations import (
@@ -146,10 +170,14 @@ class ParquetSnapshotSink:
         for d in (self.base_dir, self.log_dir):
             if not os.path.exists(d):
                 continue
+            reader = self.spark.read
+            if self._schema is not None:
+                reader = reader.schema(self._schema)
             try:
-                dfs.append(self.spark.read.parquet(d))
+                dfs.append(reader.parquet(d))
             except AnalysisException:
                 continue
+            self._schema = dfs[-1].schema
         if not dfs:
             return None
         df = dfs[0]
