@@ -43,6 +43,18 @@ Without one, the harness makes the checkpoint under a per-process scratch
 root and deletes it once the replay succeeds; outputs go to fresh dirs
 under the same root (returned frames are lazy, so they must outlive the
 call), and the root is removed at interpreter exit.
+
+Staged-log contract: a runner whose ``foreachBatch`` appends per-batch
+partials (vocab, LM counts, sketches, histograms, span index...) has one
+``STAGED_SINK_COMPACTION`` spec per log, declaring each column's fold
+class.  The sink appends through ``_append_partial`` (stamped with the
+batch id unless the spec says otherwise); the runner recovers the log's
+generation (``recover_generation(clean=False)``) before ``_replay``, so a
+batch never appends beside a half-swapped compaction; and it reads only
+through ``_read_partial_log``, the same ``_fold_partial_log`` that
+``compact_partial_log`` rewrites the log with.  Replay dedupe, the
+cross-batch fold and the KMV width check therefore live in one place,
+and compaction cannot change what a runner reads.
 """
 
 from __future__ import annotations
@@ -58,6 +70,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from stateful_spark_streaming_spark.generations import (
+    recover_generation,
+    swap_generation,
+)
 from stateful_spark_streaming_spark.sources.flights import parse_flight_lines
 from stateful_spark_streaming_spark.streaming.track_state import (
     TrackStateConfig,
@@ -275,8 +291,8 @@ def _uncommitted_batch(checkpoint_dir: str) -> int | None:
     return max(pending) if pending else None
 
 
-def compact_partial_log(
-    spark: SparkSession,
+def _fold_partial_log(
+    df: DataFrame,
     path: str,
     keys: list[str] | tuple[str, ...],
     sums: tuple[str, ...] = (),
@@ -286,31 +302,95 @@ def compact_partial_log(
     kmvs: tuple[str, ...] = (),
     kmv_k: int = 256,
     batch_col: str | None = "_batch_id",
-    checkpoint_dir: str | None = None,
-) -> None:
-    """Fold a batch-stamped additive partial log into ONE compacted
-    generation — the shared compaction the staged ``foreachBatch`` sinks
-    (vocab, LM counts, span index, corpus-report stats/fps, minhash
-    admitted log) advertise: without it an always-on ingest stream grows
-    an append log forever and the read path degrades into a
-    many-small-files scan (the 100 TB regression SCALE.md warns about).
+) -> DataFrame:
+    """THE fold of a staged partial log (``df``, read from ``path``) —
+    one row per ``keys``, the same columns back.  Both the runners' read
+    paths (``_read_partial_log``) and ``compact_partial_log`` go through
+    it, so a compacted generation reads exactly like the log it folded.
 
-    Semantics — read-result IDENTICAL before/after, by construction:
-    1. replay dedupe exactly as the read paths do (one row per
-       (keys, batch); replayed appends are byte-identical so ``max`` of
-       each value column is the single true value — or plain DISTINCT
-       when the log carries no batch stamp);
-    2. cross-batch fold per ``keys``: ``sums`` columns are summed (the
-       additive partials), ``mins``/``maxs`` folded respectively — a
-       column whose rows are FINAL per key (e.g. per-doc counts that
-       live in exactly one batch) goes in ``maxs``, where the fold is a
-       no-op collapse of replays;
-    3. the folded row is stamped with the max batch id seen, so the
-       unchanged per-(keys, batch) dedupe on the read path treats the
-       compacted generation exactly like one big committed batch.
-    Every log column must be declared in keys/sums/mins/maxs — an
-    undeclared column is a schema drift and raises instead of being
-    silently dropped.
+    1. replay dedupe: a crash between a batch's append and its checkpoint
+       commit re-appends byte-identical rows under the same batch id, so
+       when the log carries additive ``sums`` the rows first collapse to
+       one per (keys, batch) (``max`` of each value column is the single
+       true value).  Every other fold class is idempotent and absorbs
+       replays itself; a log with no batch stamp is folded by DISTINCT.
+    2. cross-batch fold per ``keys``: ``sums`` summed, ``mins``/``maxs``
+       folded respectively (a column whose rows are FINAL per key, e.g.
+       per-doc counts that live in one batch, goes in ``maxs``),
+       ``hlls`` (DataSketches binaries) unioned, ``kmvs`` (bottom-k hash
+       arrays) set-unioned and cut back to the ``kmv_k`` smallest.
+    3. the folded row keeps the max batch id seen, so a compacted
+       generation is one big committed batch to every later read.
+    Every log column must be declared in keys/sums/mins/maxs/hlls/kmvs:
+    an undeclared column is schema drift and raises instead of being
+    silently dropped.  A KMV log's ``_kmv_k`` width stamp (NULL on rows
+    written before the stamp existed) must match ``kmv_k``: bottom-k of a
+    union of bottom-k' sketches is the global bottom-k only when k <= k',
+    and the m < k exact-count branch is wrong either way."""
+    from pyspark.sql import functions as F
+
+    if kmvs and "_kmv_k" in df.columns:
+        ks = {
+            r[0]
+            for r in df.select("_kmv_k").distinct().collect()
+            if r[0] is not None
+        }
+        if ks and ks != {int(kmv_k)}:
+            raise ValueError(
+                f"staged KMV log {path} was written with k={sorted(ks)} "
+                f"(its _kmv_k stamp), but this fold uses k={kmv_k} — re-read "
+                "or compact with the writer's k (run_streaming_distinct_kmv"
+                "(k=...), distinct_kmv_compaction_spec(k=...)); mixing "
+                "widths silently corrupts the estimator"
+            )
+        # constant per log: carried through the fold (max ignores the
+        # NULL stamps of legacy rows)
+        maxs = (*maxs, "_kmv_k")
+    value_cols = [*sums, *mins, *maxs, *hlls, *kmvs]
+    declared = set(keys) | set(value_cols) | ({batch_col} if batch_col else set())
+    if set(df.columns) != declared:
+        raise ValueError(
+            f"partial log at {path} has columns {sorted(df.columns)}, "
+            f"declared {sorted(declared)} — refusing to drop data silently"
+        )
+    if batch_col is None:
+        return df.distinct()
+    per_batch = (
+        df.groupBy(*keys, batch_col).agg(*[F.max(c).alias(c) for c in value_cols])
+        if sums
+        else df
+    )
+    return per_batch.groupBy(*keys).agg(
+        *[F.sum(c).alias(c) for c in sums],
+        *[F.min(c).alias(c) for c in mins],
+        *[F.max(c).alias(c) for c in maxs],
+        *[F.hll_union_agg(c, F.lit(False)).alias(c) for c in hlls],
+        # bounded per key by n_batches * k longs inside one agg row
+        *[
+            F.slice(
+                F.array_sort(F.array_distinct(F.flatten(F.collect_list(c)))),
+                1,
+                kmv_k,
+            ).alias(c)
+            for c in kmvs
+        ],
+        F.max(batch_col).alias(batch_col),
+    ).select(*df.columns)
+
+
+def compact_partial_log(
+    spark: SparkSession,
+    path: str,
+    checkpoint_dir: str | None = None,
+    **spec,
+) -> None:
+    """Rewrite the staged partial log at ``path`` as ONE generation
+    folded by ``_fold_partial_log`` under ``spec`` (a
+    ``STAGED_SINK_COMPACTION`` entry or a ``*_compaction_spec`` result)
+    — without it an always-on ingest stream grows an append log forever
+    and the read path degrades into a many-small-files scan (the 100 TB
+    regression SCALE.md warns about).  The read result is identical
+    before and after, because the reads apply the same fold.
 
     The swap goes through ``generations``: the folded generation is
     fully written to ``<path>.tmp`` (parquet ``_SUCCESS`` as the commit
@@ -321,20 +401,21 @@ def compact_partial_log(
     between a crash and its restart would fold the uncommitted batch's
     rows and then see the replay re-append them — the (keys, batch)
     dedupe can no longer collapse the pair because the folded row
-    carries the max stamp, and sums would double-count.
+    carries the max stamp, and sums would double-count.  Pass the owning
+    stream's ``checkpoint_dir`` to turn that contract into a guard: the
+    checkpoint's write-ahead ``offsets`` log runs one entry ahead of
+    ``commits`` exactly while a batch is in flight or died uncommitted,
+    so compaction REFUSES when the newest offsets entry has no matching
+    commit.
 
-    Pass the owning stream's ``checkpoint_dir`` to turn that contract
-    from docstring into a guard: the checkpoint's write-ahead ``offsets``
-    log runs one entry ahead of ``commits`` exactly while a batch is
-    in flight or died uncommitted, so compaction REFUSES when the newest
-    offsets entry has no matching commit — the double-count window
-    above, detected from the same metadata the restart replay uses."""
+    A KMV log with rows that carry no ``_kmv_k`` stamp (written before
+    the stamp) gets a width check instead: a sketch wider than the
+    spec's ``kmv_k`` was written with a larger k, and rewriting it
+    through the fold would narrow it for good.  A narrowing READ loses
+    nothing (the log keeps the full sketch), so only compaction checks
+    it.  The check misses the case where every batch is under the wrong
+    k but their union is not; the stamp closes that for stamped rows."""
     from pyspark.sql import functions as F
-
-    from stateful_spark_streaming_spark.generations import (
-        recover_generation,
-        swap_generation,
-    )
 
     if checkpoint_dir is not None:
         pending = _uncommitted_batch(checkpoint_dir)
@@ -351,46 +432,10 @@ def compact_partial_log(
     if not os.path.exists(path):
         return  # nothing staged yet — zero-batch streams have no log
     df = spark.read.parquet(path)
-    orig_cols = list(df.columns)
-    if kmvs and "_kmv_k" in df.columns:
-        # the writer stamped its sketch width into the log (the strong
-        # form of the ADVICE r12 guard): validate it outright — the
-        # width-measuring fallback below can NOT catch a narrowing fold
-        # when every per-batch sketch is individually under the wrong k
-        # but their union exceeds it (review r13)
-        # NULL stamps are LEGACY rows (ADVICE r13): a log that mixes
-        # pre-stamp and stamped batches — exactly what resuming an
-        # existing stream under the stamping writer produces — must not
-        # fail the mismatch check on the NULLs; the unstamped rows fall
-        # back to the width heuristic below, like a fully stampless log
-        ks = {
-            r[0]
-            for r in df.select("_kmv_k").distinct().collect()
-            if r[0] is not None
-        }
-        if ks and ks != {int(kmv_k)}:
-            raise ValueError(
-                f"partial log at {path} is stamped _kmv_k={sorted(ks)} but "
-                f"this compaction uses kmv_k={kmv_k} — a mismatched fold "
-                "narrows/widens the sketch and corrupts read-path "
-                "estimates.  Compact with "
-                "distinct_kmv_compaction_spec(k=<writer's k>)."
-            )
-        # constant per log — carry it through the fold unchanged (max
-        # ignores NULLs, so a mixed group folds to the stamped k)
-        maxs = (*maxs, "_kmv_k")
-        has_legacy = bool(
-            df.filter(F.col("_kmv_k").isNull()).limit(1).count()
-        )
-    else:
-        has_legacy = bool(kmvs)
-    if kmvs and has_legacy:
-        # stampless (pre-r13) rows — a fully legacy log, or the legacy
-        # batches of a mixed one: measure the staged width — catches a
-        # log written with k > kmv_k whenever any batch saw ≥ kmv_k
-        # distincts, but NOT the all-batches-narrow union case; the
-        # stamped path above is the complete guard for stamped rows
-        widest = df.select(
+    kmvs, kmv_k = spec.get("kmvs", ()), spec.get("kmv_k", 256)
+    if kmvs:
+        legacy = df.filter(F.col("_kmv_k").isNull()) if "_kmv_k" in df.columns else df
+        widest = legacy.select(
             *[F.max(F.size(F.col(c))).alias(c) for c in kmvs]
         ).first()
         for c in kmvs:
@@ -398,59 +443,46 @@ def compact_partial_log(
                 raise ValueError(
                     f"partial log at {path} holds a {c} sketch of width "
                     f"{widest[c]} > kmv_k={kmv_k} — it was written with a "
-                    "larger k; folding would narrow the sketch and corrupt "
-                    "read-path estimates.  Compact with "
-                    "distinct_kmv_compaction_spec(k=<writer's k>)."
+                    "larger k; folding would narrow the sketch for good.  "
+                    "Compact with distinct_kmv_compaction_spec(k=<writer's k>)."
                 )
-    value_cols = [*sums, *mins, *maxs, *hlls, *kmvs]
-    declared = set(keys) | set(value_cols) | ({batch_col} if batch_col else set())
-    if set(orig_cols) != declared:
-        raise ValueError(
-            f"partial log at {path} has columns {sorted(df.columns)}, "
-            f"declared {sorted(declared)} — refusing to drop data silently"
-        )
-    if batch_col is None:
-        folded = df.distinct()
-    else:
-        # identity-only logs (no value columns): the per-(keys, batch)
-        # dedupe degenerates to DISTINCT and the fold keeps the max stamp
-        per_batch = (
-            df.distinct()
-            if not value_cols
-            else df.groupBy(*keys, batch_col).agg(
-                *[F.max(c).alias(c) for c in value_cols]
-            )
-        )
-        folded = per_batch.groupBy(*keys).agg(
-            *[F.sum(c).alias(c) for c in sums],
-            *[F.min(c).alias(c) for c in mins],
-            *[F.max(c).alias(c) for c in maxs],
-            # DataSketches HLL binaries fold by union (register-wise max
-            # — idempotent, so this is also safe on replayed rows)
-            *[F.hll_union_agg(c, F.lit(False)).alias(c) for c in hlls],
-            # KMV bottom-k hash arrays fold by set-union + re-bottom-k
-            # (idempotent; kmv_k MUST match the writing runner's k).
-            # Bounded per key by n_batches * k longs inside one agg row.
-            *[
-                F.slice(
-                    F.array_sort(
-                        F.array_distinct(F.flatten(F.collect_list(c)))
-                    ),
-                    1,
-                    kmv_k,
-                ).alias(c)
-                for c in kmvs
-            ],
-            F.max(batch_col).alias(batch_col),
-        )
-    folded.select(*orig_cols).write.mode("overwrite").parquet(path + ".tmp")
+    _fold_partial_log(df, path, **spec).write.mode("overwrite").parquet(path + ".tmp")
     swap_generation(path)
 
 
-#: per-sink compaction parameter sets — the declared identity/fold class
-#: of every column each staged sink appends.  ``<ckpt>`` is the
-#: checkpoint_dir the run_streaming_* call used; pytest drives each spec
-#: and asserts byte-identical read results + a file-count drop.
+def distinct_sketch_compaction_spec(key: str = "event_type") -> dict:
+    """Spec of a ``run_streaming_distinct_stats`` log keyed on ``key``:
+    HLL binaries fold by union, the row count is the additive half."""
+    return dict(keys=[key], sums=("n_rows",), hlls=("sk",))
+
+
+def distinct_kmv_compaction_spec(k: int = 256, key: str = "event_type") -> dict:
+    """Spec of a ``run_streaming_distinct_kmv`` log keyed on ``key`` and
+    written with sketch width ``k``: bottom-k hash arrays fold by
+    set-union + re-bottom-k, which is only exact under the writer's k."""
+    return dict(keys=[key], sums=("n_rows",), kmvs=("hs",), kmv_k=k)
+
+
+def quality_hist_compaction_spec(group_col: str = "source") -> dict:
+    """Spec of a ``run_streaming_quality_histogram`` log grouped on
+    ``group_col``: bin counts are additive."""
+    return dict(keys=[group_col, "bin"], sums=("n",))
+
+
+def source_drift_compaction_spec(group_col: str = "source") -> dict:
+    """Spec of a ``run_streaming_source_drift`` log grouped on
+    ``group_col``: token counts are additive."""
+    return dict(keys=[group_col, "token"], sums=("c",))
+
+
+#: per-log fold specs — the declared identity/fold class of every column
+#: each staged ``foreachBatch`` sink appends.  The runner reads its log
+#: through ``_fold_partial_log`` under this spec, and
+#: ``compact_partial_log(spark, path, **spec)`` rewrites the log under the
+#: same one.  ``<ckpt>`` is the checkpoint_dir the run_streaming_* call
+#: used.  Runners whose key or sketch width is an argument build their
+#: spec with the ``*_compaction_spec`` function named here; the entry is
+#: that spec at the runner's defaults.
 STAGED_SINK_COMPACTION = {
     # run_streaming_vocab: <ckpt>_partials
     "vocab": dict(keys=["token"], sums=("term_count", "doc_freq")),
@@ -467,18 +499,11 @@ STAGED_SINK_COMPACTION = {
     # run_streaming_dedup_minhash: <ckpt>_out (no batch stamp — admitted
     # ids only; replay dedupe IS the whole fold)
     "minhash_admitted": dict(keys=["doc_id"], batch_col=None),
-    # run_streaming_distinct_stats: <ckpt>_sketches (HLL binaries fold by
-    # union; the row count is the additive half)
-    "distinct_sketch": dict(keys=["event_type"], sums=("n_rows",), hlls=("sk",)),
-    # run_streaming_distinct_kmv: <ckpt>_sketches (bottom-k hash arrays
-    # fold by set-union + re-bottom-k).  NOTE: assumes the runner's
-    # DEFAULT k=256 — a log written with another k must use
-    # distinct_kmv_compaction_spec(k).  Since r13 the writer stamps its k
-    # into the log (`_kmv_k`), so a mismatched fold or read FAILS LOUDLY
-    # instead of silently re-widthing the sketch.
-    "distinct_kmv": dict(
-        keys=["event_type"], sums=("n_rows",), kmvs=("hs",), kmv_k=256
-    ),
+    # run_streaming_distinct_stats: <ckpt>_sketches
+    "distinct_sketch": distinct_sketch_compaction_spec(),
+    # run_streaming_distinct_kmv: <ckpt>_sketches; the writer stamps its k
+    # into the log (`_kmv_k`), so a mismatched fold or read fails loudly
+    "distinct_kmv": distinct_kmv_compaction_spec(),
     # run_streaming_image_keep_best: <ckpt>_partials (n additive; the
     # lexicographic best = struct(gq, neg) folds by plain struct max) and
     # <ckpt>_nullids (per-id identity rows — no batch stamp, replay
@@ -486,36 +511,14 @@ STAGED_SINK_COMPACTION = {
     "image_kb_partials": dict(keys=["bits"], sums=("n",), maxs=("best",)),
     "image_kb_nullids": dict(keys=["image_id"], batch_col=None),
     # run_streaming_heavy_hitters: <ckpt>_counters (CMS counters are
-    # additive) and <ckpt>_cands (identity rows, replay-deduped on read)
+    # additive) and <ckpt>_cands (identity rows)
     "cms_counters": dict(keys=["r", "b"], sums=("n",)),
     "cms_candidates": dict(keys=["token"]),
-    # run_streaming_quality_histogram: <ckpt>_hist (bin counts are
-    # additive).  NOTE: this spec assumes the DEFAULT group_col="source";
-    # a log written with a different group column must compact with
-    # quality_hist_compaction_spec(group_col) instead — compacting it
-    # under this spec would group on a nonexistent (or wrong) column.
-    "quality_hist": dict(keys=["source", "bin"], sums=("n",)),
-    # run_streaming_source_drift: <ckpt>_counts (token counts are
-    # additive).  Same default-group_col caveat as quality_hist.
-    "source_token_counts": dict(keys=["source", "token"], sums=("c",)),
+    # run_streaming_quality_histogram: <ckpt>_hist
+    "quality_hist": quality_hist_compaction_spec(),
+    # run_streaming_source_drift: <ckpt>_counts
+    "source_token_counts": source_drift_compaction_spec(),
 }
-
-
-def distinct_kmv_compaction_spec(k: int = 256, key: str = "event_type") -> dict:
-    """Compaction spec for a ``run_streaming_distinct_kmv`` staged log
-    written with a non-default ``k`` or key column (the static
-    ``STAGED_SINK_COMPACTION['distinct_kmv']`` entry hardcodes the
-    defaults; folding with the wrong k silently changes the sketch the
-    read path sees)."""
-    return dict(keys=[key], sums=("n_rows",), kmvs=("hs",), kmv_k=k)
-
-
-def quality_hist_compaction_spec(group_col: str = "source") -> dict:
-    """Compaction spec for a ``run_streaming_quality_histogram`` staged
-    log written with a non-default ``group_col`` (the static
-    ``STAGED_SINK_COMPACTION['quality_hist']`` entry hardcodes the
-    default)."""
-    return dict(keys=[group_col, "bin"], sums=("n",))
 
 
 @dataclass
@@ -827,6 +830,52 @@ def _replay(
     return q
 
 
+def _stamp(part: DataFrame, batch_id: int, spec: dict) -> DataFrame:
+    """``part`` with the batch-id stamp its log's ``spec`` declares."""
+    from pyspark.sql import functions as F
+
+    batch_col = spec.get("batch_col", "_batch_id")
+    return part.withColumn(batch_col, F.lit(batch_id)) if batch_col else part
+
+
+def _append_partial(part: DataFrame, path: str, batch_id: int, spec: dict) -> None:
+    """Append micro-batch ``batch_id``'s partial to the staged log at
+    ``path`` (the runner lays out its files before the call)."""
+    _stamp(part, batch_id, spec).write.mode("append").parquet(path)
+
+
+def _as_nullable(t):
+    """Type ``t`` with every struct field and array element nullable —
+    the schema parquet reads back for a frame written as ``t``."""
+    from pyspark.sql.types import ArrayType, StructField, StructType
+
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType)) for f in t])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType))
+    return t
+
+
+def _read_partial_log(
+    spark: SparkSession, path: str, spec: dict, empty: DataFrame
+) -> DataFrame:
+    """The staged log at ``path`` folded by ``_fold_partial_log`` under
+    ``spec``, batch stamp dropped.  ``empty`` is the runner's partial
+    over an empty batch: a never-written log reads as that frame, typed
+    as parquet would hand it back, through the same fold — so the result
+    schema cannot depend on whether a batch ever fired.  A generation
+    that a crashed compaction left half-swapped is recovered first
+    (``clean=False``: a reader never deletes a writer's ``.tmp``)."""
+    recover_generation(path, clean=False)
+    if os.path.exists(path):
+        log = spark.read.parquet(path)
+    else:
+        log = _stamp(spark.createDataFrame([], _as_nullable(empty.schema)), 0, spec)
+    folded = _fold_partial_log(log, path, **spec)
+    batch_col = spec.get("batch_col", "_batch_id")
+    return folded.drop(batch_col) if batch_col else folded
+
+
 def _stage_parquet_stream(
     spark: SparkSession,
     path: str,
@@ -1133,12 +1182,7 @@ def run_streaming_dedup_minhash(
     Returns the admitted documents' ids (column ``doc_id``)."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import BooleanType, StructField, StructType
 
     from stateful_spark_streaming_spark.operators.dedup import (
         minhash_band_rows_mapinpandas,
@@ -1199,19 +1243,22 @@ def run_streaming_dedup_minhash(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def _admit(bdf: DataFrame, batch_id: int) -> None:
-        (
+    spec = STAGED_SINK_COMPACTION["minhash_admitted"]
+
+    def _admitted(bdf: DataFrame) -> DataFrame:
+        return (
             bdf.groupBy("doc_id")
             .agg(F.max(F.col("is_dup").cast("int")).alias("_d"))
             .filter(F.col("_d") == 0)
             .select("doc_id")
-            # id list is tiny relative to the corpus — don't spray 32
-            # near-empty files per batch
-            .coalesce(4)
-            .write.mode("append")
-            .parquet(out_dir)
         )
 
+    def _admit(bdf: DataFrame, batch_id: int) -> None:
+        # id list is tiny relative to the corpus — don't spray 32
+        # near-empty files per batch
+        _append_partial(_admitted(bdf).coalesce(4), out_dir, batch_id, spec)
+
+    recover_generation(out_dir, clean=False)
     _replay(
         spark,
         flagged.writeStream.foreachBatch(_admit).outputMode("update"),
@@ -1219,18 +1266,11 @@ def run_streaming_dedup_minhash(
         state_partitions=state_partitions,
         state_store=state_store,
     )
-    if not os.path.exists(out_dir):
-        # zero micro-batches ever fired (e.g. empty source dir):
-        # nothing was appended — return a typed empty frame, not a
-        # PATH_NOT_FOUND crash (same guard as run_streaming_ivf_topk)
-        return spark.createDataFrame(
-            [], StructType([StructField("doc_id", id_type)])
-        )
-    # distinct-on-read = replay idempotency: a crash between the
-    # foreachBatch append and the checkpoint commit re-appends the
-    # SAME byte-identical rows (each admitted doc belongs to exactly
-    # one batch), so distinct restores exactly-once
-    return spark.read.parquet(out_dir).distinct()
+    # each admitted doc belongs to exactly one batch, so the DISTINCT
+    # fold restores exactly-once over replayed appends
+    return _read_partial_log(
+        spark, out_dir, spec, _admitted(spark.createDataFrame([], flagged.schema))
+    )
 
 
 def run_streaming_decontaminate(
@@ -1330,54 +1370,31 @@ def run_streaming_vocab(
     """
     from pyspark.sql import functions as F
 
-    from stateful_spark_streaming_spark.operators.text import _token_occurrences
+    from stateful_spark_streaming_spark.operators.text import (
+        _token_occurrences,
+        vocab_rank,
+    )
 
     out_dir = _output_stem(checkpoint_dir, "sss_vocab_") + "_partials"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
+    spec = STAGED_SINK_COMPACTION["vocab"]
 
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
-        part = (
+    def _partial(bdf: DataFrame) -> DataFrame:
+        return (
             _token_occurrences(bdf, text_col, id_col)
             .groupBy("token", "doc_id")
             .agg(F.count("*").alias("c"))
             .groupBy("token")
             .agg(F.sum("c").alias("term_count"), F.count("*").alias("doc_freq"))
         )
-        # batch-id stamp makes the append REPLAY-IDEMPOTENT: a crash
-        # between this append and the checkpoint commit re-runs the batch
-        # with the SAME id and re-appends byte-identical rows, and the
-        # merge below collapses per (token, batch) before summing — a
-        # plain sum over raw appends would double-count the replay
-        part.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_dir)
 
+    def _sink(bdf: DataFrame, batch_id: int) -> None:
+        _append_partial(_partial(bdf), out_dir, batch_id, spec)
+
+    recover_generation(out_dir, clean=False)
     _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
-
-    from stateful_spark_streaming_spark.operators.text import vocab_rank
-
-    if not os.path.exists(out_dir):
-        # zero micro-batches: empty vocabulary in the final shape, not a
-        # PATH_NOT_FOUND crash
-        return vocab_rank(
-            spark.createDataFrame(
-                [], "token string, term_count bigint, doc_freq bigint"
-            ),
-            top_n,
-        )
-
-    merged = (
-        spark.read.parquet(out_dir)
-        # replay dedupe: one row per (token, batch) — replayed appends are
-        # byte-identical (the partial agg is deterministic), so max == the
-        # single true value; then the cross-batch sum
-        .groupBy("token", "_batch_id")
-        .agg(
-            F.max("term_count").alias("term_count"),
-            F.max("doc_freq").alias("doc_freq"),
-        )
-        .groupBy("token")
-        .agg(F.sum("term_count").alias("term_count"), F.sum("doc_freq").alias("doc_freq"))
+    merged = _read_partial_log(
+        spark, out_dir, spec, _partial(spark.createDataFrame([], stream.schema))
     )
     return vocab_rank(merged, top_n)
 
@@ -1409,10 +1426,8 @@ def run_streaming_lm_logprob(
 
     Replay idempotency: appends are batch-stamped; a replayed batch
     re-appends byte-identical rows (the per-doc count aggregate is
-    deterministic and a doc belongs to exactly one batch), so
-    distinct-on-read over the count keys restores exactly-once."""
-    from pyspark.sql import functions as F
-
+    deterministic and a doc belongs to exactly one batch), so the
+    max-of-replays fold over the count keys restores exactly-once."""
     from stateful_spark_streaming_spark.operators.text import (
         bigram_occurrence_counts,
         bigram_score_from_counts,
@@ -1420,35 +1435,20 @@ def run_streaming_lm_logprob(
 
     out_dir = _output_stem(checkpoint_dir, "sss_lm2_") + "_counts"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
-    keys = ["doc_id", "w1", "w2"]
+    spec = STAGED_SINK_COMPACTION["lm_bigram"]
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
-        part = bigram_occurrence_counts(bdf, text_col, id_col)
         # REPARTITION, not coalesce (see run_streaming_dup_spans): keep
         # the tokenize/expand stage wide, move only compact count rows
-        part.withColumn("_batch_id", F.lit(batch_id)).repartition(4).write.mode(
-            "append"
-        ).parquet(out_dir)
+        part = bigram_occurrence_counts(bdf, text_col, id_col).repartition(4)
+        _append_partial(part, out_dir, batch_id, spec)
 
+    recover_generation(out_dir, clean=False)
     _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
-
-    if not os.path.exists(out_dir):
-        # zero micro-batches: empty scores through the SAME scoring tail
-        # over a typed empty count frame — schema derived, not hand-kept
-        from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-        fields = [StructField("doc_id", stream.schema[id_col].dataType)]
-        fields += [StructField(c, StringType()) for c in keys[1:]]
-        fields += [StructField("c", LongType())]
-        return bigram_score_from_counts(spark.createDataFrame([], StructType(fields)))
-    per = (
-        spark.read.parquet(out_dir)
-        .drop("_batch_id")
-        # replay dedupe: a count row exists once per (doc, w1, w2) in the
-        # true stream; duplicates can only be replayed appends
-        .dropDuplicates(keys)
+    empty = bigram_occurrence_counts(
+        spark.createDataFrame([], stream.schema), text_col, id_col
     )
-    return bigram_score_from_counts(per)
+    return bigram_score_from_counts(_read_partial_log(spark, out_dir, spec, empty))
 
 
 def run_streaming_distinct_stats(
@@ -1481,52 +1481,27 @@ def run_streaming_distinct_stats(
 
     out_dir = _output_stem(checkpoint_dir, "sss_hll_") + "_sketches"
     stream = _stage_parquet_stream(spark, events_path, max_files_per_trigger)
+    spec = distinct_sketch_compaction_spec(key)
+
+    def _partial(bdf: DataFrame) -> DataFrame:
+        return bdf.groupBy(key).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.hll_sketch_agg(count_col, F.lit(lg_k)).alias("sk"),
+        )
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
-        (
-            bdf.groupBy(key)
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.hll_sketch_agg(count_col, F.lit(lg_k)).alias("sk"),
-            )
-            .withColumn("_batch_id", F.lit(batch_id))
-            .coalesce(1)  # partials are key-cardinality tiny
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        # partials are key-cardinality tiny
+        _append_partial(_partial(bdf).coalesce(1), out_dir, batch_id, spec)
 
+    recover_generation(out_dir, clean=False)
     _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
-
-    if not os.path.exists(out_dir):
-        from pyspark.sql.types import (
-            BinaryType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        staged = spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField(key, stream.schema[key].dataType),
-                    StructField("n_rows", LongType()),
-                    StructField("sk", BinaryType()),
-                    StructField("_batch_id", LongType()),
-                ]
-            ),
-        )
-    else:
-        staged = spark.read.parquet(out_dir)
-    return (
-        staged.dropDuplicates([key, "_batch_id"])
-        .groupBy(key)
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.hll_sketch_estimate(F.hll_union_agg("sk", F.lit(False)))
-            .cast("long")
-            .alias("approx_distinct"),
-        )
+    folded = _read_partial_log(
+        spark, out_dir, spec, _partial(spark.createDataFrame([], stream.schema))
+    )
+    return folded.select(
+        key,
+        "n_rows",
+        F.hll_sketch_estimate("sk").cast("long").alias("approx_distinct"),
     )
 
 
@@ -1548,9 +1523,9 @@ def run_streaming_distinct_kmv(
     ARRAY) partial — state per key is bounded by k longs regardless of
     batch size because the bottom-k is computed by the shared
     ``kmv_bottom_hashes`` two-level window, never a collect of the full
-    distinct set.  The read side dedupes replays per (key, batch),
-    explodes the arrays, re-runs distinct + bottom-k over the union, and
-    finalizes with the SAME estimator as the batch operator: bottom-k of
+    distinct set.  The read side's fold dedupes replays per (key, batch),
+    set-unions the arrays and keeps their bottom-k, and finalizes with
+    the SAME estimator as the batch operator: bottom-k of
     a union of per-batch bottom-ks equals the global bottom-k (any
     globally-kept hash arrived in some batch and survived that batch's
     bottom-k), so streaming ≡ batch EXACTLY — equality, not tolerance.
@@ -1559,7 +1534,6 @@ def run_streaming_distinct_kmv(
     the (key, batch) dedupe restores exactly-once — and even a missed
     duplicate would be absorbed by set-union idempotency for the sketch
     (only the additive row count strictly needs the dedupe)."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from stateful_spark_streaming_spark.operators.relational import (
@@ -1569,84 +1543,34 @@ def run_streaming_distinct_kmv(
 
     out_dir = _output_stem(checkpoint_dir, "sss_kmv_") + "_sketches"
     stream = _stage_parquet_stream(spark, events_path, max_files_per_trigger)
+    spec = distinct_kmv_compaction_spec(k, key)
 
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
+    def _partial(bdf: DataFrame) -> DataFrame:
         counts = bdf.groupBy(key).agg(F.count(F.lit(1)).alias("n_rows"))
         bottom = (
             kmv_bottom_hashes(bdf, key, count_col, k=k)
             .groupBy(key)
             .agg(F.array_sort(F.collect_list("h")).alias("hs"))
         )
-        (
-            counts.join(bottom, key, "left")
-            .withColumn("_batch_id", F.lit(batch_id))
-            # stamp the sketch width INTO the log: a fold or read under a
-            # different k narrows/widens the sketch silently (the width
-            # heuristic alone can't catch a narrowing fold when every
-            # per-batch sketch happens to be under the wrong k — their
-            # UNION can still exceed it; review r13)
-            .withColumn("_kmv_k", F.lit(int(k)))
-            .coalesce(1)  # partials are key-cardinality tiny
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        # stamp the sketch width INTO the log: a fold or read under a
+        # different k narrows/widens the sketch silently (the width
+        # heuristic alone can't catch a narrowing fold when every
+        # per-batch sketch happens to be under the wrong k — their
+        # UNION can still exceed it; review r13)
+        return counts.join(bottom, key, "left").withColumn("_kmv_k", F.lit(int(k)))
 
+    def _sink(bdf: DataFrame, batch_id: int) -> None:
+        # partials are key-cardinality tiny
+        _append_partial(_partial(bdf).coalesce(1), out_dir, batch_id, spec)
+
+    recover_generation(out_dir, clean=False)
     _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
-
-    if not os.path.exists(out_dir):
-        from pyspark.sql.types import (
-            ArrayType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        staged = spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField(key, stream.schema[key].dataType),
-                    StructField("n_rows", LongType()),
-                    StructField("hs", ArrayType(LongType())),
-                    StructField("_batch_id", LongType()),
-                ]
-            ),
-        )
-    else:
-        staged = spark.read.parquet(out_dir)
-    if "_kmv_k" in staged.columns:
-        # refuse to read a log written under a different k: bottom-k of a
-        # union of bottom-k' sketches is only the global bottom-k when
-        # k <= k', and the m < k exact-count branch is wrong either way.
-        # NULL stamps are LEGACY rows (ADVICE r13) — a resumed stream's
-        # pre-stamp batches — and must not fail the check; they carry no
-        # width claim to validate (the writer-k heuristic for them is the
-        # compaction path's width measurement)
-        ks = {
-            r[0]
-            for r in staged.select("_kmv_k").distinct().collect()
-            if r[0] is not None
-        }
-        if ks and ks != {int(k)}:
-            raise ValueError(
-                f"staged KMV log {out_dir} was written with k={sorted(ks)}, "
-                f"but this read uses k={k} — re-read with the writer's k "
-                "(mixing widths silently corrupts the estimator)"
-            )
-        staged = staged.drop("_kmv_k")
-    staged = staged.dropDuplicates([key, "_batch_id"])
-    counts = staged.groupBy(key).agg(F.sum("n_rows").alias("n_rows"))
-    merged = (
-        staged.select(key, F.explode("hs").alias("h"))
-        .distinct()
+    # the fold leaves one row per key with hs = the bottom-k of the union
+    folded = _read_partial_log(
+        spark, out_dir, spec, _partial(spark.createDataFrame([], stream.schema))
     )
-    w = Window.partitionBy(key).orderBy(F.col("h").asc())
-    bottom = (
-        merged.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
-        .drop("__rk")
-    )
-    return kmv_finalize(bottom, counts, key, k)
+    bottom = folded.select(key, F.explode("hs").alias("h"))
+    return kmv_finalize(bottom, folded.select(key, "n_rows"), key, k)
 
 
 def run_streaming_image_keep_best(
@@ -1705,7 +1629,10 @@ def run_streaming_image_keep_best(
     nbits = grid * grid
     stream = _stage_parquet_stream(spark, images_path, max_files_per_trigger)
 
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
+    spec = STAGED_SINK_COMPACTION["image_kb_partials"]
+    null_spec = STAGED_SINK_COMPACTION["image_kb_nullids"]
+
+    def _hashed(bdf: DataFrame) -> DataFrame:
         # coalesce NULL quality (NULL width/height) to -1 — the batch
         # operator's missing-quality rank.  Without it a hash group whose
         # members ALL have NULL quality gets gq NULL, the achiever filter
@@ -1717,11 +1644,11 @@ def run_streaming_image_keep_best(
             ).cast("long"),
             F.lit(-1).cast("long"),
         )
-        # pin the decoded batch: grp, gbest, and the null tail all read it,
-        # and its upstream is the per-image decode kernel
-        hashed = MM.image_ahash(bdf, grid=grid).join(
+        return MM.image_ahash(bdf, grid=grid).join(
             bdf.select("image_id", qbp.alias("__qbp")), "image_id"
-        ).persist()
+        )
+
+    def _partial(hashed: DataFrame) -> DataFrame:
         ok = hashed.filter(F.col("ahash_bits").isNotNull())
         grp = ok.groupBy(F.col("ahash_bits").alias("bits")).agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -1736,90 +1663,59 @@ def run_streaming_image_keep_best(
             .groupBy(F.col("ahash_bits").alias("bits"))
             .agg(F.min("image_id").alias("__gid"))
         )
-        (
-            grp.join(gbest, "bits")
-            .select(
-                "bits",
-                "n",
-                F.struct(
-                    F.col("__gq").alias("gq"),
-                    (-F.col("__gid")).alias("neg"),
-                ).alias("best"),
-            )
-            .withColumn("_batch_id", F.lit(batch_id))
-            .coalesce(1)  # partials are distinct-hash tiny
-            .write.mode("append")
-            .parquet(out_dir)
+        return grp.join(gbest, "bits").select(
+            "bits",
+            "n",
+            F.struct(
+                F.col("__gq").alias("gq"),
+                (-F.col("__gid")).alias("neg"),
+            ).alias("best"),
         )
-        nulls = hashed.filter(F.col("ahash_bits").isNull()).select("image_id")
+
+    def _nullids(hashed: DataFrame) -> DataFrame:
+        return hashed.filter(F.col("ahash_bits").isNull()).select("image_id")
+
+    def _sink(bdf: DataFrame, batch_id: int) -> None:
+        # pin the decoded batch: grp, gbest, and the null tail all read it,
+        # and its upstream is the per-image decode kernel
+        hashed = _hashed(bdf).persist()
+        # partials are distinct-hash tiny
+        _append_partial(_partial(hashed).coalesce(1), out_dir, batch_id, spec)
+        nulls = _nullids(hashed)
         if nulls.limit(1).count():
-            nulls.coalesce(1).write.mode("append").parquet(null_dir)
+            _append_partial(nulls.coalesce(1), null_dir, batch_id, null_spec)
         hashed.unpersist()
 
+    for d in (out_dir, null_dir):
+        recover_generation(d, clean=False)
     _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
 
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    partial_schema = StructType(
-        [
-            StructField("bits", StringType()),
-            StructField("n", LongType()),
-            StructField(
-                "best",
-                StructType(
-                    [StructField("gq", LongType()), StructField("neg", LongType())]
-                ),
-            ),
-            StructField("_batch_id", LongType()),
-        ]
-    )
-    staged = (
-        spark.read.parquet(out_dir)
-        if os.path.exists(out_dir)
-        else spark.createDataFrame([], partial_schema)
-    )
     from stateful_spark_streaming_spark.caching import track_persist
 
+    empty = _hashed(spark.createDataFrame([], stream.schema))
     # persisted for the same reason the batch operator pins its gsum
     # (dedup.py): keep_best_from_hash_summaries consumes the summary
     # frame from several sub-plans (edge generation, the cluster join,
     # winner selection) — unpinned, each consumer re-runs the staged-log
     # scan + replay-dedupe + fold.  Distinct-hash-sized.
     gsum = track_persist(
-        staged.dropDuplicates(["bits", "_batch_id"])
-        .groupBy(F.col("bits").alias("__bits"))
-        .agg(
-            F.sum("n").cast("long").alias("__n"),
-            F.max("best").alias("__b"),
-        )
-        .select(
-            "__bits",
-            "__n",
-            F.col("__b.gq").alias("__gq"),
-            (-F.col("__b.neg")).alias("__gid"),
+        _read_partial_log(spark, out_dir, spec, _partial(empty)).select(
+            F.col("bits").alias("__bits"),
+            F.col("n").alias("__n"),
+            F.col("best.gq").alias("__gq"),
+            (-F.col("best.neg")).alias("__gid"),
         )
     )
     winners = keep_best_from_hash_summaries(
         gsum, id_col="image_id", max_ham=max_ham, n_bands=n_bands, nbits=nbits,
         max_cluster_frac=max_cluster_frac,
     )
-    if os.path.exists(null_dir):
-        nulls = (
-            spark.read.parquet(null_dir)
-            .distinct()  # replay dedupe: identity rows
-            .select(
-                "image_id",
-                F.lit(1).cast("long").alias("cluster_size"),
-                F.lit("unique").alias("reason"),
-            )
-        )
-        winners = winners.unionByName(nulls)
-    return winners
+    nulls = _read_partial_log(spark, null_dir, null_spec, _nullids(empty)).select(
+        "image_id",
+        F.lit(1).cast("long").alias("cluster_size"),
+        F.lit("unique").alias("reason"),
+    )
+    return winners.unionByName(nulls)
 
 
 def run_streaming_quality_histogram(
@@ -1844,7 +1740,7 @@ def run_streaming_quality_histogram(
     operator, so streaming ≡ batch is exact row-for-row.  Staged state
     is ≤ ``groups × n_bins`` rows per batch regardless of document
     volume, and the log folds at any cadence via ``compact_partial_log``
-    (spec ``STAGED_SINK_COMPACTION['quality_hist']``)."""
+    (spec ``quality_hist_compaction_spec(group_col)``)."""
     from pyspark.sql import functions as F
 
     from stateful_spark_streaming_spark.operators.stats import (
@@ -1855,6 +1751,18 @@ def run_streaming_quality_histogram(
 
     out_dir = _output_stem(checkpoint_dir, "sss_qhist_") + "_hist"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
+    spec = quality_hist_compaction_spec(group_col)
+
+    def _counts(bdf: DataFrame) -> DataFrame:
+        return (
+            quality_score(bdf, keep_cols=(group_col,))
+            .select(
+                group_col,
+                scaled_bin(F.col("quality_score"), n_bins, scale).alias("bin"),
+            )
+            .groupBy(group_col, "bin")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         # NULL bins drop AFTER the aggregate, from a persisted counts
@@ -1864,40 +1772,17 @@ def run_streaming_quality_histogram(
         # micro-batch.  The persist is summary-sized (≤ groups ×
         # (n_bins+1) rows) and released right after the write, so a
         # long-running stream never accumulates cache.
-        counts = (
-            quality_score(bdf, keep_cols=(group_col,))
-            .select(
-                group_col,
-                scaled_bin(F.col("quality_score"), n_bins, scale).alias("bin"),
-            )
-            .groupBy(group_col, "bin")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .persist()
-        )
+        counts = _counts(bdf).persist()
         try:
-            (
-                counts.filter(F.col("bin").isNotNull())
-                .withColumn("_batch_id", F.lit(batch_id))
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(out_dir)
-            )
+            part = counts.filter(F.col("bin").isNotNull()).coalesce(1)
+            _append_partial(part, out_dir, batch_id, spec)
         finally:
             counts.unpersist()
 
+    recover_generation(out_dir, clean=False)
     _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
-
-    if not os.path.exists(out_dir):
-        staged = spark.createDataFrame(
-            [], f"{group_col} string, bin int, n bigint, _batch_id long"
-        )
-    else:
-        staged = spark.read.parquet(out_dir)
-    merged = (
-        staged.groupBy(group_col, "bin", "_batch_id")
-        .agg(F.max("n").alias("n"))  # replay dedupe: partials are deterministic
-        .groupBy(group_col, "bin")
-        .agg(F.sum("n").alias("n"))
+    merged = _read_partial_log(
+        spark, out_dir, spec, _counts(spark.createDataFrame([], stream.schema))
     )
     return histogram_finalize(merged, n_bins, scale)
 
@@ -1920,9 +1805,7 @@ def run_streaming_source_drift(
     (group, token, batch), sums, and runs the SAME
     ``source_drift_from_counts`` tail — streaming ≡ batch exact, every
     basis point.  The log folds at any cadence via ``compact_partial_log``
-    (spec ``STAGED_SINK_COMPACTION['source_token_counts']``)."""
-    from pyspark.sql import functions as F
-
+    (spec ``source_drift_compaction_spec(group_col)``)."""
     from stateful_spark_streaming_spark.operators.stats import (
         source_drift_from_counts,
         unigram_source_counts,
@@ -1930,27 +1813,18 @@ def run_streaming_source_drift(
 
     out_dir = _output_stem(checkpoint_dir, "sss_drift_") + "_counts"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
+    spec = source_drift_compaction_spec(group_col)
 
     def _sink(bdf: DataFrame, batch_id: int) -> None:
-        part = unigram_source_counts(bdf, group_col=group_col)
-        part.withColumn("_batch_id", F.lit(batch_id)).coalesce(1).write.mode(
-            "append"
-        ).parquet(out_dir)
+        part = unigram_source_counts(bdf, group_col=group_col).coalesce(1)
+        _append_partial(part, out_dir, batch_id, spec)
 
+    recover_generation(out_dir, clean=False)
     _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
-
-    if not os.path.exists(out_dir):
-        staged = spark.createDataFrame(
-            [], f"{group_col} string, token string, c bigint, _batch_id long"
-        )
-    else:
-        staged = spark.read.parquet(out_dir)
-    merged = (
-        staged.groupBy(group_col, "token", "_batch_id")
-        .agg(F.max("c").alias("c"))  # replay dedupe: partials are deterministic
-        .groupBy(group_col, "token")
-        .agg(F.sum("c").alias("c"))
+    empty = unigram_source_counts(
+        spark.createDataFrame([], stream.schema), group_col=group_col
     )
+    merged = _read_partial_log(spark, out_dir, spec, empty)
     return source_drift_from_counts(merged, group_col, scale)
 
 
@@ -1977,8 +1851,6 @@ def run_streaming_heavy_hitters(
     runs the SAME ``cms_topk`` tail as the batch operator — streaming ≡
     batch exactly.  Compaction specs
     ``STAGED_SINK_COMPACTION['cms_counters'/'cms_candidates']``."""
-    from pyspark.sql import functions as F
-
     from stateful_spark_streaming_spark.operators.stats import (
         cms_counters,
         cms_topk,
@@ -1990,30 +1862,24 @@ def run_streaming_heavy_hitters(
     cand_dir = stem + "_cands"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
+    ctr_spec = STAGED_SINK_COMPACTION["cms_counters"]
+    cand_spec = STAGED_SINK_COMPACTION["cms_candidates"]
+
     def _sink(bdf: DataFrame, batch_id: int) -> None:
         occ = _token_occurrences(bdf, text_col, id_col)
-        ctr = cms_counters(occ, "token", depth, width)
-        ctr.withColumn("_batch_id", F.lit(batch_id)).coalesce(1).write.mode(
-            "append"
-        ).parquet(ctr_dir)
-        occ.select("token").distinct().withColumn(
-            "_batch_id", F.lit(batch_id)
-        ).coalesce(1).write.mode("append").parquet(cand_dir)
+        ctr = cms_counters(occ, "token", depth, width).coalesce(1)
+        _append_partial(ctr, ctr_dir, batch_id, ctr_spec)
+        cands = occ.select("token").distinct().coalesce(1)
+        _append_partial(cands, cand_dir, batch_id, cand_spec)
 
+    for d in (ctr_dir, cand_dir):
+        recover_generation(d, clean=False)
     _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
-
-    if not os.path.exists(ctr_dir):
-        counters = spark.createDataFrame([], "r int, b int, n bigint")
-        cands = spark.createDataFrame([], "token string")
-    else:
-        counters = (
-            spark.read.parquet(ctr_dir)
-            .groupBy("r", "b", "_batch_id")
-            .agg(F.max("n").alias("n"))  # replay dedupe: partials deterministic
-            .groupBy("r", "b")
-            .agg(F.sum("n").alias("n"))
-        )
-        cands = spark.read.parquet(cand_dir).select("token").distinct()
+    occ = _token_occurrences(spark.createDataFrame([], stream.schema), text_col, id_col)
+    counters = _read_partial_log(
+        spark, ctr_dir, ctr_spec, cms_counters(occ, "token", depth, width)
+    )
+    cands = _read_partial_log(spark, cand_dir, cand_spec, occ.select("token"))
     return cms_topk(counters, cands, k, "token", depth, width)
 
 
@@ -2880,33 +2746,33 @@ def run_streaming_corpus_report(
     fps_dir = stem + "_fps"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
-    def _sink(bdf: DataFrame, batch_id: int) -> None:
+    stats_spec = STAGED_SINK_COMPACTION["corpus_stats"]
+    fps_spec = STAGED_SINK_COMPACTION["corpus_fps"]
+
+    def _docs(bdf: DataFrame) -> DataFrame:
         # normalize the id ONCE so both sinks honor a non-default id_col
         # (quality_score's projection is doc_id-fixed; ADVICE r5); drop
         # any unrelated pre-existing doc_id payload column first — the
         # rename would otherwise create an ambiguous duplicate name
-        b = bdf
-        if id_col != "doc_id":
-            if "doc_id" in b.columns:
-                b = b.drop("doc_id")
-            b = b.withColumnRenamed(id_col, "doc_id")
+        if id_col == "doc_id":
+            return bdf
+        if "doc_id" in bdf.columns:
+            bdf = bdf.drop("doc_id")
+        return bdf.withColumnRenamed(id_col, "doc_id")
+
+    def _stats(b: DataFrame) -> DataFrame:
         scored = quality_score(
             b, text_col=text_col, keep_cols=("source", "lang")
         ).select("doc_id", "source", "lang", "n_tokens", "quality_score")
-        (
-            scored.groupBy("source")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_tokens").alias("total_tokens"),
-                F.sum("quality_score").alias("sum_q"),
-                F.sum((F.col("lang") == "en").cast("int")).alias("n_en"),
-            )
-            .withColumn("_batch_id", F.lit(batch_id))
-            .coalesce(1)  # partials are source-cardinality tiny
-            .write.mode("append")
-            .parquet(stats_dir)
+        return scored.groupBy("source").agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_tokens").alias("total_tokens"),
+            F.sum("quality_score").alias("sum_q"),
+            F.sum((F.col("lang") == "en").cast("int")).alias("n_en"),
         )
-        (
+
+    def _fps(b: DataFrame) -> DataFrame:
+        return (
             b.select(
                 F.col("doc_id"),
                 F.col("source"),
@@ -2914,74 +2780,29 @@ def run_streaming_corpus_report(
             )
             .groupBy("fp", "source")
             .agg(F.count("*").alias("n"), F.min("doc_id").alias("min_doc"))
-            .withColumn("_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(fps_dir)
         )
 
+    def _sink(bdf: DataFrame, batch_id: int) -> None:
+        b = _docs(bdf)
+        # partials are source-cardinality tiny
+        _append_partial(_stats(b).coalesce(1), stats_dir, batch_id, stats_spec)
+        _append_partial(_fps(b).coalesce(1), fps_dir, batch_id, fps_spec)
+
+    for d in (stats_dir, fps_dir):
+        recover_generation(d, clean=False)
     _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
 
-    if not os.path.exists(stats_dir):
-        # zero micro-batches: empty card through the SAME merge code over
-        # typed empty staged frames (schema incl. nullability can never
-        # drift from the normal path), not a PATH_NOT_FOUND crash
-        raw_stats = spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, total_tokens bigint, "
-            "sum_q double, n_en bigint, _batch_id long",
-        )
-        from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-        raw_fps = spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("fp", StringType()),
-                    StructField("source", StringType()),
-                    StructField("n", LongType()),
-                    # id-typed from the input: string doc ids are legitimate
-                    StructField("min_doc", stream.schema[id_col].dataType),
-                    StructField("_batch_id", LongType()),
-                ]
-            ),
-        )
-    else:
-        raw_stats = spark.read.parquet(stats_dir)
-        raw_fps = spark.read.parquet(fps_dir)
-
-    stats = (
-        raw_stats
-        # replay dedupe: one partial row per (source, batch)
-        .groupBy("source", "_batch_id")
-        .agg(
-            F.max("n_docs").alias("n_docs"),
-            F.max("total_tokens").alias("total_tokens"),
-            F.max("sum_q").alias("sum_q"),
-            F.max("n_en").alias("n_en"),
-        )
-        .groupBy("source")
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("total_tokens").alias("total_tokens"),
-            F.sum("sum_q").alias("sum_q"),
-            F.sum("n_en").alias("n_en"),
-        )
-    )
-    fps = (
-        raw_fps
-        .dropDuplicates(["fp", "source", "_batch_id"])
-        .groupBy("fp", "source")
-        .agg(F.sum("n").alias("n"), F.min("min_doc").alias("min_doc_src"))
-    )
-    gmin = fps.groupBy("fp").agg(F.min("min_doc_src").alias("gmin"))
+    empty = _docs(spark.createDataFrame([], stream.schema))
+    stats = _read_partial_log(spark, stats_dir, stats_spec, _stats(empty))
+    fps = _read_partial_log(spark, fps_dir, fps_spec, _fps(empty))
+    gmin = fps.groupBy("fp").agg(F.min("min_doc").alias("gmin"))
     ndup = (
         fps.join(gmin, "fp")
         .select(
             "source",
             (
                 F.col("n")
-                - (F.col("min_doc_src") == F.col("gmin")).cast("long")
+                - (F.col("min_doc") == F.col("gmin")).cast("long")
             ).alias("d"),
         )
         .groupBy("source")
@@ -3043,51 +2864,25 @@ def run_streaming_dup_spans(
     out_dir = _output_stem(checkpoint_dir, "sss_spans_") + "_index"
     stream = _stage_parquet_stream(spark, documents_path, max_files_per_trigger)
 
+    spec = STAGED_SINK_COMPACTION["span_index"]
+
+    def _partial(bdf: DataFrame) -> DataFrame:
+        return _gram_positions(bdf, text_col, id_col, k).select(
+            "doc", "pos", F.xxhash64("gram").alias("gh")
+        )
+
     def _sink(bdf: DataFrame, batch_id: int) -> None:
-        (
-            _gram_positions(bdf, text_col, id_col, k)
-            .select("doc", "pos", F.xxhash64("gram").alias("gh"))
-            .withColumn("_batch_id", F.lit(batch_id))
-            # REPARTITION, not coalesce, to avoid spraying near-empty
-            # files: coalesce would collapse the expensive gram kernel
-            # above it into 4 tasks (no exchange between them), undoing
-            # the _spread that keeps per-batch tokenization wide; the
-            # exchange here moves only compact (id, int, long) rows
-            .repartition(4)
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        # REPARTITION, not coalesce, to avoid spraying near-empty
+        # files: coalesce would collapse the expensive gram kernel
+        # above it into 4 tasks (no exchange between them), undoing
+        # the _spread that keeps per-batch tokenization wide; the
+        # exchange here moves only compact (id, int, long) rows
+        _append_partial(_partial(bdf).repartition(4), out_dir, batch_id, spec)
 
+    recover_generation(out_dir, clean=False)
     _replay(spark, stream.writeStream.foreachBatch(_sink), checkpoint_dir)
-
-    if not os.path.exists(out_dir):
-        # zero micro-batches: empty span set, not a PATH_NOT_FOUND crash.
-        # Schema DERIVED through the shared tail over a typed empty index
-        # (not hand-written) so it can never drift from the normal path.
-        from pyspark.sql.types import (
-            IntegerType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        empty_index = spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("doc", stream.schema[id_col].dataType),
-                    StructField("pos", IntegerType()),
-                    StructField("gh", LongType()),
-                ]
-            ),
-        )
-        return dup_spans_from_index(empty_index, "gh", k, min_docs)
-    g = (
-        spark.read.parquet(out_dir)
-        # replay dedupe: a (doc, pos) gram occurrence exists once in the
-        # true stream; duplicates can only be replayed appends
-        .dropDuplicates(["doc", "pos", "gh"])
-        .drop("_batch_id")
+    g = _read_partial_log(
+        spark, out_dir, spec, _partial(spark.createDataFrame([], stream.schema))
     )
     return dup_spans_from_index(g, "gh", k, min_docs)
 

@@ -528,3 +528,147 @@ def test_streaming_image_keep_best_null_quality_parity(spark, tmp_path):
     # every image accounted for: sum of cluster sizes == corpus size (the
     # dropped-group bug made this 2, not 4)
     assert sum(r[1] for r in got) == 4
+
+
+def test_vocab_read_recovers_a_crash_mid_compaction(spark, tmp_path):
+    """A compaction killed between its two renames leaves a complete
+    ``<log>.tmp`` and the live log moved to ``<log>.old``.  The runner's
+    read must roll that generation forward instead of reading a
+    never-written log, and the next batch must append into the recovered
+    log, not into a fresh dir whose compaction would then delete the
+    ``.tmp`` and ``.old`` beside it."""
+    batches = [
+        [("d1", "common alpha alpha beta"), ("d2", "common beta gamma")],
+        [("d3", "common gamma gamma delta")],
+        [("d4", "common delta epsilon"), ("d5", "common epsilon zeta zeta")],
+    ]
+    cols = ("doc_id", "text")
+    src = _land_batches(spark, tmp_path, "crash", batches[:2], cols)
+    ck = str(tmp_path / "ck_crash")
+    log = ck + "_partials"
+    spec = STAGED_SINK_COMPACTION["vocab"]
+
+    def run(checkpoint_dir=ck, **kw):
+        return sorted(
+            map(
+                tuple,
+                run_streaming_vocab(
+                    spark, src, top_n=10, checkpoint_dir=checkpoint_dir, **kw
+                ).collect(),
+            )
+        )
+
+    before = run(max_files_per_trigger=1)
+    assert before
+    # the crash state: the folded generation fully written to <log>.tmp,
+    # the live log renamed to <log>.old, the promoting rename never ran
+    side = str(tmp_path / "side")
+    shutil.copytree(log, side)
+    compact_partial_log(spark, side, **spec)
+    os.rename(side, log + ".tmp")
+    os.rename(log, log + ".old")
+    assert run(max_files_per_trigger=1) == before
+
+    third = _land_batches(spark, tmp_path, "crash3", batches[2:], cols)
+    dst = os.path.join(src, "002.parquet")
+    shutil.move(os.path.join(third, "000.parquet"), dst)
+    t = os.stat(os.path.join(src, "001.parquet")).st_mtime + 10
+    os.utime(dst, (t, t))
+    run(max_files_per_trigger=1)
+    compact_partial_log(spark, log, **spec)
+    assert run(max_files_per_trigger=1) == run(str(tmp_path / "ck_one_pass"))
+
+
+def test_keyed_runners_fold_under_the_spec_their_key_builds(spark, tmp_path):
+    """Runners whose key is an argument build their log's fold spec from
+    it: with a non-default key each still equals its batch twin, and
+    compacting under the spec built from that key leaves the read
+    unchanged."""
+    import pyspark.sql.functions as F
+
+    from stateful_spark_streaming_spark.operators.relational import (
+        distinct_sketch_stats,
+    )
+    from stateful_spark_streaming_spark.operators.stats import (
+        fixed_width_histogram,
+        source_drift,
+    )
+    from stateful_spark_streaming_spark.operators.text import quality_score
+    from stateful_spark_streaming_spark.streaming.pipeline import (
+        distinct_sketch_compaction_spec,
+        quality_hist_compaction_spec,
+        run_streaming_distinct_stats,
+        run_streaming_quality_histogram,
+        run_streaming_source_drift,
+        source_drift_compaction_spec,
+    )
+
+    ev_rows = [(i, f"t{i % 3}", i % 7) for i in range(120)]
+    ev = _land_batches(
+        spark, tmp_path, "ev", [ev_rows[:40], ev_rows[40:80], ev_rows[80:]],
+        ("event_id", "event_type", "user_id"),
+    )
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "der schnelle braune fuchs springt über den faulen hund",
+        "the fox and the hound share the the tokens",
+        "ein ganz neuer wortschatz erscheint hier jetzt",
+        "alpha alpha beta fox dog lazy",
+        "word " * 40,
+    ]
+    doc_rows = [
+        (i, t, f"src{i % 2}", "de" if i in (1, 3) else "en")
+        for i, t in enumerate(texts)
+    ]
+    docs = _land_batches(
+        spark, tmp_path, "docs", [doc_rows[:2], doc_rows[2:4], doc_rows[4:]],
+        ("doc_id", "text", "source", "lang"),
+    )
+    doc_df = spark.read.parquet(docs)
+    cases = [
+        (
+            "hll",
+            lambda ck: run_streaming_distinct_stats(
+                spark, ev, key="user_id", count_col="event_id",
+                checkpoint_dir=ck, max_files_per_trigger=1,
+            ),
+            "_sketches",
+            distinct_sketch_compaction_spec(key="user_id"),
+            distinct_sketch_stats(
+                spark.read.parquet(ev), key="user_id", count_col="event_id"
+            ),
+        ),
+        (
+            "drift",
+            lambda ck: run_streaming_source_drift(
+                spark, docs, group_col="lang", checkpoint_dir=ck,
+                max_files_per_trigger=1,
+            ),
+            "_counts",
+            source_drift_compaction_spec(group_col="lang"),
+            source_drift(doc_df, group_col="lang"),
+        ),
+        (
+            "qhist",
+            lambda ck: run_streaming_quality_histogram(
+                spark, docs, group_col="lang", checkpoint_dir=ck,
+                max_files_per_trigger=1,
+            ),
+            "_hist",
+            quality_hist_compaction_spec(group_col="lang"),
+            fixed_width_histogram(
+                quality_score(doc_df, keep_cols=("lang",)),
+                F.col("quality_score"),
+                ("lang",),
+                n_bins=20,
+            ),
+        ),
+    ]
+    for name, run, suffix, spec, twin in cases:
+        ck = str(tmp_path / f"ck_{name}")
+        got = sorted(map(tuple, run(ck).collect()))
+        assert got and got == sorted(map(tuple, twin.collect())), name
+        n_dirty = _n_files(ck + suffix)
+        compact_partial_log(spark, ck + suffix, **spec)
+        assert _n_files(ck + suffix) < n_dirty, name
+        assert sorted(map(tuple, run(ck).collect())) == got, name
