@@ -79,17 +79,20 @@ def _py_tokens(text) -> list | None:
     return _NONWORD.sub(" ", str(text).lower()).strip().split(" ")
 
 
-def _id_typed_schema(df: DataFrame, id_col: str, out_name: str, rest: str):
-    """Kernel output schema with the id field TYPED FROM THE INPUT — the
+def _id_typed_schema(
+    df: DataFrame, id_col: str, out_name: str | tuple[str, ...], rest: str
+):
+    """Kernel output schema with the id field(s) TYPED FROM THE INPUT — the
     Arrow kernels must honor the advertised ``id_col`` genericity (string
     ids are legitimate document keys); a hardcoded ``long`` would fail the
-    Arrow conversion at runtime."""
+    Arrow conversion at runtime.  ``out_name`` is one field name or a tuple
+    of them (a pair kernel's two endpoints)."""
     from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
+    names = (out_name,) if isinstance(out_name, str) else out_name
+    id_type = df.schema[id_col].dataType
     rest_fields = list(_parse_datatype_string(f"struct<{rest}>").fields)
-    return StructType(
-        [StructField(out_name, df.schema[id_col].dataType)] + rest_fields
-    )
+    return StructType([StructField(n, id_type) for n in names] + rest_fields)
 
 
 #: literal-IN cap for the hybrid decomposition path: past this many
@@ -102,19 +105,12 @@ _HYBRID_DUP_CAP = 1000
 
 
 def _dup_content_hashes(df: DataFrame, col: str) -> list | None:
-    """ONE-action duplicate-mass probe for the pair-generator family's
-    decomposition (r14, VERDICT r13 #3): the ``xxhash64`` values of
-    ``col`` that occur on MORE than one row, collected only while the
-    set stays small.
-
-    Returns ``[]`` (provably duplicate-free — the grouping + expansion
-    stages are the identity and can be skipped outright, guide §2.4),
-    a list of ≤ ``_HYBRID_DUP_CAP`` hashes (the NEARLY-distinct regime:
-    group only the rows carrying those hashes — two map-only literal
-    filters instead of a full-content shuffle), or ``None`` (more
-    duplicated contents than the cap: duplicate-heavy corpus, take the
-    full r13 grouping, whose one content shuffle is then the useful
-    work).
+    """ONE-action duplicate-mass probe that picks the regime of
+    :func:`_content_groups`: the ``xxhash64`` values of ``col`` that occur
+    on MORE than one row, collected only while the set stays small.
+    Returns ``[]`` (provably duplicate-free), a list of ≤
+    ``_HYBRID_DUP_CAP`` hashes (nearly distinct), or ``None`` (more
+    duplicated contents than the cap: duplicate-heavy).
 
     Cost/soundness shape: one aggregation over ``xxhash64(col)`` —
     8 bytes/row cross its exchange with map-side partials, where a
@@ -126,8 +122,7 @@ def _dup_content_hashes(df: DataFrame, col: str) -> list | None:
     wrong answer, at worst a few extra grouped rows.  NULL contents
     hash to the seed constant (non-NULL), so m NULL rows surface as one
     duplicated hash — matching ``groupBy``'s NULLs-group-together
-    semantics.  Every caller's OUTPUT is identical across all three
-    regimes (oracle-checked); only the plan changes."""
+    semantics."""
     rows = (
         df.groupBy(F.xxhash64(F.col(col)).alias("__h"))
         .agg(F.count(F.lit(1)).alias("__c"))
@@ -144,56 +139,127 @@ def _dup_content_hashes(df: DataFrame, col: str) -> list | None:
 def _content_groups(
     df: DataFrame, content: str, id_col: str, dup_hashes: list | None
 ):
-    """reps/mg builder shared by the text pair generators (r14): returns
-    ``reps`` — one row of (``id_col``, ``content``) per DISTINCT content,
-    id = min id over the content's rows — and ``mg``, the persisted
-    (__rep, __ids) frame for contents with ≥ 2 rows, which is the ONLY
-    part of the grouping the output expansion needs (singleton expansion
-    is the identity; callers apply it via coalesce-to-self, so the
-    corpus-sized singleton tail never enters an expansion join).
+    """Step 1 of the pair generators' EXACT-DUPLICATE DECOMPOSITION, shared
+    by jaccard, containment, minhash, simhash, hamming and SRP-cosine.
+    Rows with identical content (text, token array, fingerprint, bit
+    string or vector) are grouped, the operator's pair search runs over
+    one REPRESENTATIVE per distinct content, and :func:`_expand_groups`
+    turns the representative pairs back into member pairs and adds the
+    in-group pairs.  Identical content has an identical score against
+    everything, so a rep pair's score carries to every member pair
+    verbatim, and in-group pairs score as self-pairs.  Without it, m
+    copies of one page made m-row buckets in every shingle/band (m²
+    candidate mass), and past a hot-bucket or hot-shingle cap the whole
+    group was silently dropped: zero pairs exactly where duplicate mass
+    is densest.  With it, every cap counts DISTINCT contents.
 
-    ``dup_hashes=None`` → FULL regime (the r13 decomposition): one
-    ``groupBy`` over the whole content column — the content shuffle IS
-    the useful work on a duplicate-heavy corpus.  A short list → HYBRID
-    regime (nearly-distinct corpus): duplicated rows are isolated with
-    two map-only literal-IN filters on ``xxhash64(content)`` — no
-    content shuffle at all; only the duplicate mass is grouped, and
-    globally-unique rows pass through as their own reps.  A colliding
-    unrelated content pulled in by the filter is separated by the real
-    content key inside the grouping — output identical in both regimes
-    (see :func:`_dup_content_hashes`)."""
-    if dup_hashes is None:
-        groups = track_persist(
-            df.groupBy(F.col(content).alias("__content")).agg(
-                F.min(F.col(id_col)).alias("__rep"),
-                F.collect_list(F.col(id_col)).alias("__ids"),
-            )
-        )
-        reps = groups.select(
-            F.col("__rep").alias(id_col), F.col("__content").alias(content)
-        )
-        mg = groups.filter(F.size("__ids") >= 2).select("__rep", "__ids")
-        return reps, mg
+    Returns ``reps`` — (``id_col``, ``content``), one row per distinct
+    content, id = min id over the content's rows — and ``mg``, the
+    (__content, __rep, __ids) rows of contents with ≥ 2 rows, or ``None``
+    when nothing is duplicated.  A singleton's expansion is the identity,
+    so only ``mg`` enters the expansion joins (coalesce-to-self covers
+    the rest): the join input tracks duplicate mass, never corpus size.
+
+    Regimes, by ``dup_hashes`` (:func:`_dup_content_hashes`, or what the
+    caller knows): ``[]`` → duplicate-free, no grouping at all (reps =
+    the input rows, ``mg`` None); a short list → HYBRID, only rows
+    carrying those hashes are grouped, behind two map-only literal-IN
+    filters, and the rest pass through as their own reps — no content
+    shuffle; ``None`` → FULL, one ``groupBy`` over the whole content
+    column, whose content shuffle is the useful work on a
+    duplicate-heavy corpus.  Output is identical in all three regimes
+    (pinned); only the plan changes.
+
+    MEMORY UNIT: the per-distinct-content id-list row — ~10⁷ copies of
+    one page make one multi-GB aggregate row before the expand, at which
+    point the m²/2-pair output is absurd anyway; canonical selection
+    should compose ``dup_clusters`` + ``keep_best`` (or
+    :func:`hamming_keep_best`, which builds no id lists).  Ids are
+    assumed unique: an id under two contents would be the rep of both.
+    The grouping is persisted and stays cached past the caller's action
+    (long-lived sessions ``spark.catalog.clearCache()`` between one-shot
+    calls, as bench.py does)."""
+    if dup_hashes == []:
+        return df.select(F.col(id_col), F.col(content)), None
     h = F.xxhash64(F.col(content))
-    mg_all = track_persist(
-        df.filter(h.isin(dup_hashes))
-        .groupBy(F.col(content).alias("__content"))
-        .agg(
+    grouped = df if dup_hashes is None else df.filter(h.isin(dup_hashes))
+    groups = track_persist(
+        grouped.groupBy(F.col(content).alias("__content")).agg(
             F.min(F.col(id_col)).alias("__rep"),
             F.collect_list(F.col(id_col)).alias("__ids"),
         )
     )
-    reps = (
-        df.filter(~h.isin(dup_hashes))
-        .select(F.col(id_col), F.col(content))
-        .unionByName(
-            mg_all.select(
-                F.col("__rep").alias(id_col), F.col("__content").alias(content)
-            )
-        )
+    reps = groups.select(
+        F.col("__rep").alias(id_col), F.col("__content").alias(content)
     )
-    mg = mg_all.filter(F.size("__ids") >= 2).select("__rep", "__ids")
-    return reps, mg
+    if dup_hashes is not None:
+        reps = (
+            df.filter(~h.isin(dup_hashes))
+            .select(F.col(id_col), F.col(content))
+            .unionByName(reps)
+        )
+    return reps, groups.filter(F.size("__ids") >= 2)
+
+
+def _expand_groups(
+    pairs: DataFrame,
+    mg: DataFrame,
+    tail: DataFrame,
+    a: str,
+    b: str,
+    swap: tuple[str, str] | None = None,
+) -> DataFrame:
+    """Steps 2 and 3 of the decomposition (see :func:`_content_groups`):
+    member pairs from the representative ``pairs`` (``a``, ``b``, score
+    columns), plus the in-group pairs.
+
+    Expansion: each endpoint LEFT-joins its multi-member group's id list
+    in ``mg`` (a rep with no match is a singleton and expands to itself),
+    both lists explode, each pair is ordered with least/greatest, the
+    ``swap`` columns (endpoint-bound, e.g. each side's set size) follow
+    their ids through that ordering, and self-pairs drop.
+
+    In-group tail: ``tail`` is the caller's filtered ``mg`` projected to
+    ``__ids`` plus the in-group pair's score columns (named as in
+    ``pairs``); every id pairs with every other id of its group, a < b."""
+    rest = [c for c in pairs.columns if c not in (a, b)]
+    cols = {c: F.col(c) for c in rest}
+    if swap:
+        flip = F.col("__ia") > F.col("__ib")
+        x, y = swap
+        cols[x] = F.when(flip, F.col(y)).otherwise(F.col(x))
+        cols[y] = F.when(flip, F.col(x)).otherwise(F.col(y))
+    cross = (
+        pairs.join(
+            mg.select(F.col("__rep").alias(a), F.col("__ids").alias("__ids_a")),
+            a,
+            "left",
+        )
+        .join(
+            mg.select(F.col("__rep").alias(b), F.col("__ids").alias("__ids_b")),
+            b,
+            "left",
+        )
+        .select(
+            F.explode(F.coalesce("__ids_a", F.array(a))).alias("__ia"),
+            F.coalesce("__ids_b", F.array(b)).alias("__ids_b"),
+            *rest,
+        )
+        .select("__ia", F.explode("__ids_b").alias("__ib"), *rest)
+        .select(
+            F.least("__ia", "__ib").alias(a),
+            F.greatest("__ia", "__ib").alias(b),
+            *[v.alias(c) for c, v in cols.items()],
+        )
+        .filter(F.col(a) != F.col(b))
+    )
+    scores = [c for c in tail.columns if c != "__ids"]
+    intra = (
+        tail.select(F.explode("__ids").alias(a), "__ids", *scores)
+        .select(a, F.explode("__ids").alias(b), *scores)
+        .filter(F.col(a) < F.col(b))
+    )
+    return cross.unionByName(intra)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -321,7 +387,6 @@ def containment_pairs(
     k: int = 3,
     threshold: float = 0.9,
     max_shingle_df: int = 1000,
-    content_distinct: bool | None = None,
 ) -> DataFrame:
     """Sub/superset duplicate detection: pairs where the SMALLER document's
     shingle set is mostly contained in the larger's — containment
@@ -339,32 +404,16 @@ def containment_pairs(
     blowup.  Same self-consistency contract as capped Jaccard: sizes are
     recomputed over the surviving index.
 
-    EXACT-DUPLICATE MASS IS FACTORED OUT FIRST (r13, uniform across the
-    pair-generator family): ids group by identical text, the index and
-    pair counting run over one representative per distinct content, and
-    copies re-enter at output expansion — m > max_shingle_df copies of
-    one page used to push every one of its shingles over the cap, so the
-    group silently emitted zero pairs; ``max_shingle_df`` now counts
-    DISTINCT contents per shingle.  Sizes swap with the least/greatest id
-    normalization so size_a stays doc_a's size.
-    ``content_distinct`` follows the family contract (see
-    :func:`jaccard_pairs`): ``None`` self-decides via the
-    :func:`_dup_content_hashes` probe into the same three regimes
-    (duplicate-free skip / nearly-distinct hybrid / full grouping);
-    ``True`` asserts distinctness; ``False`` pins the full
-    decomposition.
+    Exact-duplicate mass is factored out first, by text, in the regime the
+    :func:`_dup_content_hashes` probe picks (see :func:`_content_groups`):
+    ``max_shingle_df`` counts DISTINCT texts per shingle, and size_a /
+    size_b follow their ids through the expansion's least/greatest.
 
     Returns (doc_a, doc_b, size_a, size_b, n_common, containment),
     doc_a < doc_b; the contained side is the one with the smaller size."""
-    dup_hashes = None
-    if content_distinct is None:
-        dup_hashes = _dup_content_hashes(df, text_col)
-        content_distinct = dup_hashes == []
-    if content_distinct:
-        mg = None
-        reps = df
-    else:
-        reps, mg = _content_groups(df, text_col, id_col, dup_hashes)
+    reps, mg = _content_groups(
+        df, text_col, id_col, _dup_content_hashes(df, text_col)
+    )
     idx = _shingle_index(reps, text_col, id_col, k)
     pairs, sizes = _bucketed_pair_counts(idx, max_shingle_df, with_sizes=True)
     cont = F.col("n_common") / F.least(F.col("size_a"), F.col("size_b"))
@@ -373,65 +422,22 @@ def containment_pairs(
         .filter(F.col("containment") >= threshold)
         .select("doc_a", "doc_b", "size_a", "size_b", "n_common", "containment")
     )
-    if content_distinct:
-        # every group is a singleton: the cross expansion is the identity
-        # (least/greatest and the size swap are no-ops on rep pairs, which
-        # are already doc_a < doc_b) and the intra tail is empty
+    if mg is None:
         return rep_out
-    swap = F.col("__ia") > F.col("__ib")
-    # LEFT joins against the MULTI-group frame only, coalesce-to-self for
-    # singleton reps (their expansion is the identity): the join input
-    # tracks duplicate mass, never corpus size (r14)
-    cross = (
-        rep_out.join(
-            mg.select(
-                F.col("__rep").alias("doc_a"), F.col("__ids").alias("__ids_a")
-            ),
-            "doc_a",
-            "left",
-        )
-        .join(
-            mg.select(
-                F.col("__rep").alias("doc_b"), F.col("__ids").alias("__ids_b")
-            ),
-            "doc_b",
-            "left",
-        )
-        .select(
-            F.explode(F.coalesce("__ids_a", F.array("doc_a"))).alias("__ia"),
-            F.coalesce("__ids_b", F.array("doc_b")).alias("__ids_b"),
-            "size_a", "size_b", "n_common", "containment",
-        )
-        .select(
-            "__ia", F.explode("__ids_b").alias("__ib"),
-            "size_a", "size_b", "n_common", "containment",
-        )
-        .select(
-            F.least("__ia", "__ib").alias("doc_a"),
-            F.greatest("__ia", "__ib").alias("doc_b"),
-            F.when(swap, F.col("size_b")).otherwise(F.col("size_a")).alias("size_a"),
-            F.when(swap, F.col("size_a")).otherwise(F.col("size_b")).alias("size_b"),
-            "n_common",
-            "containment",
-        )
-        .filter(F.col("doc_a") != F.col("doc_b"))
-    )
-    intra = (
+    tail = (
         mg.join(sizes.select(F.col("doc").alias("__rep"), "set_size"), "__rep")
         .filter(F.lit(1.0) >= F.lit(threshold))
-        .select(F.explode("__ids").alias("doc_a"), "__ids", "set_size")
-        .select("doc_a", F.explode("__ids").alias("doc_b"), "set_size")
-        .filter(F.col("doc_a") < F.col("doc_b"))
         .select(
-            "doc_a",
-            "doc_b",
+            "__ids",
             F.col("set_size").alias("size_a"),
             F.col("set_size").alias("size_b"),
             F.col("set_size").alias("n_common"),
             F.round(F.lit(1.0), 4).alias("containment"),
         )
     )
-    return cross.unionByName(intra)
+    return _expand_groups(
+        rep_out, mg, tail, "doc_a", "doc_b", swap=("size_a", "size_b")
+    )
 
 
 def jaccard_pairs(
@@ -442,7 +448,7 @@ def jaccard_pairs(
     threshold: float = 0.6,
     max_shingle_df: int | None = None,
     tokens_col: str | None = None,
-    content_distinct: bool | None = None,
+    content_distinct: bool = False,
 ) -> DataFrame:
     """n-gram Jaccard near-dup pairs: J(A,B) = |A∩B| / (|A|+|B|-|A∩B|) ≥ τ.
 
@@ -467,45 +473,20 @@ def jaccard_pairs(
        ``max_shingle_df`` (the capped form is what the scale bench runs);
        the default exists for oracle-exact verification at test SF.
 
-    EXACT-DUPLICATE MASS IS FACTORED OUT FIRST (r13, uniform across the
-    pair-generator family — minhash/simhash/SRP/this): ids group by
-    identical content (the token array when ``tokens_col`` is given, else
-    the text), the shingle index and all candidate work run over ONE
-    representative per distinct content, and copies re-enter at output
-    expansion (identical content ⇒ identical filtered shingle set ⇒
-    jaccard 1.0 in-group; rep-pair scores carry verbatim).  The old
-    row-level form had two duplicate-mass failure shapes: in the exact
-    path every shingle of an m-copy content made an ≥m-element bucket
-    (the warned O(df²) blowup, with the duplicate factor squared into
-    it); in the capped path m > max_shingle_df pushed EVERY shingle of
-    the group over the cap, so the filtered sets went empty and the
-    group silently emitted zero pairs — identical docs no longer scored
-    1.0, they scored nothing.  ``max_shingle_df`` now counts DISTINCT
-    contents per shingle — boilerplate means many different pages
-    sharing a shingle, not many copies of one page.  MEMORY UNIT: the
-    per-distinct-content id-list row (see hamming_near_pairs).
+    Exact-duplicate mass is factored out first, by content (the token
+    array when ``tokens_col`` is given, else the text), in the regime the
+    :func:`_dup_content_hashes` probe picks (see :func:`_content_groups`).
+    Identical content has an identical filtered shingle set, so in-group
+    pairs score 1.0 and ``max_shingle_df`` counts DISTINCT contents per
+    shingle — boilerplate means many different pages sharing a shingle,
+    not many copies of one page.
 
     ``content_distinct=True`` asserts the caller already factored
     duplicate mass — one row per distinct content (e.g. a pipeline that
     ran ``exact_dedup`` immediately upstream, like training_pipeline) —
-    and skips the grouping/expansion entirely: on an already-distinct
-    corpus the decomposition is the identity, and the extra groupBy +
-    expansion stages are pure fixed cost.  With duplicate rows present
-    it silently reverts to the OLD duplicate-squaring behavior — only
-    set it when distinctness is structurally guaranteed.
-    ``content_distinct=None`` (the default, r14) SELF-DECIDES with the
-    one-action :func:`_dup_content_hashes` probe into THREE regimes —
-    duplicate-free: skip group+expand outright (they are the identity;
-    the r13 form paid them as pure fixed cost, the r13 bench
-    regression); nearly-distinct (≤ :data:`_HYBRID_DUP_CAP` duplicated
-    contents — also a real corpus shape, e.g. a pre-deduped refresh):
-    group ONLY the duplicated rows via literal-IN filters on the content
-    hash, so no full-content shuffle happens and the expansion joins
-    carry only the duplicate mass; duplicate-heavy: the full r13
-    grouping, where the content shuffle is the useful work.  The probe
-    is one eager 8-byte-per-row aggregation; output is identical in all
-    three regimes.  Pass an explicit bool to pin the plan (``False`` =
-    full grouping, ``True`` = asserted-distinct skip).
+    and skips the probe and the decomposition.  With duplicate rows
+    present it silently reverts to the duplicate-squaring row-level
+    behavior — only set it when distinctness is structurally guaranteed.
 
     Cache lifetime: the scale path persists the bucketed index (it feeds
     two subplans) and cannot unpersist it before the caller's action runs;
@@ -514,15 +495,12 @@ def jaccard_pairs(
     the index to storage and read it back — the 100 TB form.
     """
     content = tokens_col or text_col
-    dup_hashes = None
-    if content_distinct is None:
-        dup_hashes = _dup_content_hashes(df, content)
-        content_distinct = dup_hashes == []
-    if content_distinct:
-        mg = None
-        reps = df
-    else:
-        reps, mg = _content_groups(df, content, id_col, dup_hashes)
+    reps, mg = _content_groups(
+        df,
+        content,
+        id_col,
+        [] if content_distinct else _dup_content_hashes(df, content),
+    )
     idx = _shingle_index(reps, text_col, id_col, k, tokens_col=tokens_col)
     if max_shingle_df is None:
         # Bucketed candidate generation (the same one-shuffle trick as
@@ -560,62 +538,21 @@ def jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "jaccard")
     )
-    if content_distinct:
+    if mg is None:
         return rep_out
-    # expand rep pairs back through both id lists (scores carry verbatim —
-    # jaccard/n_common are symmetric, so least/greatest needs no swap).
-    # LEFT joins against the MULTI-group frame only, with coalesce-to-self
-    # for singleton reps (their expansion is the identity): the join input
-    # tracks duplicate mass, never corpus size (r14)
-    cross = (
-        rep_out.join(
-            mg.select(
-                F.col("__rep").alias("doc_a"), F.col("__ids").alias("__ids_a")
-            ),
-            "doc_a",
-            "left",
-        )
-        .join(
-            mg.select(
-                F.col("__rep").alias("doc_b"), F.col("__ids").alias("__ids_b")
-            ),
-            "doc_b",
-            "left",
-        )
-        .select(
-            F.explode(F.coalesce("__ids_a", F.array("doc_a"))).alias("__ia"),
-            F.coalesce("__ids_b", F.array("doc_b")).alias("__ids_b"),
-            "n_common",
-            "jaccard",
-        )
-        .select("__ia", F.explode("__ids_b").alias("__ib"), "n_common", "jaccard")
-        .select(
-            F.least("__ia", "__ib").alias("doc_a"),
-            F.greatest("__ia", "__ib").alias("doc_b"),
-            "n_common",
-            "jaccard",
-        )
-        .filter(F.col("doc_a") != F.col("doc_b"))
-    )
     # identical-content pairs: jaccard 1.0 over the SURVIVING shingle set
     # (the inner join drops reps whose every shingle fell to the cap or
-    # who have < k tokens — exactly the old path's no-row outcome)
-    intra = (
-        mg.join(
-            sizes.select(F.col("doc").alias("__rep"), "set_size"), "__rep"
-        )
+    # who have < k tokens — exactly the row-level path's no-row outcome)
+    tail = (
+        mg.join(sizes.select(F.col("doc").alias("__rep"), "set_size"), "__rep")
         .filter(F.lit(1.0) >= F.lit(threshold))
-        .select(F.explode("__ids").alias("doc_a"), "__ids", "set_size")
-        .select("doc_a", F.explode("__ids").alias("doc_b"), "set_size")
-        .filter(F.col("doc_a") < F.col("doc_b"))
         .select(
-            "doc_a",
-            "doc_b",
+            "__ids",
             F.col("set_size").cast("long").alias("n_common"),
             F.round(F.lit(1.0), 4).alias("jaccard"),
         )
     )
-    return cross.unionByName(intra)
+    return _expand_groups(rep_out, mg, tail, "doc_a", "doc_b")
 
 
 def decontaminate(
@@ -1526,7 +1463,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.6,
     max_bucket_size: int | None = 2000,
-    content_distinct: bool | None = None,
 ) -> DataFrame:
     """MinHash + LSH banding: candidate pairs collide on ≥1 band, then are
     verified with exact Jaccard (no false positives in the output).
@@ -1535,21 +1471,14 @@ def minhash_lsh_pairs(
     bands ≈ 67% recall per the standard S-curve; raise num_hashes/bands for
     higher recall at scale.
 
-    EXACT-DUPLICATE MASS IS FACTORED OUT FIRST (r13, the image-family
-    distinct-hash decomposition generalized to the MinHash family): ids
-    group by identical text, the whole LSH pipeline — shingle, signature
-    kernel, banding, bucket join, Jaccard verify — runs over ONE
-    representative per distinct text, and duplicate multiplicity
-    re-enters only at output expansion (identical text ⇒ identical
-    shingle set ⇒ jaccard 1.0 in-group; a rep pair's verified
-    n_common/jaccard carries to every copy pair verbatim, because the
-    copies' shingle sets ARE the reps').  The old row-level form pushed
-    every duplicate copy into all ``bands`` buckets — m identical docs
-    made m-row buckets (m² candidate mass), and past the hot-bucket cap
-    the whole group was silently DROPPED: zero pairs exactly where
-    duplicate mass is densest.  Now bucket sizes track DISTINCT-text
-    occupancy, and the cap means what it should: genuine band-hash
-    collision across different contents.
+    Exact-duplicate mass is factored out first, by text, in the regime the
+    :func:`_dup_content_hashes` probe picks (see :func:`_content_groups`):
+    the whole LSH pipeline — shingle, signature kernel, banding, bucket
+    join, Jaccard verify — runs over one representative per distinct
+    text, so bucket sizes track DISTINCT-text occupancy and the cap
+    means genuine band-hash collision across different contents.  In the
+    full regime the grouping shuffle replaces the ``_spread`` move
+    rather than adding to it.
 
     ``max_bucket_size`` passes through to :func:`banded_candidate_pairs`.
     The default (2000, mirrored by every LSH oracle) bounds PER-TASK pair
@@ -1564,44 +1493,10 @@ def minhash_lsh_pairs(
     regression pytest instead, the shape real crawls have).  At 100 TB,
     measure the bucket histogram first (``lsh_bucket_stats`` — one
     aggregate) and size this cap to the pair budget, exactly like
-    ``jaccard_pairs``'s ``max_shingle_df``.
-
-    MEMORY UNIT (same as :func:`hamming_near_pairs`): the per-distinct-
-    text id-list row — ~10⁷ copies of one boilerplate page make one
-    multi-GB aggregate row before the expand, at which point the m²/2
-    pair OUTPUT is absurd anyway; canonical selection should compose
-    ``dup_clusters`` + ``keep_best``.
-
-    Cache lifetime: the text groups and rep shingle sets are persisted
-    and stay cached past the caller's action (see jaccard_pairs
-    docstring for the clearCache / write-to-storage guidance).
-
-    ``content_distinct`` follows the family contract (see
-    :func:`jaccard_pairs`): ``None`` (default) self-decides with the
-    one-action :func:`_dup_content_hashes` probe into three regimes —
-    duplicate-free (skip group+expand outright: they are provably the
-    identity), nearly-distinct (group ONLY the duplicated rows via
-    literal-IN hash filters — no full-content shuffle), and
-    duplicate-heavy (the full r13 grouping, whose content shuffle
-    replaces the ``_spread`` move and shrinks everything downstream by
-    the duplicate factor); ``True`` asserts upstream distinctness;
-    ``False`` pins the full decomposition.
-    """
-    dup_hashes = None
-    if content_distinct is None:
-        dup_hashes = _dup_content_hashes(df, text_col)
-        content_distinct = dup_hashes == []
-    if content_distinct:
-        mg = None
-        reps = df.select(F.col(id_col), F.col(text_col))
-    else:
-        # one id-list row per DISTINCT text; in the FULL regime the group
-        # key is the text value itself (the kernel path shuffles every
-        # text once through _spread anyway, so the grouping shuffle
-        # replaces — not adds to — that move, and everything downstream
-        # shrinks by the duplicate factor); the HYBRID regime isolates
-        # duplicated rows map-side instead
-        reps, mg = _content_groups(df, text_col, id_col, dup_hashes)
+    ``jaccard_pairs``'s ``max_shingle_df``."""
+    reps, mg = _content_groups(
+        df, text_col, id_col, _dup_content_hashes(df, text_col)
+    )
     # Band hashes come MAP-SIDE from the Arrow numpy kernel (bit-identical
     # to the explode→groupBy minhash_signatures path — pytested), which
     # ELIMINATES the signature-aggregation shuffle entirely: the only
@@ -1655,68 +1550,26 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "jaccard")
     )
-    if content_distinct:
-        # singleton groups: expansion is the identity, the intra tail empty
+    if mg is None:
         return rep_pairs
-    # expand rep pairs back through both id lists (copies share the reps'
-    # shingle sets, so n_common/jaccard carry verbatim).  LEFT joins
-    # against the MULTI-group frame only, coalesce-to-self for singleton
-    # reps: the join input tracks duplicate mass, never corpus size (r14)
-    cross = (
-        rep_pairs.join(
-            mg.select(
-                F.col("__rep").alias("doc_a"), F.col("__ids").alias("__ids_a")
-            ),
-            "doc_a",
-            "left",
-        )
-        .join(
-            mg.select(
-                F.col("__rep").alias("doc_b"), F.col("__ids").alias("__ids_b")
-            ),
-            "doc_b",
-            "left",
-        )
-        .select(
-            F.explode(F.coalesce("__ids_a", F.array("doc_a"))).alias("__ia"),
-            F.coalesce("__ids_b", F.array("doc_b")).alias("__ids_b"),
-            "n_common",
-            "jaccard",
-        )
-        .select("__ia", F.explode("__ids_b").alias("__ib"), "n_common", "jaccard")
-        .select(
-            F.least("__ia", "__ib").alias("doc_a"),
-            F.greatest("__ia", "__ib").alias("doc_b"),
-            "n_common",
-            "jaccard",
-        )
-        .filter(F.col("doc_a") != F.col("doc_b"))
-    )
     # identical-text pairs: jaccard 1.0 by construction, n_common = the
     # rep's shingle-set size; shingle-less reps (< k tokens, NULL text)
-    # emit nothing — matching the sentinel semantics above, and the old
-    # path's NULL-jaccard filter for empty sets.  Size-prefiltered like
-    # the sibling operators: on a mostly-unique corpus almost every group
-    # is a singleton, and joining those just to discard them in the
-    # doc_a < doc_b filter is a wasted corpus-sized join (review r13).
-    intra = (
+    # emit nothing — matching the sentinel semantics above, and the
+    # row-level path's NULL-jaccard filter for empty sets
+    tail = (
         mg.join(
             sets.select(F.col("doc").alias("__rep"), F.size("sh").alias("__n")),
             "__rep",
         )
         .filter(F.col("__n") > 0)
         .filter(F.lit(round(1.0, 4)) >= F.lit(threshold))
-        .select(F.explode("__ids").alias("doc_a"), "__ids", "__n")
-        .select("doc_a", F.explode("__ids").alias("doc_b"), "__n")
-        .filter(F.col("doc_a") < F.col("doc_b"))
         .select(
-            "doc_a",
-            "doc_b",
+            "__ids",
             F.col("__n").cast("int").alias("n_common"),
             F.lit(1.0).cast("double").alias("jaccard"),
         )
     )
-    return cross.unionByName(intra)
+    return _expand_groups(rep_pairs, mg, tail, "doc_a", "doc_b")
 
 
 def dup_clusters(
@@ -2017,25 +1870,13 @@ def simhash_near_pairs(
     """SimHash near-dup pairs: Hamming distance ≤ max_hamming over the
     60-bit fingerprints — pigeonhole banding (split into max_hamming+1
     chunks; any qualifying pair agrees exactly on ≥1 chunk) + exact
-    popcount verify, COMPLETE and cap-free, with the banded join running
-    over DISTINCT fingerprints only (the image-family rework of
-    :func:`hamming_near_pairs`, generalized to the text family):
-
-    1. ids group by identical fingerprint — exact-duplicate text shares
-       the fingerprint exactly, so Hamming-0 pairs expand WITHIN groups,
-       never through a join or a bucket;
-    2. chunk-equality banding + popcount runs over the distinct
-       fingerprints — bucket sizes track distinct-fp occupancy of the
-       15-bit chunk space, never duplicate multiplicity;
-    3. fingerprint pairs expand back through the two id lists.
-
-    The old row-level form pushed every duplicate COPY into its chunk
-    buckets: m identical docs made m-row buckets in all chunks (the m²
-    candidate blowup the r12 image probe measured), and past the
-    hot-bucket cap the whole group was silently DROPPED — zero pairs
-    exactly where duplicate mass is densest, on the corpus shape (a
-    duplicate-heavy crawl) this operator exists for.  The decomposition
-    is exact, and duplicate mass never needs a cap again.
+    popcount verify, COMPLETE and cap-free.  Exact-duplicate mass is
+    factored out first, by fingerprint, always in the full regime (see
+    :func:`_content_groups`): exact-duplicate text shares the fingerprint,
+    so Hamming-0 pairs expand WITHIN groups, never through a bucket, and
+    the chunk buckets track distinct-fp occupancy of the 15-bit chunk
+    space, never duplicate multiplicity.  Each band item carries its
+    group's rep id, which is what the expansion joins on.
 
     ``max_bucket_size`` (default None = complete): the DISTINCT-fp chunk
     buckets are still Ω(D²/2^15)-pair generators once distinct-fp count D
@@ -2045,13 +1886,7 @@ def simhash_near_pairs(
     hash-collision candidates (a dropped bucket holds many DIFFERENT
     contents colliding on one chunk), never exact-duplicate mass — the
     in-group expand is structurally cap-immune, which is exactly the
-    failure the old row-level cap had.
-
-    MEMORY UNIT (same as :func:`hamming_near_pairs`): the per-distinct-fp
-    id-list row — a fingerprint carrying ~10⁷ duplicate ids makes one
-    multi-GB aggregate row before the expand, at which point the m²/2
-    pair OUTPUT is absurd anyway; canonical selection should compose
-    ``dup_clusters`` + ``keep_best``, whose per-fp state is O(1)."""
+    failure the old row-level cap had."""
     n_chunks = max_hamming + 1
     chunk_bits = SIMHASH_BITS // n_chunks
     if max_bucket_size is None:
@@ -2075,63 +1910,33 @@ def simhash_near_pairs(
     # map-side numpy fingerprints (bit-identical to simhash(), pytested):
     # removes the 60-conditional-sum aggregation shuffle
     fps = simhash_fingerprints_mapinpandas(_spread(df), text_col, id_col)
-    # one id-list row per DISTINCT fingerprint; persisted — feeds the
-    # intra expand, the band rows, and both sides of the cross expansion,
-    # and its upstream is the per-doc tokenize+hash kernel
-    groups = track_persist(
-        fps.groupBy(F.col("simhash64").alias("__fp")).agg(
-            F.collect_list("doc_id").alias("__ids")
-        )
-    )
-    # Hamming-0: all pairs within an identical-fingerprint group
-    intra = (
-        groups.select(F.explode("__ids").alias("doc_a"), "__ids")
-        .select("doc_a", F.explode("__ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("hamming", F.lit(0).cast("int"))
-    )
+    reps, mg = _content_groups(fps, "simhash64", "doc_id", None)
     chunk_vals = F.array(
         *[
-            F.shiftrightunsigned(F.col("__fp"), c * chunk_bits).bitwiseAND(
+            F.shiftrightunsigned(F.col("simhash64"), c * chunk_bits).bitwiseAND(
                 F.lit((1 << chunk_bits) - 1)
             )
             for c in range(n_chunks)
         ]
     )
-    items = groups.select(
-        F.struct(F.col("__fp").alias("fp")).alias("item"),
+    items = reps.select(
+        F.struct(F.col("simhash64").alias("fp"), F.col("doc_id").alias("rep"))
+        .alias("item"),
         F.posexplode(chunk_vals).alias("band_id", "band_hash"),
     )
-    fp_pairs = (
+    rep_pairs = (
         banded_candidate_pairs(items, id_field="fp", max_bucket_size=max_bucket_size)
-        .select(F.col("a.fp").alias("fp_a"), F.col("b.fp").alias("fp_b"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("int"),
+        .select(
+            F.col("a.rep").alias("doc_a"),
+            F.col("b.rep").alias("doc_b"),
+            F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
+            .cast("int")
+            .alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
     )
-    cross = (
-        fp_pairs.join(
-            groups.select(F.col("__fp").alias("fp_a"), F.col("__ids").alias("__ids_a")),
-            "fp_a",
-        )
-        .join(
-            groups.select(F.col("__fp").alias("fp_b"), F.col("__ids").alias("__ids_b")),
-            "fp_b",
-        )
-        .select(F.explode("__ids_a").alias("__ia"), "__ids_b", "hamming")
-        .select("__ia", F.explode("__ids_b").alias("__ib"), "hamming")
-        .select(
-            F.least("__ia", "__ib").alias("doc_a"),
-            F.greatest("__ia", "__ib").alias("doc_b"),
-            "hamming",
-        )
-        # duplicate doc_id input (outside the contract) would surface as a
-        # self-pair here — keep the old a.id < b.id exclusion
-        .filter(F.col("doc_a") != F.col("doc_b"))
-    )
-    return intra.unionByName(cross)
+    tail = mg.select("__ids", F.lit(0).cast("int").alias("hamming"))
+    return _expand_groups(rep_pairs, mg, tail, "doc_a", "doc_b")
 
 
 def keep_best(
@@ -2249,14 +2054,16 @@ def _hamming_hash_pairs(
     n_bands: int,
     nbits: int,
 ) -> DataFrame:
-    """Banded-LSH + exact-verify core over DISTINCT bit strings (one
-    column ``__bits``): all (bits_a, bits_b, hamming) with 0 < hamming ≤
-    ``max_ham``, complete by pigeonhole for ``n_bands > max_ham``.
-    Shared by :func:`hamming_near_pairs` (which expands the hash pairs
-    back through id lists) and :func:`hamming_keep_best` (which clusters
-    the hash graph directly and never builds id lists).  Shuffle volume
-    is bounded by distinct-hash occupancy — duplicate mass never enters
-    the join.
+    """Banded-LSH + exact-verify core over DISTINCT bit strings (column
+    ``__bits``): all (bits_a, bits_b, hamming) with 0 < hamming ≤
+    ``max_ham``, complete by pigeonhole for ``n_bands > max_ham``.  Any
+    other column of ``distinct_bits`` rides along, suffixed ``_a`` /
+    ``_b`` by side (:func:`hamming_near_pairs` carries its groups' rep
+    ids that way).  Shared by :func:`hamming_near_pairs` (which expands
+    the hash pairs back through id lists) and :func:`hamming_keep_best`
+    (which clusters the hash graph directly and never builds id lists).
+    Shuffle volume is bounded by distinct-hash occupancy — duplicate mass
+    never enters the join.
 
     The ``nbits`` width is enforced HERE, on every caller's path: bands
     are substring positions and the packed ``bit_count(xor)`` verify
@@ -2291,11 +2098,20 @@ def _hamming_hash_pairs(
             for i in range(n_bands)
         ]
     )
-    e = distinct_bits.select(F.col("__bits"), F.explode(bands).alias("__b")).select(
-        F.col("__bits"), "__b.bi", "__b.bs"
+    cols = distinct_bits.columns
+    e = distinct_bits.select(*cols, F.explode(bands).alias("__b")).select(
+        *cols, "__b.bi", "__b.bs"
     )
-    a = e.select(F.col("__bits").alias("bits_a"), "bi", "bs")
-    b = e.select(F.col("__bits").alias("bits_b"), "bi", "bs")
+    carry = [c for c in cols if c != "__bits"]
+    a, b = (
+        e.select(
+            F.col("__bits").alias(f"bits_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            "bi",
+            "bs",
+        )
+        for s in "ab"
+    )
     # exact verify via packed 32-bit chunks: bit_count(xor) is a JVM
     # intrinsic per chunk — vs the old aggregate(zip_with(split(...)))
     # form, which built two nbits-element string arrays PER CANDIDATE
@@ -2321,7 +2137,7 @@ def _hamming_hash_pairs(
     return (
         a.join(b, ["bi", "bs"])
         .filter(F.col("bits_a") < F.col("bits_b"))
-        .select("bits_a", "bits_b")
+        .select("bits_a", "bits_b", *[f"{c}_{s}" for s in "ab" for c in carry])
         .distinct()  # a hash pair can share several bands
         .withColumn("hamming", ham.cast("long"))
         .filter(F.col("hamming") <= max_ham)
@@ -2350,30 +2166,19 @@ def hamming_near_pairs(
     near-dup image corpus is duplicate-heavy BY THE PROBLEM STATEMENT —
     re-encoded copies share a hash exactly — and the old row-level band
     join squared every repeated hash inside its band buckets: at 500 k
-    probe images it shuffled 16 GB and did not finish in 35 min.  The
-    decomposition is exact and cap-free:
-
-    1. group ids by identical hash (output-bounded: a group of m ids
-       emits its m·(m−1)/2 Hamming-0 pairs anyway, so the per-group list
-       is ≤ the result the caller asked for);
-    2. Hamming-0 pairs expand WITHIN groups — no join at all;
-    3. the banded join + exact verify runs over the distinct hashes
-       (D ≤ corpus, and duplicate-heavy corpora have D ≪ corpus), then
-       hash-pairs expand back through the two id lists.
-
-    Completeness is untouched (pigeonhole on distinct hashes; identical
-    hashes are case 2).  Bucket width = bits/n_bands; at billions of
-    DISTINCT hashes widen the hash (128-bit SimHash) or band count so
-    buckets stay fine-grained — distinct-hash occupancy, not pair
-    count, is the knob.
-
-    MEMORY UNIT: the per-distinct-hash group row — ``collect_list`` of
-    ids per identical hash — is unbounded in ids-per-hash: a single hash
-    carrying ~10⁷ duplicate ids makes one multi-GB aggregate row before
-    the expand (at which point the m²/2-pair OUTPUT is absurd anyway).
-    When the goal is canonical selection rather than the audit pair
-    table, use :func:`hamming_keep_best`, which never builds id lists —
-    its per-hash state is O(1) (count + best member) at any duplicate
+    probe images it shuffled 16 GB and did not finish in 35 min.  Ids
+    group by identical hash, always in the full regime of
+    :func:`_content_groups`: Hamming-0 pairs expand within groups, the
+    banded join + exact verify runs over the distinct hashes carrying
+    each group's rep id, and :func:`_expand_groups` turns those rep pairs
+    into id pairs.  Completeness is untouched (pigeonhole on distinct
+    hashes; identical hashes are the in-group pairs).  Bucket width =
+    bits/n_bands; at billions of DISTINCT hashes widen the hash (128-bit
+    SimHash) or band count so buckets stay fine-grained — distinct-hash
+    occupancy, not pair count, is the knob.  When the goal is canonical
+    selection rather than the audit pair table, use
+    :func:`hamming_keep_best`, which never builds id lists — its
+    per-hash state is O(1) (count + best member) at any duplicate
     multiplicity."""
     n_bands = int(n_bands or (max_ham + 1))
     if n_bands <= max_ham:
@@ -2397,61 +2202,22 @@ def hamming_near_pairs(
             ),
         ).otherwise(F.col(bits_col)),
     )
-    from stateful_spark_streaming_spark.caching import track_persist
-
-    # one id-list row per DISTINCT hash (NULL hashes pair with nothing,
-    # matching the old join-on-NULL-never-matches behavior).  PERSISTED:
-    # the groups frame feeds THREE consumers (intra expand + both sides
-    # of the hash-pair id expansion) and its upstream is typically an
-    # expensive decode/hash kernel (image_ahash re-decodes every blob) —
-    # the cache is distinct-hash-sized, bounded above by the input.
-    groups = track_persist(
-        hashed.filter(F.col(bits_col).isNotNull())
-        .groupBy(F.col(bits_col).alias("__bits"))
-        .agg(F.collect_list(F.col(id_col)).alias("__ids"))
+    # NULL hashes pair with nothing (a join on NULL never matches).  The
+    # grouping is persisted: its upstream is typically an expensive
+    # decode/hash kernel (image_ahash re-decodes every blob)
+    reps, mg = _content_groups(
+        hashed.filter(F.col(bits_col).isNotNull()), bits_col, id_col, None
     )
-
-    # Hamming-0: all pairs within an identical-hash group — pure expand
-    intra = (
-        groups.select(F.explode("__ids").alias("id_a"), "__ids")
-        .select("id_a", F.explode("__ids").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", F.lit(0).cast("long"))
-    )
-
-    # banded join over distinct hashes only
     hash_pairs = _hamming_hash_pairs(
-        groups.select("__bits"), max_ham=max_ham, n_bands=n_bands, nbits=nbits
+        reps.select(F.col(bits_col).alias("__bits"), F.col(id_col).alias("__rep")),
+        max_ham=max_ham,
+        n_bands=n_bands,
+        nbits=nbits,
+    ).select(
+        F.col("__rep_a").alias("id_a"), F.col("__rep_b").alias("id_b"), "hamming"
     )
-
-    # expand hash pairs back through the two id lists; order-normalize
-    # (ids from different hash groups carry no relative order)
-    cross = (
-        hash_pairs.join(
-            groups.select(
-                F.col("__bits").alias("bits_a"), F.col("__ids").alias("__ids_a")
-            ),
-            "bits_a",
-        )
-        .join(
-            groups.select(
-                F.col("__bits").alias("bits_b"), F.col("__ids").alias("__ids_b")
-            ),
-            "bits_b",
-        )
-        .select(F.explode("__ids_a").alias("__ia"), "__ids_b", "hamming")
-        .select("__ia", F.explode("__ids_b").alias("__ib"), "hamming")
-        .select(
-            F.least("__ia", "__ib").alias("id_a"),
-            F.greatest("__ia", "__ib").alias("id_b"),
-            "hamming",
-        )
-        # an id appearing under TWO hashes (duplicate-id input — outside
-        # the contract) would otherwise surface as a self-pair here; the
-        # old row-level join's id_a < id_b filter excluded it, keep that
-        .filter(F.col("id_a") != F.col("id_b"))
-    )
-    return intra.unionByName(cross)
+    tail = mg.select("__ids", F.lit(0).cast("long").alias("hamming"))
+    return _expand_groups(hash_pairs, mg, tail, "id_a", "id_b")
 
 
 def hamming_keep_best(

@@ -1395,7 +1395,6 @@ def cosine_near_pairs_lsh(
     max_bucket_size: int | None = 2000,
     target_bucket_rows: int = 8,
     recall_target: float = 0.9,
-    content_distinct: bool | None = None,
 ) -> DataFrame:
     """Random-hyperplane LSH: bucket = sign pattern of n_planes projections;
     pairs colliding in ≥1 of n_tables tables are verified exactly.
@@ -1436,21 +1435,15 @@ def cosine_near_pairs_lsh(
     pattern), pairs expanded within buckets — the projection subplan is
     never recomputed per table.
 
-    EXACT-DUPLICATE MASS IS FACTORED OUT FIRST (r13, the image/text
-    decomposition generalized to embeddings): byte-identical vectors —
-    the re-encodes a deterministic encoder emits for duplicate content —
-    share the sign pattern in EVERY table, so m copies made m-row
-    buckets in all n_tables (m² candidate mass, each candidate carrying
-    2·dim floats), and past ``max_bucket_size`` the whole group was
-    silently DROPPED: zero pairs exactly where duplicate mass is
-    densest, and no amount of ``n_planes`` depth can split an
-    identical-pattern bucket.  Ids now group by identical vector, the
-    LSH chain runs over one representative per distinct vector (plane
-    sizing included — bucket occupancy is DISTINCT-vector occupancy),
-    copies re-enter at output expansion, and identical-vector pairs are
-    verified by the SAME kernel on (v, v) — bit-exact rounding, and a
-    zero vector's NaN cosine drops it, as everywhere else.  MEMORY UNIT
-    (same as the text family): the per-distinct-vector id-list row.
+    Exact-duplicate mass is factored out first, by vector (see
+    :func:`~.dedup._content_groups`): byte-identical vectors — the
+    re-encodes a deterministic encoder emits for duplicate content —
+    share the sign pattern in EVERY table, and no ``n_planes`` depth can
+    split an identical-pattern bucket.  The LSH chain runs over one
+    representative per distinct vector, plane sizing included (bucket
+    occupancy is DISTINCT-vector occupancy).  One aggregate decides the
+    regime — duplicate-free (no grouping) or full — and its row count
+    sizes the planes on the duplicate-free path.
 
     VERIFY-IN-BUCKET (r11): each item carries its vector THROUGH the
     bucket shuffle, and the within-bucket pair expansion feeds the exact
@@ -1469,51 +1462,33 @@ def cosine_near_pairs_lsh(
     import numpy as np
     from pyspark.sql.types import ArrayType, LongType
 
-    from stateful_spark_streaming_spark.operators.dedup import banded_candidate_pairs
+    from stateful_spark_streaming_spark.operators.dedup import (
+        _content_groups,
+        _expand_groups,
+        _id_typed_schema,
+        banded_candidate_pairs,
+    )
 
-    from stateful_spark_streaming_spark.caching import track_persist
-
-    # content_distinct follows the pair-generator family contract
-    # (dedup.jaccard_pairs): None (default) self-decides with dedup's
-    # one-aggregate _all_distinct probe — byte-identical re-encodes are
-    # what the grouping exists for, and a duplicate-free embedding table
-    # (also a real shape) skips the grouping shuffle, the persist and
-    # both expansion stages, which are provably the identity there.  The
-    # probe's exact total count doubles as the plane-sizing count, so
-    # the distinct path spends NO extra action on sizing.
-    n_vecs = None
-    if content_distinct is None:
-        row = embeddings.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.xxhash64(F.col(vec_col))).alias("d"),
-        ).first()
-        content_distinct = int(row["n"]) == int(row["d"])
-        if content_distinct:
-            n_vecs = int(row["n"])
-    if content_distinct:
-        groups = None
-        reps = embeddings.select(F.col(id_col), F.col(vec_col))
-    else:
-        # one id-list row per DISTINCT vector (r13 decomposition, see
-        # docstring); persisted — feeds plane sizing, the rep pipeline, the
-        # pair expansion (both sides) and the identical-vector tail
-        groups = track_persist(
-            embeddings.groupBy(F.col(vec_col)).agg(
-                F.min(F.col(id_col)).alias("__rep"),
-                F.collect_list(F.col(id_col)).alias("__ids"),
-            )
-        )
-        reps = groups.select(F.col("__rep").alias(id_col), F.col(vec_col))
+    # the count doubles as the plane-sizing count on the duplicate-free
+    # path; a hash collision between different vectors only picks the full
+    # grouping, which separates them by the real vector
+    row = embeddings.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_distinct(F.xxhash64(F.col(vec_col))).alias("d"),
+    ).first()
+    distinct = int(row["n"]) == int(row["d"])
+    reps, mg = _content_groups(
+        embeddings, vec_col, id_col, [] if distinct else None
+    )
     if n_planes is None:
         # One count() sizes the hash depth to DISTINCT-vector occupancy
         # (what actually fills buckets) — a pinned depth is the measured
         # silent zero-recall config at 100× (SCALE.md, ann_probe
-        # srp_demo).  The count materializes the persisted groups frame,
-        # which the pipeline needs anyway; callers who must avoid that
-        # eager step pass an explicit n_planes.  On the distinct path the
-        # probe's exact row count IS the distinct-vector count.
+        # srp_demo).  On the full path the count materializes the
+        # persisted grouping, which the pipeline needs anyway; callers who
+        # must avoid that eager step pass an explicit n_planes.
         n_planes = srp_plane_count(
-            n_vecs if n_vecs is not None else reps.count(), target_bucket_rows
+            int(row["n"]) if distinct else reps.count(), target_bucket_rows
         )
     if n_tables is None:
         # Recall is stated at the similarity of the DUPLICATES being
@@ -1574,7 +1549,9 @@ def cosine_near_pairs_lsh(
                 }
             )
 
-    verified = cands.mapInPandas(verify, "id_a long, id_b long, raw_cos double")
+    verified = cands.mapInPandas(
+        verify, _id_typed_schema(embeddings, id_col, ("id_a", "id_b"), "raw_cos double")
+    )
     rep_pairs = (
         verified.withColumn("cosine", F.round("raw_cos", 6))
         .filter(F.col("cosine") >= threshold)
@@ -1583,59 +1560,30 @@ def cosine_near_pairs_lsh(
         .dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", "cosine")
     )
-    if content_distinct:
-        # singleton groups: expansion is the identity, the intra tail empty
+    if mg is None:
         return rep_pairs
-    # expand rep pairs back through both id lists (copies ARE the reps'
-    # vectors, so the verified cosine carries verbatim)
-    cross = (
-        rep_pairs.join(
-            groups.select(
-                F.col("__rep").alias("id_a"), F.col("__ids").alias("__ids_a")
-            ),
-            "id_a",
-        )
-        .join(
-            groups.select(
-                F.col("__rep").alias("id_b"), F.col("__ids").alias("__ids_b")
-            ),
-            "id_b",
-        )
-        .select(F.explode("__ids_a").alias("__ia"), "__ids_b", "cosine")
-        .select("__ia", F.explode("__ids_b").alias("__ib"), "cosine")
-        .select(
-            F.least("__ia", "__ib").alias("id_a"),
-            F.greatest("__ia", "__ib").alias("id_b"),
-            "cosine",
-        )
-        .filter(F.col("id_a") != F.col("id_b"))
-    )
     # identical-vector pairs: self-cosine rounds to exactly 1.0 by
     # construction (|1 − dot/(√dot·√dot)| ≲ a few ulp ≪ the 6-dp
     # rounding), so no second Python verify tier is spent on it — each
     # chained mapInPandas stage costs its own worker tier (measured
     # elsewhere in this repo), and the JVM-side norm guard reproduces
     # the kernel's zero-vector/NaN drop (0-norm or NaN dot² → no row).
-    # The isnan() leg is load-bearing (ADVICE r13): under Spark SQL
-    # NaN-ordering semantics NaN > 0 is TRUE, so without it a duplicated
-    # vector CONTAINING a NaN component would pass the guard and emit
-    # fabricated cosine-1.0 intra pairs while the numpy verify kernel
-    # (cos >= τ is False for NaN) drops the same content on the rep path.
+    # The isnan() leg is load-bearing: under Spark SQL NaN-ordering
+    # semantics NaN > 0 is TRUE, so without it a duplicated vector
+    # CONTAINING a NaN component would pass the guard and emit fabricated
+    # cosine-1.0 in-group pairs while the numpy verify kernel (cos >= τ is
+    # False for NaN) drops the same content on the rep path.
     norm2 = F.aggregate(
-        F.zip_with(F.col(vec_col), F.col(vec_col), lambda x, y: x * y),
+        F.zip_with(F.col("__content"), F.col("__content"), lambda x, y: x * y),
         F.lit(0.0).cast("double"),
         lambda acc, v: acc + v,
     )
-    intra = (
-        groups.filter(F.size("__ids") >= 2)
-        .filter((~F.isnan(norm2)) & (norm2 > 0))
+    tail = (
+        mg.filter((~F.isnan(norm2)) & (norm2 > 0))
         .filter(F.lit(1.0) >= F.lit(float(threshold)))
-        .select(F.explode("__ids").alias("id_a"), "__ids")
-        .select("id_a", F.explode("__ids").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(1.0).cast("double").alias("cosine"))
+        .select("__ids", F.lit(1.0).cast("double").alias("cosine"))
     )
-    return cross.unionByName(intra)
+    return _expand_groups(rep_pairs, mg, tail, "id_a", "id_b")
 
 
 def hard_negatives(

@@ -1161,3 +1161,17 @@ def test_srp_heavy_duplicate_group_is_complete(spark):
     assert scaled.count() == m, "the scaled copy pairs with every copy"
     assert out.filter("id_a > %d or id_b > %d" % (m, m)).count() == 0
     assert out.filter("cosine < 0.999999").count() == 0
+
+
+def test_srp_duplicated_nan_vector_emits_no_in_group_pair(spark):
+    """The in-group tail's norm guard must drop a duplicated vector that
+    carries a NaN component, as the verify kernel drops its rep pairs:
+    NaN > 0 is TRUE under Spark SQL ordering, so a guard without its
+    isnan() leg would fabricate a cosine-1.0 pair (3, 4)."""
+    v = [1.0, 2.0, -0.5, 3.0]
+    w = [0.5, float("nan"), 1.0, -2.0]
+    emb = spark.createDataFrame(
+        [(1, v), (2, v), (3, w), (4, w)], "vec_id long, embedding array<double>"
+    )
+    out = SIM.cosine_near_pairs_lsh(emb, threshold=0.9, n_tables=2)
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 2, 1.0)]

@@ -212,6 +212,9 @@ def test_console_sink_prints_table(spark, workdir, capfd):
     try:
         _wait_counts(h, {f: 1 for f in FLIGHTS},
                      "select flightId, track_count from Flights")
+        # the sink prints its table AFTER the append _wait_counts sees;
+        # processAllAvailable returns only once foreachBatch has returned
+        h.query.processAllAvailable()
     finally:
         h.stop()
     out = capfd.readouterr().out

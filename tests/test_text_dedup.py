@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import Row
 
 from stateful_spark_streaming_spark.operators import dedup as DD
+from stateful_spark_streaming_spark.operators import similarity as SIM
 from stateful_spark_streaming_spark.operators import text as TXT
 
 
@@ -763,6 +764,79 @@ def test_kernels_accept_string_doc_ids(spark):
     assert {type(r.doc_id) for r in bands} == {str}
 
 
+_BASE = " ".join(f"w{i}" for i in range(20))
+_BITS = "".join("01"[(i * 7 + i // 3) % 2] for i in range(64))
+
+
+def _flip(bits, positions):
+    return "".join(
+        "10"[int(c)] if i in positions else c for i, c in enumerate(bits)
+    )
+
+
+#: per operator: input rows for ids u/1..u/5 (u/1-u/3 identical, u/4 a
+#: near copy of them, u/5 unrelated), the call, and its id columns
+_DUP_MASS_CASES = {
+    "jaccard_pairs": (
+        [_BASE] * 3 + [_BASE + " extra", "a different page entirely " * 4],
+        lambda df: DD.jaccard_pairs(df, threshold=0.6),
+        ("doc_a", "doc_b"),
+    ),
+    "containment_pairs": (
+        [_BASE] * 3 + [_BASE + " extra", "a different page entirely " * 4],
+        lambda df: DD.containment_pairs(df, threshold=0.9),
+        ("doc_a", "doc_b"),
+    ),
+    "minhash_lsh_pairs": (
+        [_BASE] * 3 + [_BASE + " extra", "a different page entirely " * 4],
+        lambda df: DD.minhash_lsh_pairs(df, threshold=0.6),
+        ("doc_a", "doc_b"),
+    ),
+    "simhash_near_pairs": (
+        [_BASE] * 3 + [_BASE + " w3", "a different page entirely " * 4],
+        lambda df: DD.simhash_near_pairs(df, max_hamming=8),
+        ("doc_a", "doc_b"),
+    ),
+    "hamming_near_pairs": (
+        [_BITS] * 3 + [_flip(_BITS, {3, 40}), _flip(_BITS, set(range(0, 64, 2)))],
+        lambda df: DD.hamming_near_pairs(df, "doc_id", "text", max_ham=4),
+        ("id_a", "id_b"),
+    ),
+    "cosine_near_pairs_lsh": (
+        [[1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0]] * 3
+        + [[1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.1],
+           [8.0, -7.0, 6.0, -5.0, 4.0, -3.0, 2.0, -1.0]],
+        lambda df: SIM.cosine_near_pairs_lsh(
+            df, threshold=0.9, id_col="doc_id", vec_col="text"
+        ),
+        ("id_a", "id_b"),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_DUP_MASS_CASES))
+def test_string_ids_through_the_duplicate_decomposition(spark, op):
+    """Every pair generator expands its representative pairs back to
+    member pairs: the 3-copy group's in-group pairs plus each copy with
+    the near copy, nothing with the unrelated row — and the id columns
+    keep the input's string type through the grouping, the pair search
+    and the expansion (a long-typed kernel schema fails on 'u/1')."""
+    from pyspark.sql.types import StringType
+
+    contents, call, (a, b) = _DUP_MASS_CASES[op]
+    df = spark.createDataFrame(
+        [(f"u/{i}", c) for i, c in enumerate(contents, 1)], ["doc_id", "text"]
+    )
+    out = call(df)
+    assert out.schema[a].dataType == StringType()
+    assert out.schema[b].dataType == StringType()
+    got = sorted((r[a], r[b]) for r in out.collect())
+    assert got == [
+        ("u/1", "u/2"), ("u/1", "u/3"), ("u/1", "u/4"),
+        ("u/2", "u/3"), ("u/2", "u/4"), ("u/3", "u/4"),
+    ]
+
+
 def test_tokens_col_paths_bit_identical(spark, sf_dir):
     """Every operator that accepts a pre-tokenized ``tokens_col`` must
     produce BIT-IDENTICAL results to its text path — the tokenize-once
@@ -1057,11 +1131,9 @@ def test_three_regime_decomposition_identical_output(spark, monkeypatch):
     plans — duplicate-free skip, nearly-distinct HYBRID (group only the
     duplicated rows via literal hash filters), and the full r13 content
     grouping — and all three must emit byte-identical pairs.  The
-    corpus has duplicate mass (hybrid fires by default), the full plan
-    is pinned via ``content_distinct=False``, and the probe's
-    over-cap fallback (``_dup_content_hashes`` → None) is forced by
-    shrinking ``_HYBRID_DUP_CAP`` to 0 so the None branch is the one
-    exercised end to end, not just the pinned bool."""
+    corpus has duplicate mass (hybrid fires by default), and the full
+    plan is the probe's over-cap fallback (``_dup_content_hashes`` →
+    None), forced by shrinking ``_HYBRID_DUP_CAP`` to 0."""
     rows = [
         (1, "alpha beta gamma delta epsilon zeta eta theta"),
         (2, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -1079,13 +1151,11 @@ def test_three_regime_decomposition_identical_output(spark, monkeypatch):
         (DD.minhash_lsh_pairs, {"threshold": 0.5}),
     ):
         hybrid = _sorted_rows(fn(docs, **kw))
-        full = _sorted_rows(fn(docs, content_distinct=False, **kw))
-        assert hybrid == full, f"{fn.__name__}: hybrid != full"
         assert hybrid, f"{fn.__name__}: duplicate corpus must emit pairs"
         monkeypatch.setattr(DD, "_HYBRID_DUP_CAP", 0)
-        over_cap = _sorted_rows(fn(docs, **kw))
+        full = _sorted_rows(fn(docs, **kw))
         monkeypatch.undo()
-        assert over_cap == full, f"{fn.__name__}: over-cap probe != full"
+        assert hybrid == full, f"{fn.__name__}: hybrid != full"
 
 
 def test_probe_regimes_and_collision_safety(spark, monkeypatch):
